@@ -3,7 +3,7 @@ the reference's de-facto correctness artifact
 (kg_scripts/biomedical_kg_metrics.py:165-261; golden snapshot at
 kg_scripts/neo4j_schema_outputs/biomedical_kg_metrics.json).
 
-One pass of groupBy queries over the node/edge tables → one JSON-able dict.
+Two passes of groupBy queries over the node/edge tables → one JSON-able dict.
 Every aggregate is exact (the thresholds in the pipeline depend on exact
 counts); at 10¹² scale the lineage counters could switch to
 approx_count_distinct, but the golden report stays exact by contract.
@@ -11,80 +11,37 @@ approx_count_distinct, but the golden report stays exact by contract.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def node_metrics(nodes: DataFrame, type_col: str = "entity_type") -> dict:
-    """Node counts by label (biomedical_kg_metrics.py:35-60)."""
-    by_type = {
-        r[type_col]: r["n"]
-        for r in nodes.groupBy(type_col).agg(F.count("*").alias("n")).collect()
-    }
-    return {"total_nodes": sum(by_type.values()), "nodes_by_type": by_type}
-
-
-def edge_metrics(edges: DataFrame, pred_col: str = "pred") -> dict:
-    """Relationship counts by type (biomedical_kg_metrics.py:62-78)."""
-    by_pred = {
-        r[pred_col]: r["n"]
-        for r in edges.groupBy(pred_col).agg(F.count("*").alias("n")).collect()
-    }
-    return {"total_edges": sum(by_pred.values()), "edges_by_type": by_pred}
-
-
-def _endpoints(edges: DataFrame, subj_col: str, obj_col: str) -> DataFrame:
-    return edges.select(F.col(subj_col).alias("node")).unionByName(
-        edges.select(F.col(obj_col).alias("node"))
-    )
-
-
-def _degree(edges: DataFrame, subj_col: str, obj_col: str) -> DataFrame:
-    return (
-        _endpoints(edges, subj_col, obj_col)
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-
-
-def connectivity_metrics(
-    edges: DataFrame, subj_col: str = "subj", obj_col: str = "obj"
-) -> dict:
-    """Degree stats (biomedical_kg_metrics.py:80-118): avg/max degree over
-    the undirected endpoint multiset, plus orphan-free node count."""
-    deg = _degree(edges, subj_col, obj_col)
-    row = deg.agg(
-        F.count("*").alias("connected_nodes"),
-        F.avg("degree").alias("avg_degree"),
-        F.max("degree").alias("max_degree"),
-    ).collect()[0]
-    return {
-        "connected_nodes": row["connected_nodes"],
-        "avg_degree": round(row["avg_degree"], 4) if row["avg_degree"] else 0.0,
-        "max_degree": row["max_degree"],
-    }
-
-
-def quality_metrics(
+def _per_id(
     nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "entity_id",
-    subj_col: str = "subj",
-    obj_col: str = "obj",
-) -> dict:
-    """Quality indicators (biomedical_kg_metrics.py:120-163): orphan nodes
-    (no edges), dangling endpoints (edge references a missing node)."""
-    endpoints = (
-        _endpoints(edges, subj_col, obj_col)
-        .withColumnRenamed("node", id_col)
-        .distinct()
+    triples: DataFrame,
+    id_col: str,
+    subj_col: str,
+    obj_col: str,
+) -> DataFrame:
+    """One row per id of the tagged union of the edge-endpoint multiset
+    (single triples scan via ``explode(array(subj, obj))``) and the node
+    ids, after one shuffle on the id: ``deg`` = endpoint occurrences,
+    ``is_node`` = 1 when a node row carries the id. Degree, orphan and
+    dangling aggregates all fall out of these pairs."""
+    tagged = (
+        triples.select(
+            F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias(id_col)
+        )
+        .withColumn("_is_node", F.lit(0))
+        .unionByName(
+            nodes.select(F.col(id_col)).withColumn("_is_node", F.lit(1))
+        )
     )
-    orphans = nodes.select(id_col).distinct().join(endpoints, id_col, "left_anti")
-    dangling = endpoints.join(nodes.select(id_col).distinct(), id_col, "left_anti")
-    return {
-        "orphan_nodes": orphans.count(),
-        "dangling_endpoints": dangling.count(),
-    }
+    return tagged.groupBy(id_col).agg(
+        F.sum(F.lit(1) - F.col("_is_node")).alias("deg"),
+        F.max("_is_node").alias("is_node"),
+    )
 
 
 def evidence_flag_matrix(
@@ -169,19 +126,7 @@ def metrics_summary_df(
     Contract: ids are assumed non-NULL (a NULL subj/obj and a NULL node id
     would group together here, where the old anti-join kept them apart —
     this engine never emits NULL entity ids)."""
-    tagged = (
-        triples.select(
-            F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias(id_col)
-        )
-        .withColumn("_is_node", F.lit(0))
-        .unionByName(
-            nodes.select(F.col(id_col)).withColumn("_is_node", F.lit(1))
-        )
-    )
-    per_id = tagged.groupBy(id_col).agg(
-        F.sum(F.lit(1) - F.col("_is_node")).alias("deg"),
-        F.max("_is_node").alias("is_node"),
-    )
+    per_id = _per_id(nodes, triples, id_col, subj_col, obj_col)
     node_part = per_id.agg(
         F.sum("is_node").cast("double").alias("total_nodes"),
         F.count(F.when(F.col("deg") > 0, 1)).cast("double").alias(
@@ -224,20 +169,75 @@ def metrics_summary_df(
 
 
 def collect_all_metrics(nodes: DataFrame, triples: DataFrame) -> dict:
-    """The full golden report (biomedical_kg_metrics.py:165-177 analogue)."""
-    report = {}
-    report.update(node_metrics(nodes))
-    report.update(edge_metrics(triples))
-    report.update(connectivity_metrics(triples))
-    report.update(
-        quality_metrics(nodes, triples)
+    """The full golden report (biomedical_kg_metrics.py:35-177 analogue):
+    node counts by label, relationship counts by type and by confidence
+    tier, degree stats over the undirected endpoint multiset, orphan nodes
+    (no edges) and dangling endpoints (edge references a missing node).
+
+    Two actions, the ``metrics_summary_df`` shape:
+
+    1. the per-id tagged union (``_per_id``) folded into one row;
+    2. the node by-type and edge by-(pred, tier) group-bys as one tagged
+       union; every label/type/tier count and both totals are driver-side
+       sums of its rows.
+
+    A NULL id keeps anti-join semantics: a NULL node id is an orphan and
+    a NULL endpoint is dangling (NULL never matches a key), on top of
+    counting as one connected id when it is an endpoint."""
+    deg, is_node = F.col("deg"), F.col("is_node")
+    is_null = F.col("entity_id").isNull()
+    ids = _per_id(nodes, triples, "entity_id", "subj", "obj").agg(
+        F.count(F.when(deg > 0, 1)).alias("connected_nodes"),
+        F.sum(deg).alias("deg_sum"),
+        F.max(F.when(deg > 0, deg)).alias("max_degree"),
+        F.count(F.when((is_node == 1) & ((deg == 0) | is_null), 1)).alias(
+            "orphan_nodes"
+        ),
+        F.count(F.when((deg > 0) & ((is_node == 0) | is_null), 1)).alias(
+            "dangling_endpoints"
+        ),
+    ).collect()[0]
+
+    # the absent side's key columns are typed NULLs, so every key keeps
+    # its own column's type in the union
+    def null_of(df: DataFrame, col: str):
+        return F.lit(None).cast(df.schema[col].dataType).alias(col)
+
+    by_type = nodes.groupBy("entity_type").count().select(
+        F.lit(True).alias("is_node"),
+        "entity_type",
+        null_of(triples, "pred"),
+        null_of(triples, "confidence"),
+        "count",
     )
-    by_conf = {
-        r["confidence"]: r["n"]
-        for r in triples.groupBy("confidence").agg(F.count("*").alias("n")).collect()
+    by_pred_tier = triples.groupBy("pred", "confidence").count().select(
+        F.lit(False).alias("is_node"),
+        null_of(nodes, "entity_type"),
+        "pred",
+        "confidence",
+        "count",
+    )
+    nodes_by_type, edges_by_type, edges_by_conf = {}, Counter(), Counter()
+    for r in by_type.unionByName(by_pred_tier).collect():
+        if r["is_node"]:
+            nodes_by_type[r["entity_type"]] = r["count"]
+        else:
+            edges_by_type[r["pred"]] += r["count"]
+            edges_by_conf[r["confidence"]] += r["count"]
+
+    connected = ids["connected_nodes"]
+    return {
+        "total_nodes": sum(nodes_by_type.values()),
+        "nodes_by_type": nodes_by_type,
+        "total_edges": sum(edges_by_type.values()),
+        "edges_by_type": dict(edges_by_type),
+        "connected_nodes": connected,
+        "avg_degree": round(ids["deg_sum"] / connected, 4) if connected else 0.0,
+        "max_degree": ids["max_degree"],
+        "orphan_nodes": ids["orphan_nodes"],
+        "dangling_endpoints": ids["dangling_endpoints"],
+        "edges_by_confidence": dict(edges_by_conf),
     }
-    report["edges_by_confidence"] = by_conf
-    return report
 
 
 def format_report(report: dict) -> str:

@@ -21,6 +21,25 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_memory() -> str:
+    """Half of the host's ``MemTotal``, capped at 64g.
+
+    Local mode is driver-only: the heap must hold every concurrent task's
+    agg/join state (16g thrashed GC at 32 threads on wide hash aggregates,
+    a measured 4x slowdown), but the JVM, the Python workers and the page
+    cache share the host — a fixed 64g heap got the JVM OOM-killed on a
+    15 GiB host. Without ``/proc/meminfo`` (non-Linux) the default is 4g."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048
+                    return f"{max(1024, min(half_mb, 64 * 1024))}m"
+    except (OSError, ValueError):
+        pass
+    return "4g"
+
+
 def _builder(
     app_name: str,
     master: str | None,
@@ -54,11 +73,10 @@ def _builder(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode = driver-only: the heap must hold every concurrent
-        # task's agg/join state. 16g thrashes GC at 32 threads on wide
-        # hash aggregates (measured 4x slowdown); 64g is comfortable on
-        # the 128 GiB harness box.
-        .config("spark.driver.memory", os.environ.get("BKG_DRIVER_MEM", "64g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("BKG_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

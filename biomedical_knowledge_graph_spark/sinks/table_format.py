@@ -37,6 +37,17 @@ Scale design (round-3 hardening, VERDICT r2 items 1/3):
   ``rewrite_data_files`` maintenance analogue); ``compact_after`` runs it
   automatically once the snapshot count exceeds a bound, keeping file
   count and manifest size O(1) for long-lived tables.
+- One writer per partition per commit: ``_write_snapshot`` (the only
+  data-file write path) rebalances on the table's partition columns
+  before the ``partitionBy`` write, so each ``(snapshot, partition)`` is
+  one file, the clustered file set Iceberg ``MERGE INTO`` writes. Writing
+  straight off a 32-task stage put a file per task in every bucket: one
+  ``full_build_job`` pass over a 1 500-term ontology (4-core host, 32
+  shuffle partitions) left 1 016 files for 6 176 triples and 481 for
+  1 455 nodes; it now leaves 32 and 16. ``rebalance`` rather than
+  ``repartition``: AQE still splits an oversized partition at
+  ``advisoryPartitionSizeInBytes``, so a cluster-scale commit is not
+  capped at one task per bucket.
 """
 
 from __future__ import annotations
@@ -272,34 +283,35 @@ class SnapshotTable:
                     existing.select(self.key_cols), self.key_cols, "left_anti"
                 ).persist()
                 pinned.append(staged)
-            added = staged.count()
             snap = self._head() + 1
             partition_counts: list[dict] | None = None
+            if part_cols:
+                # per-partition counters in the lineage row (north_rule:
+                # "every partition emits lineage rows + counters"); reads
+                # the persisted stage, so this is one cheap aggregate whose
+                # sum is rows_added — no separate count() action. The
+                # limit is applied BEFORE collect so a pathological
+                # partition count bounds driver memory, not just the
+                # manifest size — the rows_added total is always exact.
+                counts = (
+                    staged.groupBy(*part_cols)
+                    .count()
+                    .orderBy(*part_cols)
+                    .limit(10_001)
+                ).collect()
+                if len(counts) <= 10_000:
+                    added = sum(r["count"] for r in counts)
+                    partition_counts = [
+                        {**{c: r[c] for c in part_cols}, "rows": r["count"]}
+                        for r in counts
+                    ] or None
+                else:  # pragma: no cover - bounded-manifest guard
+                    added = staged.count()
+                    partition_counts = [{"partitions": "10000+", "rows": added}]
+            else:
+                added = staged.count()
             if added:
-                writer = staged.withColumn("_snap", F.lit(snap))
-                if part_cols:
-                    # per-partition counters in the lineage row (north_rule:
-                    # "every partition emits lineage rows + counters"); reads
-                    # the persisted stage, so this is one cheap aggregate. The
-                    # limit is applied BEFORE collect so a pathological
-                    # partition count bounds driver memory, not just the
-                    # manifest size — the rows_added total is always exact.
-                    counts = (
-                        staged.groupBy(*part_cols)
-                        .count()
-                        .orderBy(*part_cols)
-                        .limit(10_001)
-                    ).collect()
-                    if len(counts) <= 10_000:
-                        partition_counts = [
-                            {**{c: r[c] for c in part_cols}, "rows": r["count"]}
-                            for r in counts
-                        ]
-                    else:  # pragma: no cover - bounded-manifest guard
-                        partition_counts = [
-                            {"partitions": "10000+", "rows": added}
-                        ]
-                self._write_snapshot(writer, snap, ["_snap"] + part_cols)
+                self._write_snapshot(staged, snap, part_cols)
         finally:
             for p in pinned:
                 p.unpersist()
@@ -323,17 +335,28 @@ class SnapshotTable:
         return lineage
 
     def _write_snapshot(
-        self, writer: DataFrame, snap: int, part_cols: list[str]
+        self, df: DataFrame, snap: int, part_cols: list[str]
     ) -> None:
-        """Write one snapshot dir. ``mode("append")`` on the shared data
+        """Write ``df`` as snapshot ``snap``, hive-partitioned by
+        ``_snap`` then ``part_cols``. ``mode("append")`` on the shared data
         root only touches ``_snap=<snap>``; a crash-leftover dir for this
         (by construction uncommitted) snapshot is removed first so retries
-        never double-write."""
+        never double-write.
+
+        The rebalance on ``part_cols`` writes one file per ``(snapshot,
+        partition)`` (module docstring, "Scale design"). Spark resolves the
+        hint only under AQE; where AQE is off (a streaming micro-batch's
+        session) it logs "Unrecognized hint" and the write keeps the
+        upstream partitioning, one file per task per partition."""
         target = self._snap_dir(snap)
         if os.path.exists(target):  # pragma: no cover - crash leftover
             shutil.rmtree(target)
-        writer.write.mode("append").partitionBy(*part_cols).parquet(
-            self._data_dir()
+        (
+            df.hint("rebalance", *part_cols)
+            .withColumn("_snap", F.lit(snap))
+            .write.mode("append")
+            .partitionBy("_snap", *part_cols)
+            .parquet(self._data_dir())
         )
 
     def _commit(self, snap: int, files: list[str], lineage: dict) -> None:
@@ -381,9 +404,7 @@ class SnapshotTable:
             part_cols.append("_bucket")
         snap = self._head() + 1
         rows = df.count()
-        self._write_snapshot(
-            df.withColumn("_snap", F.lit(snap)), snap, ["_snap"] + part_cols
-        )
+        self._write_snapshot(df, snap, part_cols)
         lineage = {
             "snapshot": snap,
             "run_id": run_id or uuid.uuid4().hex,
@@ -543,11 +564,7 @@ class AggregatingSnapshotTable(SnapshotTable):
             added = staged.count()
             snap = self._head() + 1
             if added:
-                self._write_snapshot(
-                    staged.withColumn("_snap", F.lit(snap)),
-                    snap,
-                    ["_snap"] + part_cols,
-                )
+                self._write_snapshot(staged, snap, part_cols)
         finally:
             staged.unpersist()
         lineage = {
@@ -595,11 +612,7 @@ class AggregatingSnapshotTable(SnapshotTable):
         snap = self._head() + 1
         rows = merged.persist().count()
         try:
-            self._write_snapshot(
-                merged.withColumn("_snap", F.lit(snap)),
-                snap,
-                ["_snap"] + part_cols,
-            )
+            self._write_snapshot(merged, snap, part_cols)
         finally:
             merged.unpersist()
         lineage = {

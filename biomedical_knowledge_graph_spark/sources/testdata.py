@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,20 +29,42 @@ TABLES = (
 )
 
 
+_SIZE_SUFFIX = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _parse_bytes(raw: str) -> int | None:
+    """A Spark byte-size conf value (``134217728``, ``128m``, ``1g``,
+    ``64kb``) in bytes; None when it does not parse."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", str(raw).strip().lower())
+    return int(m[1]) << _SIZE_SUFFIX[m[2]] if m else None
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _estimated_scan_splits(spark: SparkSession, path: str) -> int | None:
     """How many input splits a parquet scan of ``path`` will roughly get:
-    max(file count, total bytes / maxPartitionBytes). Local filesystem
-    only — any other scheme returns None (caller must assume the scan
-    parallelizes naturally, which at cluster scale it does)."""
+    max(file count, total bytes / maxPartitionBytes). A directory's data
+    files are summed recursively, so hive-partitioned tables count every
+    file under their ``col=value`` subdirs. Local filesystem only — any
+    other scheme, or an unparsable ``maxPartitionBytes``, returns None
+    (caller must assume the scan parallelizes naturally, which at cluster
+    scale it does)."""
     try:
         if os.path.isfile(path):
             sizes = [os.path.getsize(path)]
         elif os.path.isdir(path):
-            sizes = [
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if not f.startswith(("_", "."))
-            ]
+            sizes = []
+            for d, subdirs, files in os.walk(path):
+                # Spark's hidden-path rule: skip _/. names, but keep
+                # hive partition dirs (``_snap=1`` holds data)
+                subdirs[:] = [s for s in subdirs if not _hidden(s)]
+                sizes += [
+                    os.path.getsize(os.path.join(d, f))
+                    for f in files
+                    if not _hidden(f)
+                ]
         else:
             return None
     except OSError:
@@ -49,7 +72,9 @@ def _estimated_scan_splits(spark: SparkSession, path: str) -> int | None:
     if not sizes:
         return None
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    max_pb = int(str(raw).lower().rstrip("b")) or 1
+    max_pb = _parse_bytes(raw)
+    if not max_pb:
+        return None
     return max(len(sizes), math.ceil(sum(sizes) / max_pb))
 
 

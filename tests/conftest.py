@@ -9,7 +9,6 @@ from biomedical_knowledge_graph_spark.session import get_spark
 def spark():
     s = get_spark(
         app_name="bkg-tests",
-        master="local[8]",
         shuffle_partitions=8,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024)},
     )

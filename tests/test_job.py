@@ -240,3 +240,46 @@ def test_alias_dim_obsolete_without_replaced_by(spark, tmp_path):
     assert rows["gone alias"].replaced_by is None
     assert rows["gone with successor"].replaced_by == "X:3"
     assert rows["live term"].replaced_by is None
+
+
+def test_full_build_job_writes_one_file_per_bucket(spark, tmp_path):
+    """File-count regression gate: one ``full_build_job.run`` over a
+    400-term ontology leaves at most 16 parquet files (one per
+    ``_bucket``) in every ``_snap`` dir of both tables. Writing straight
+    off the upstream stage put a file per task in every bucket: 120 files
+    in one triples snapshot at 8 shuffle partitions."""
+    import glob
+
+    from biomedical_knowledge_graph_spark.jobs import full_build_job as J
+
+    lines = ["format-version: 1.2", ""]
+    for i in range(400):
+        lines += [
+            "[Term]",
+            f"id: T:{i}",
+            f"name: term{i} process",
+            "namespace: biological_process",
+        ]
+        if i:
+            lines.append(f"is_a: T:{(i - 1) // 2} ! parent")
+        lines.append("")
+    obo = tmp_path / "go.obo"
+    obo.write_text("\n".join(lines))
+    pages_path = str(tmp_path / "pages")
+    rows = [
+        (
+            f"u{i}",
+            f"<html><body>term{i} process binds term{i + 1} process"
+            "</body></html>".encode(),
+        )
+        for i in range(60)
+    ]
+    spark.createDataFrame(rows, "url string, html binary").write.parquet(pages_path)
+    out = str(tmp_path / "out")
+    J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=1)
+    for table in ("triples", "nodes"):
+        snaps = glob.glob(f"{out}/{table}/data/_snap=*")
+        assert snaps
+        for snap_dir in snaps:
+            files = glob.glob(f"{snap_dir}/_bucket=*/*.parquet")
+            assert 0 < len(files) <= 16, (snap_dir, len(files))

@@ -382,3 +382,69 @@ def test_time_travel_read(spark, tmp_path):
     assert table.read(spark).count() == 15
     with _pytest.raises(ValueError, match="EXPIRED"):
         table.read(spark, as_of=1)
+
+
+def _committed_layout(spark, root, snap):
+    """{bucket: rows} of one committed ``_snap`` dir, asserting every
+    ``_bucket`` dir under it holds exactly one parquet file."""
+    import glob
+
+    snap_dir = os.path.join(root, "data", f"_snap={snap}")
+    for b in glob.glob(os.path.join(snap_dir, "_bucket=*")):
+        assert len(glob.glob(os.path.join(b, "*.parquet"))) == 1, b
+    rows = spark.read.parquet(snap_dir).groupBy("_bucket").count().collect()
+    return {r["_bucket"]: r["count"] for r in rows}
+
+
+def test_one_file_per_bucket_per_commit(spark, tmp_path):
+    """Every commit path (merge_append, delta_append, both compacts) writes
+    one file per ``(snapshot, bucket)`` even when the staged frame spans
+    more tasks than there are buckets, and the lineage counters equal a
+    recount of what was committed."""
+    from biomedical_knowledge_graph_spark.sinks.table_format import (
+        AggregatingSnapshotTable,
+    )
+
+    conf = {
+        "spark.sql.shuffle.partitions": "16",
+        # keep the upstream stage at 16 tasks however small the batch
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        root = str(tmp_path / "m")
+        t = SnapshotTable(
+            root, key_cols=["subj", "obj"], bucket_expr="pmod(xxhash64(subj), 4)"
+        )
+        for batch in (range(0, 300), range(200, 500)):
+            lin = t.merge_append(
+                _df(spark, [(f"s{i}", f"o{i}", i) for i in batch])
+            )
+            counts = _committed_layout(spark, root, lin["snapshot"])
+            assert lin["rows_added"] == sum(counts.values()) > 0
+            assert {p["_bucket"]: p["rows"] for p in lin["partition_counts"]} == counts
+        lin = t.compact(spark)
+        assert sum(_committed_layout(spark, root, lin["snapshot"]).values()) == 500
+        assert lin["rows_total"] == 500
+
+        root = str(tmp_path / "a")
+        a = AggregatingSnapshotTable(
+            root,
+            key_cols=["subj", "obj"],
+            agg_spec={"w": "sum"},
+            bucket_expr="pmod(xxhash64(subj), 4)",
+        )
+        for run, batch in (("d1", range(0, 300)), ("d2", range(200, 500))):
+            lin = a.delta_append(
+                _df(spark, [(f"s{i}", f"o{i}", 1) for i in batch]), run_id=run
+            )
+            counts = _committed_layout(spark, root, lin["snapshot"])
+            assert lin["rows_added"] == sum(counts.values()) == 300
+        lin = a.compact(spark)
+        assert sum(_committed_layout(spark, root, lin["snapshot"]).values()) == 500
+        assert lin["rows_total"] == 500
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

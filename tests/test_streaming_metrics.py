@@ -111,6 +111,67 @@ def test_golden_metrics(spark):
     json.dumps(report)  # must be JSON-serializable as-is
 
 
+def _per_metric_report(nodes, triples):
+    """The golden report as the seven separate actions it used to take
+    (by-type, by-pred, degree, orphan, dangling and by-confidence) — the
+    reference ``collect_all_metrics`` must match key for key."""
+    def by(df, col):
+        return {r[col]: r["n"] for r in df.groupBy(col).agg(F.count("*").alias("n")).collect()}
+
+    ep = triples.select(F.col("subj").alias("node")).unionByName(
+        triples.select(F.col("obj").alias("node"))
+    )
+    deg = ep.groupBy("node").agg(F.count("*").alias("degree")).agg(
+        F.count("*").alias("c"), F.avg("degree").alias("a"), F.max("degree").alias("m")
+    ).collect()[0]
+    ids = nodes.select("entity_id").distinct()
+    eps = ep.withColumnRenamed("node", "entity_id").distinct()
+    nodes_by_type, edges_by_type = by(nodes, "entity_type"), by(triples, "pred")
+    return {
+        "total_nodes": sum(nodes_by_type.values()),
+        "nodes_by_type": nodes_by_type,
+        "total_edges": sum(edges_by_type.values()),
+        "edges_by_type": edges_by_type,
+        "connected_nodes": deg["c"],
+        "avg_degree": round(deg["a"], 4) if deg["a"] else 0.0,
+        "max_degree": deg["m"],
+        "orphan_nodes": ids.join(eps, "entity_id", "left_anti").count(),
+        "dangling_endpoints": eps.join(ids, "entity_id", "left_anti").count(),
+        "edges_by_confidence": by(triples, "confidence"),
+    }
+
+
+def test_golden_metrics_two_pass_matches_per_metric_report(spark):
+    """Orphans (E4, and a NULL node id), dangling endpoints (E5, a NULL
+    obj), a duplicated node row, a NULL type, a NULL confidence tier, two
+    predicates; then the same nodes with no edges at all (every tier
+    empty, avg_degree 0.0, max_degree None)."""
+    nodes = spark.createDataFrame(
+        [("E1", "gene"), ("E1", "gene"), ("E2", "gene"), ("E3", "term"),
+         ("E4", "term"), ("E6", None), (None, "term")],
+        "entity_id string, entity_type string",
+    )
+    triples = spark.createDataFrame(
+        [
+            ("E1", "CO_OCCURS_WITH", "E2", 5, "low"),
+            ("E1", "CO_OCCURS_WITH", "E3", 60, "high"),
+            ("E2", "CO_OCCURS_WITH", "E5", 12, "medium"),
+            ("E3", "IS_A", "E6", 1, None),
+            ("E6", "IS_A", None, 1, None),
+            ("E3", "PART_OF", "E1", 1, "high"),
+        ],
+        "subj string, pred string, obj string, weight long, confidence string",
+    )
+    got = metrics.collect_all_metrics(nodes, triples)
+    ref = _per_metric_report(nodes, triples)
+    assert got == ref and list(got) == list(ref)
+    assert (got["orphan_nodes"], got["dangling_endpoints"]) == (2, 2)
+    empty = triples.limit(0)
+    got = metrics.collect_all_metrics(nodes, empty)
+    assert got == _per_metric_report(nodes, empty)
+    assert got["edges_by_confidence"] == {} and got["avg_degree"] == 0.0
+
+
 def test_format_report_human_readable():
     report = {
         "total_nodes": 4,
