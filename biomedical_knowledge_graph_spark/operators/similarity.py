@@ -385,17 +385,16 @@ def ivf_assign(
         # max over (score, -cent_id); cent ids are unique so the
         # ordering is total. Non-numeric cent ids keep the window
         # (no generic order inversion for strings).
+        # the source columns ride in the argmax's own struct, so they
+        # come from the winning row by construction
         carry = [c for c in df.columns if c != id_col]
         best = scored.groupBy(id_col).agg(
-            # every row of one id carries the identical source columns
-            # (the cross product replicates the input row), so first()
-            # is value-deterministic here
-            *[F.first(c).alias(c) for c in carry],
             F.max_by(
-                "cent_id", F.struct(F.col("_cs"), -F.col("cent_id"))
-            ).alias("cell"),
+                F.struct(F.col("cent_id").alias("cell"), *carry),
+                F.struct(F.col("_cs"), -F.col("cent_id")),
+            ).alias("_best")
         )
-        return best.select(*df.columns, "cell")
+        return best.select(id_col, "_best.*").select(*df.columns, "cell")
     w = Window.partitionBy(id_col).orderBy(F.desc("_cs"), F.asc("cent_id"))
     return (
         scored.withColumn("_rn", F.row_number().over(w))

@@ -365,9 +365,15 @@ def build_kg_increment(
       accumulated table — and ``run_id`` makes crashed-and-replayed
       increments exact no-ops (batch-granular exactly-once).
 
+    A replay is answered from the table's manifests before any planning:
+    a ``run_id`` that is already committed returns
+    ``{"run_id", "rows_added": 0, "replayed": True}`` and runs no Spark job.
+
     Returns the commit's lineage row. Publication:
     ``published_triples(spark, counts_table, min_cooccur, tiers)``.
     """
+    if run_id in counts_table.committed_run_ids():
+        return {"run_id": run_id, "rows_added": 0, "replayed": True}
     result = build_kg(
         spark,
         new_pages,

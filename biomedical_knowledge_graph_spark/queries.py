@@ -3294,21 +3294,18 @@ def kg_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         transitive_closure,
     )
 
-    edges = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_partkey") >= 1)
-        .select(
-            F.col("p_partkey").alias("child"),
-            F.expr("(p_partkey - 1) div 2").alias("parent"),
-        )
+    keys = load(spark, sf_dir, "part").filter(F.col("p_partkey") >= 1)
+    edges = keys.select(
+        F.col("p_partkey").alias("child"),
+        F.expr("(p_partkey - 1) div 2").alias("parent"),
     )
     # fixed-rounds mode (round 8, VERDICT r7 item 3): the demo hierarchy
-    # is the heap-indexed binary tree over part keys [1..n] rooted at 0,
-    # whose exact depth is floor(log2(n + 1)) — one cheap count instead
-    # of one count-probe action PER doubling round (the probe mode paid
-    # ~2 jobs/round plus a whole extra round to observe the fixed point).
-    # Output is identical (test-pinned vs probe mode; oracle unchanged).
-    n = load(spark, sf_dir, "part").filter(F.col("p_partkey") >= 1).count()
+    # is the heap-indexed binary tree rooted at 0, where key k sits at
+    # depth floor(log2(k + 1)), so the largest key bounds every chain
+    # (a key count undershoots it on a gapped key set). One cheap
+    # aggregate instead of one count-probe action PER doubling round;
+    # output is identical (test-pinned vs probe mode; oracle unchanged).
+    n = keys.agg(F.max("p_partkey")).first()[0]
     depth = max(1, int(math.floor(math.log2(n + 1)))) if n else 1
     return transitive_closure(edges, max_depth=depth).select(
         F.col("child").alias("node"), F.col("parent").alias("ancestor")

@@ -40,14 +40,15 @@ Scale design (round-3 hardening, VERDICT r2 items 1/3):
 - One writer per partition per commit: ``_write_snapshot`` (the only
   data-file write path) rebalances on the table's partition columns
   before the ``partitionBy`` write, so each ``(snapshot, partition)`` is
-  one file, the clustered file set Iceberg ``MERGE INTO`` writes. Writing
-  straight off a 32-task stage put a file per task in every bucket: one
-  ``full_build_job`` pass over a 1 500-term ontology (4-core host, 32
-  shuffle partitions) left 1 016 files for 6 176 triples and 481 for
-  1 455 nodes; it now leaves 32 and 16. ``rebalance`` rather than
-  ``repartition``: AQE still splits an oversized partition at
-  ``advisoryPartitionSizeInBytes``, so a cluster-scale commit is not
-  capped at one task per bucket.
+  one file, the clustered file set Iceberg ``MERGE INTO`` writes (a
+  1 500-term ontology build: 1 016 + 481 files → 32 + 16). AQE still
+  splits an oversized partition, which ``repartition`` would not.
+- Commit bookkeeping comes from metadata, not Spark actions: the row
+  and per-partition counters are read from the footers of the files
+  just written (Iceberg's manifest ``record_count``), and a replayed
+  ``run_id`` is answered from the manifests. A commit is one Spark
+  action (the write), two when merging into a non-empty bucketed table
+  (bucket probe + write); a compaction is one.
 """
 
 from __future__ import annotations
@@ -57,14 +58,45 @@ import os
 import shutil
 import time
 import uuid
+from collections import Counter
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 # more distinct staged buckets than this → skip pruning (the filter would
 # enumerate too many literals; a batch touching >4096 buckets is close to
 # a full-table merge anyway, where pruning buys nothing)
 _MAX_PRUNE_BUCKETS = 4096
+
+
+def _footer_counts(
+    snap_dir: str, part_schema: T.StructType
+) -> tuple[int, list[dict]]:
+    """``(rows, per-partition counters)`` of a written ``_snap`` dir, from
+    the parquet footers alone. pyarrow's hive partitioning reads the dir
+    names as Spark writes them: ``%XX``-escaped, NULL (and ``""``) as
+    ``__HIVE_DEFAULT_PARTITION__``, cast to the columns' types. Counters
+    are sorted as ``orderBy`` sorts them, nulls first."""
+    if not os.path.isdir(snap_dir):  # an empty write leaves no dir
+        return 0, []
+    hive = ds.HivePartitioning(
+        pa.schema([(f.name, to_arrow_type(f.dataType)) for f in part_schema])
+    )
+    names = part_schema.names
+    counts: Counter = Counter()
+    # "_bucket=k" dirs are data, so only dot files (checksums) are skipped
+    files = ds.dataset(snap_dir, partitioning=hive, ignore_prefixes=["."])
+    for frag in files.get_fragments():
+        keys = ds.get_partition_keys(frag.partition_expression)
+        counts[tuple(keys.get(c) for c in names)] += frag.metadata.num_rows
+    ordered = sorted(counts, key=lambda k: [(v is not None, v) for v in k])
+    return sum(counts.values()), [
+        {**dict(zip(names, k)), "rows": counts[k]} for k in ordered if names
+    ]
 
 
 class SnapshotTable:
@@ -260,11 +292,14 @@ class SnapshotTable:
         if self.bucket_expr:
             staged = staged.withColumn("_bucket", F.expr(self.bucket_expr))
             part_cols.append("_bucket")
-        # persist once: the stage feeds the bucket probe, the anti-join,
-        # the count, the partition counters and the write
-        pinned = [staged.persist()]
+        # an empty table has nothing to anti-join against, so its commit
+        # is the write alone; a merge first probes the staged buckets
+        # (persisted once: the stage feeds the probe and the write)
+        probe = bool(self.bucket_expr and self.current_files())
+        if probe:
+            staged = staged.persist()
         try:
-            if self.bucket_expr:
+            if probe:
                 # distinct staged buckets, probe-bounded: pmod-style bucket
                 # transforms yield at most n values, so this collect is tiny;
                 # a pathological expression overflowing the cap just skips
@@ -278,43 +313,25 @@ class SnapshotTable:
                 if len(rows) <= _MAX_PRUNE_BUCKETS:
                     staged_buckets = [r["_bucket"] for r in rows]
             existing = self._existing_for_merge(spark, staged_buckets)
-            if existing is not None:
-                staged = staged.join(
-                    existing.select(self.key_cols), self.key_cols, "left_anti"
-                ).persist()
-                pinned.append(staged)
+            new = staged if existing is None else staged.join(
+                existing.select(self.key_cols), self.key_cols, "left_anti"
+            )
             snap = self._head() + 1
-            partition_counts: list[dict] | None = None
-            if part_cols:
-                # per-partition counters in the lineage row (north_rule:
-                # "every partition emits lineage rows + counters"); reads
-                # the persisted stage, so this is one cheap aggregate whose
-                # sum is rows_added — no separate count() action. The
-                # limit is applied BEFORE collect so a pathological
-                # partition count bounds driver memory, not just the
-                # manifest size — the rows_added total is always exact.
-                counts = (
-                    staged.groupBy(*part_cols)
-                    .count()
-                    .orderBy(*part_cols)
-                    .limit(10_001)
-                ).collect()
-                if len(counts) <= 10_000:
-                    added = sum(r["count"] for r in counts)
-                    partition_counts = [
-                        {**{c: r[c] for c in part_cols}, "rows": r["count"]}
-                        for r in counts
-                    ] or None
-                else:  # pragma: no cover - bounded-manifest guard
-                    added = staged.count()
-                    partition_counts = [{"partitions": "10000+", "rows": added}]
-            else:
-                added = staged.count()
-            if added:
-                self._write_snapshot(staged, snap, part_cols)
+            added, counts = self._write_snapshot(new, snap, part_cols)
         finally:
-            for p in pinned:
-                p.unpersist()
+            if probe:
+                staged.unpersist()
+        if self.bucket_expr and not probe:
+            # first commit: every staged bucket was written
+            written = {c["_bucket"] for c in counts}
+            if len(written) <= _MAX_PRUNE_BUCKETS:
+                staged_buckets = written
+        # per-partition counters in the lineage row (north_rule: "every
+        # partition emits lineage rows + counters"), bounded so a
+        # pathological partition count cannot bloat the manifest
+        partition_counts = counts or None
+        if len(counts) > 10_000:  # pragma: no cover
+            partition_counts = [{"partitions": "10000+", "rows": added}]
 
         lineage = {
             **(extra_lineage or {}),
@@ -336,12 +353,13 @@ class SnapshotTable:
 
     def _write_snapshot(
         self, df: DataFrame, snap: int, part_cols: list[str]
-    ) -> None:
+    ) -> tuple[int, list[dict]]:
         """Write ``df`` as snapshot ``snap``, hive-partitioned by
-        ``_snap`` then ``part_cols``. ``mode("append")`` on the shared data
-        root only touches ``_snap=<snap>``; a crash-leftover dir for this
-        (by construction uncommitted) snapshot is removed first so retries
-        never double-write.
+        ``_snap`` then ``part_cols``; returns ``_footer_counts`` of what
+        it wrote. ``mode("append")`` on the shared data root only touches
+        ``_snap=<snap>``; a crash-leftover dir for this (by construction
+        uncommitted) snapshot is removed first so retries never
+        double-write.
 
         The rebalance on ``part_cols`` writes one file per ``(snapshot,
         partition)`` (module docstring, "Scale design"). Spark resolves the
@@ -351,6 +369,7 @@ class SnapshotTable:
         target = self._snap_dir(snap)
         if os.path.exists(target):  # pragma: no cover - crash leftover
             shutil.rmtree(target)
+        part_schema = T.StructType([df.schema[c] for c in part_cols])
         (
             df.hint("rebalance", *part_cols)
             .withColumn("_snap", F.lit(snap))
@@ -358,6 +377,7 @@ class SnapshotTable:
             .partitionBy("_snap", *part_cols)
             .parquet(self._data_dir())
         )
+        return _footer_counts(target, part_schema)
 
     def _commit(self, snap: int, files: list[str], lineage: dict) -> None:
         manifest = {"files": files, "lineage": lineage}
@@ -387,6 +407,14 @@ class SnapshotTable:
         ``expire_snapshots`` with zero retention. Callers needing
         longer-lived reader leases should defer ``compact()`` (leave
         ``compact_after=None`` and run it in a maintenance window)."""
+        return self._rewrite(spark, run_id, self.read, {"partition_counts": None})
+
+    def _rewrite(
+        self, spark: SparkSession, run_id: str | None, rows_of, fields: dict
+    ) -> dict:
+        """The body of every ``compact``: ``rows_of(spark)`` is what the
+        live snapshots are rewritten as, ``fields`` the lineage fields the
+        table kind adds."""
         t0 = time.time()
         # crash-window recovery first: a prior compact that died between
         # its manifest commit and dir cleanup leaves superseded _snap dirs
@@ -398,13 +426,9 @@ class SnapshotTable:
         old_files = self.current_files()
         if len(old_files) <= 1:
             return {"compacted": 0}
-        df = self.read(spark)
-        part_cols = list(self.partition_cols)
-        if self.bucket_expr:
-            part_cols.append("_bucket")
+        part_cols = self.partition_cols + (["_bucket"] if self.bucket_expr else [])
         snap = self._head() + 1
-        rows = df.count()
-        self._write_snapshot(df, snap, part_cols)
+        rows, _ = self._write_snapshot(rows_of(spark), snap, part_cols)
         lineage = {
             "snapshot": snap,
             "run_id": run_id or uuid.uuid4().hex,
@@ -412,8 +436,8 @@ class SnapshotTable:
             "compacted_snapshots": len(old_files),
             "rows_total": rows,
             "key_cols": self.key_cols,
+            **fields,
             "wall_s": round(time.time() - t0, 3),
-            "partition_counts": None,
         }
         self._commit(snap, [self._snap_dir(snap)], lineage)
         for f in old_files:  # superseded, no longer referenced
@@ -559,14 +583,8 @@ class AggregatingSnapshotTable(SnapshotTable):
         if self.bucket_expr:
             staged = staged.withColumn("_bucket", F.expr(self.bucket_expr))
             part_cols.append("_bucket")
-        staged = staged.persist()
-        try:
-            added = staged.count()
-            snap = self._head() + 1
-            if added:
-                self._write_snapshot(staged, snap, part_cols)
-        finally:
-            staged.unpersist()
+        snap = self._head() + 1
+        added, _ = self._write_snapshot(staged, snap, part_cols)
         lineage = {
             **(extra_lineage or {}),
             "snapshot": snap,
@@ -599,33 +617,11 @@ class AggregatingSnapshotTable(SnapshotTable):
         """LSM compaction: rewrite all deltas as one merged snapshot.
         Read-time semantics are unchanged (merge functions are
         associative); read amplification drops to one file set."""
-        t0 = time.time()
-        self._vacuum_orphans()
-        old_files = self.current_files()
-        if len(old_files) <= 1:
-            return {"compacted": 0}
-        merged = self.read_merged(spark)
-        part_cols = []
-        if self.bucket_expr:
-            merged = merged.withColumn("_bucket", F.expr(self.bucket_expr))
-            part_cols.append("_bucket")
-        snap = self._head() + 1
-        rows = merged.persist().count()
-        try:
-            self._write_snapshot(merged, snap, part_cols)
-        finally:
-            merged.unpersist()
-        lineage = {
-            "snapshot": snap,
-            "run_id": run_id or uuid.uuid4().hex,
-            "rows_added": 0,
-            "compacted_snapshots": len(old_files),
-            "rows_total": rows,
-            "key_cols": self.key_cols,
-            "agg_spec": self.agg_spec,
-            "wall_s": round(time.time() - t0, 3),
-        }
-        self._commit(snap, [self._snap_dir(snap)], lineage)
-        for f in old_files:
-            shutil.rmtree(f, ignore_errors=True)
-        return lineage
+
+        def merged(spark):
+            df = self.read_merged(spark)
+            if self.bucket_expr:
+                df = df.withColumn("_bucket", F.expr(self.bucket_expr))
+            return df
+
+        return self._rewrite(spark, run_id, merged, {"agg_spec": self.agg_spec})

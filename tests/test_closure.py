@@ -98,3 +98,29 @@ def test_closure_fixed_rounds_shallow_and_invalid(spark):
     }
     with pytest.raises(ValueError, match="max_depth"):
         transitive_closure(edges, max_depth=0)
+
+
+def test_ancestor_closure_query_gapped_keys(spark, tmp_path):
+    """kg_ancestor_closure's fixed-rounds depth bound comes from the
+    largest part key, so a gapped key set whose one chain is deeper than
+    log2(key count) still closes fully: the registry query equals probe
+    mode on the same edges."""
+    from pyspark.sql import functions as F
+
+    from biomedical_knowledge_graph_spark.queries import kg_ancestor_closure
+
+    # the heap chain 1023 -> 511 -> ... -> 1 -> 0: 10 keys, depth 10,
+    # where a key count (10) would bound the depth at floor(log2(11)) = 3
+    keys = [2**i - 1 for i in range(1, 11)] + [4, 5]
+    part = spark.createDataFrame([(k,) for k in keys], "p_partkey long")
+    part.write.parquet(str(tmp_path / "part.parquet"))
+    got = {
+        (r.node, r.ancestor)
+        for r in kg_ancestor_closure(spark, str(tmp_path)).collect()
+    }
+    edges = part.select(
+        F.col("p_partkey").alias("child"),
+        F.expr("(p_partkey - 1) div 2").alias("parent"),
+    )
+    assert got == _pairs(transitive_closure(edges))
+    assert (1023, 0) in got

@@ -83,8 +83,19 @@ def test_increment_replay_is_exact_noop(spark, tmp_path):
     )
     build_kg_increment(spark, pages, dim, table, run_id="r1")
     before = _rows(published_triples(spark, table, min_cooccur=2))
-    replay = build_kg_increment(spark, pages, dim, table, run_id="r1")
-    assert replay["rows_added"] == 0 and replay["replayed"] is True
+    head = table._head()
+    # the replay is answered from the manifest before any planning: it
+    # runs no Spark job at all
+    sc = spark.sparkContext
+    sc.setJobGroup("increment-replay", "replayed build_kg_increment")
+    try:
+        replay = build_kg_increment(spark, pages, dim, table, run_id="r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("increment-replay")) == []
+    assert replay == {"run_id": "r1", "rows_added": 0, "replayed": True}
+    assert table._head() == head
     assert _rows(published_triples(spark, table, min_cooccur=2)) == before
     # a NEW run_id with the same pages is a (wrong but distinct) commit —
     # counts double, proving the no-op above came from run_id tracking,

@@ -710,3 +710,34 @@ def test_ivf_assign_argmax_matches_window_with_ties(spark):
     assert fast == slow
     # ties resolve to the LOWER cent_id
     assert all(c != 11 for _, c in fast)
+
+
+def test_ivf_assign_argmax_carries_columns_like_window(spark):
+    # the argmax path carries the non-id columns through max_by's struct;
+    # every output row must equal the window path's, column for column
+    from biomedical_knowledge_graph_spark.operators.similarity import (
+        ivf_assign,
+    )
+
+    vecs = spark.createDataFrame(
+        [
+            (
+                i,
+                f"t{i % 4}",
+                None if i % 5 == 0 else i / 3,
+                [float(i % 3 + 1), float((i * 7) % 5)],
+            )
+            for i in range(40)
+        ],
+        "vec_id long, tag string, w double, embedding array<float>",
+    )
+    cents = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [1.0, 0.0]), (12, [0.0, 1.0])],
+        "cent_id long, cvec array<float>",
+    )
+    fast = ivf_assign(vecs, cents)
+    slow = ivf_assign(
+        vecs, cents.selectExpr("cast(cent_id as string) AS cent_id", "cvec")
+    ).withColumn("cell", F.col("cell").cast("long"))
+    assert fast.columns == slow.columns == vecs.columns + ["cell"]
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
