@@ -1,7 +1,7 @@
 """Dataflow operators (SURVEY.md §2), each idiomatic Spark.
 
 extraction    S1   — HTML→text, Arrow-vectorized pandas UDF, byte-identical
-mentions      §2.9 — dictionary mention scan (Aho-Corasick in Arrow batches)
+mentions      §2.9 — dictionary mention scan (regex trie in Arrow batches)
 linking       J1/J8/J9 — broadcast alias→canonical join + anti-join misses
 canonicalize  J3/J4/SO2/SO3/F9 — upsert-merge semantics as full-outer coalesce
 components    J5   — connected components (large-star/small-star)

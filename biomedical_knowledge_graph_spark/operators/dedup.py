@@ -20,11 +20,9 @@ matters (JVM-side, no Python).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -137,65 +135,6 @@ def ngram_jaccard_pairs(
 # MinHash + LSH (the scale path)
 # ---------------------------------------------------------------------------
 
-_MERSENNE = (1 << 61) - 1
-
-
-def _hash_params(num_hashes: int, seed: int = 7) -> tuple[np.ndarray, np.ndarray]:
-    rng = np.random.RandomState(seed)
-    a = rng.randint(1, _MERSENNE, size=num_hashes, dtype=np.int64)
-    b = rng.randint(0, _MERSENNE, size=num_hashes, dtype=np.int64)
-    return a, b
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    num_hashes: int = 125,
-    seed: int = 7,
-    shingles: DataFrame | None = None,
-    with_size: bool = False,
-) -> DataFrame:
-    """(id, signature array<long>) — shingle → xxhash64 → k universal-hash
-    minima, computed vectorized in numpy over Arrow batches.
-
-    ``shingles``: optionally reuse a precomputed (id, shingle) frame (the
-    LSH+verify pipeline shares one scan between signatures and exact
-    verification)."""
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_sets(df, id_col, text_col, n)
-    ).withColumn("h", F.xxhash64("shingle"))
-    grouped = sh.groupBy(id_col).agg(F.collect_list("h").alias("hashes"))
-    a_params, b_params = _hash_params(num_hashes, seed)
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def sign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        a = a_params.astype(np.uint64)
-        b = b_params.astype(np.uint64)
-        for pdf in batches:
-            ids, sigs, szs = [], [], []
-            for doc_id, hashes in zip(pdf[id_col].values, pdf["hashes"].values):
-                x = np.asarray(hashes, dtype=np.uint64)[:, None]  # (s, 1)
-                vals = (x * a + b) % np.uint64(_MERSENNE)  # (s, k)
-                sigs.append(vals.min(axis=0).astype(np.int64))
-                ids.append(doc_id)
-                szs.append(len(hashes))
-            out = {id_col: ids, "signature": sigs}
-            if with_size:
-                # shingle rows are distinct per doc → the hash-list length
-                # IS the shingle-set size
-                out["sz"] = szs
-            yield pd.DataFrame(out)
-
-    schema = f"{id_col} {id_type}, signature array<bigint>"
-    if with_size:
-        schema += ", sz bigint"
-    return grouped.mapInPandas(sign, schema=schema)
-
-
 _M31 = (1 << 31) - 1  # Mersenne prime 2^31-1: (a*h31+b) fits a long
 
 
@@ -213,13 +152,11 @@ def minhash_signatures_jvm(
     xxhash64 masked to 31 bits → ``num_hashes`` universal-hash minima as
     plain MIN aggregates.
 
-    Scale shape vs the Arrow variant (minhash_signatures): no
-    ``collect_list`` — the shuffle carries ONE partial row of
-    ``num_hashes`` longs per (doc, map-partition) thanks to map-side
-    combine, instead of every shingle hash of every document; no Python
-    worker round-trip. The hash family differs (31-bit universe vs 61-bit)
-    but LSH band semantics and the exact verify are unchanged, so output
-    pairs are identical in distribution and exactly verified either way.
+    Scale shape: no ``collect_list`` — the shuffle carries ONE partial
+    row of ``num_hashes`` longs per (doc, map-partition) thanks to
+    map-side combine, independent of document length, and no Python
+    worker round-trip. The price is ``num_hashes`` expressions per
+    shingle row of compute.
     """
     sh = (
         shingles
@@ -249,88 +186,6 @@ def minhash_signatures_jvm(
     if with_size:
         out_cols.append(F.col("sz"))
     return grouped.select(*out_cols)
-
-
-def minhash_signatures_oph(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    num_hashes: int = 125,
-    seed: int = 7,
-    shingles: DataFrame | None = None,
-    with_size: bool = False,
-) -> DataFrame:
-    """(id, signature array<long>) via densified ONE-PERMUTATION hashing
-    (Li/Owen/Zhang OPH + Shrivastava-Li rotation densification).
-
-    Classic k-hash MinHash pays k universal-hash evaluations per shingle —
-    either 125 aggregate expressions per row (the "jvm" impl: measured
-    4.4 s at sf0.1) or a collect_list that ships EVERY shingle hash
-    through the shuffle (the "arrow" impl). OPH hashes each shingle ONCE:
-    the hash's high bits pick one of k bins, its low bits are the value,
-    and the signature is the per-(doc, bin) MIN — one map-side-combinable
-    aggregate whose shuffle carries at most k partial mins per (doc,
-    map-partition), then one dim-sized compaction. Empty bins (docs with
-    few shingles) are filled by cyclic rotation borrowing from the next
-    filled bin, offsetting the borrowed value by the distance so borrowed
-    slots don't manufacture band collisions; the tiny densification step
-    runs in one Arrow batch over doc-sized rows (k-length arrays).
-
-    Banding/verification are unchanged — candidates still exact-verified,
-    so output pairs are exact regardless of the sketch's variance profile
-    (slightly higher per-band variance than independent hashes, standard
-    for OPH)."""
-    k = num_hashes
-    sh = (
-        shingles
-        if shingles is not None
-        else shingle_sets(df, id_col, text_col, n)
-    ).withColumn("_h", F.xxhash64("shingle", F.lit(seed)))
-    binned = sh.select(
-        id_col,
-        F.pmod(F.shiftrightunsigned("_h", 32), F.lit(k)).alias("_bin"),
-        F.col("_h").bitwiseAND(F.lit((1 << 32) - 1)).alias("_v"),
-    )
-    mins = binned.groupBy(id_col, "_bin").agg(
-        F.min("_v").alias("_mv"), F.count("*").alias("_c")
-    )
-    compact = mins.groupBy(id_col).agg(
-        F.collect_list(F.struct("_bin", "_mv")).alias("_bm"),
-        # per-bin counts sum to the (distinct) shingle-set size
-        F.sum("_c").alias("_sz"),
-    )
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def densify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs = [], []
-            for doc_id, bm in zip(pdf[id_col].values, pdf["_bm"].values):
-                dense = np.full(k, -1, dtype=np.int64)
-                for e in bm:
-                    dense[e["_bin"]] = e["_mv"]
-                empty = np.where(dense < 0)[0]
-                if len(empty):
-                    # rotation densification: borrow from the next filled
-                    # bin (cyclic), offset by the travel distance so two
-                    # docs sharing a source bin but differing in which
-                    # bins are empty don't collide spuriously
-                    filled = np.where(dense >= 0)[0]
-                    for j in empty:
-                        d = (filled - j) % k
-                        src = filled[np.argmin(d)]
-                        dense[j] = dense[src] + int((src - j) % k)
-                ids.append(doc_id)
-                sigs.append(dense)
-            out = {id_col: ids, "signature": sigs}
-            if with_size:
-                out["sz"] = pdf["_sz"].values
-            yield pd.DataFrame(out)
-
-    schema = f"{id_col} {id_type}, signature array<bigint>"
-    if with_size:
-        schema += ", sz bigint"
-    return compact.mapInPandas(densify, schema=schema)
 
 
 def banded_memberships(
@@ -412,7 +267,7 @@ def minhash_lsh_candidates(
     exact dedup upstream under either shape.
 
     ``size_ratio_at_least`` (round 8): when the signature frame carries
-    a per-doc ``sz`` column (``with_size=True`` in the signature impl —
+    a per-doc ``sz`` column (``with_size=True`` in the signature pass —
     a free extra aggregate), the sizes ride the cell arrays and the
     size-ratio prefilter (J >= t ⇒ min(sz)/max(sz) >= t, exact) runs
     INSIDE the pair generator, BEFORE the candidate-dedup exchange —
@@ -490,7 +345,6 @@ def minhash_dedup_pairs(
     bands: int = 25,
     rows_per_band: int = 5,
     seed: int = 7,
-    signature_impl: str | None = None,
 ) -> DataFrame:
     """LSH candidates → exact-Jaccard verification ≥ threshold.
 
@@ -502,34 +356,13 @@ def minhash_dedup_pairs(
     (J ≥ t ⇒ min(sz)/max(sz) ≥ t) prunes candidates before the
     array-intersect verification.
 
-    ``signature_impl`` — no variant dominates; measured on short- AND
-    long-doc corpora (tools/bench_minhash_variants.py + BENCH.md app. 2;
-    all exact after verification):
-    - "jvm" (default): k universal hashes as k MIN aggregates — ONE wide
-      partial row (k longs) per (doc, map-partition): the smallest
-      shuffle in every regime, independent of doc length; pays k
-      expressions per shingle row of compute (2-2.6× the others).
-    - "oph": densified one-permutation hashing — one hash per shingle,
-      per-(doc, bin) MIN rows: compute on par with arrow, shuffle
-      doc-length-independent but ~5× jvm's bytes (k small keyed rows per
-      doc) — the pick when the cluster is compute-bound.
-    - "arrow": every shingle hash collect_list'd through the shuffle —
-      cheapest compute, shuffle grows LINEARLY with doc length: fine on
-      one box, first casualty on a network.
-    Env BKG_MINHASH_IMPL overrides for A/B benching without code
-    changes."""
-    import os
-
-    if signature_impl is None:
-        signature_impl = os.environ.get("BKG_MINHASH_IMPL", "jvm")
-    if signature_impl not in ("jvm", "arrow", "oph"):
-        raise ValueError(f"unknown signature_impl {signature_impl!r}")
+    Signatures come from ``minhash_signatures_jvm``."""
     # one shingle scan feeds both the signatures and the exact verify
     sh = shingle_sets(df, id_col, text_col, n).persist()
     try:
         return _minhash_dedup_pairs_impl(
             sh, id_col, threshold, num_hashes, bands, rows_per_band, seed, df,
-            text_col, n, signature_impl,
+            text_col, n,
         )
     finally:
         # the impl eagerly materializes (localCheckpoint) before returning,
@@ -549,20 +382,14 @@ def _minhash_dedup_pairs_impl(
     df: DataFrame,
     text_col: str,
     n: int,
-    signature_impl: str = "jvm",
 ) -> DataFrame:
-    sign_fn = {
-        "jvm": minhash_signatures_jvm,
-        "arrow": minhash_signatures,
-        "oph": minhash_signatures_oph,
-    }[signature_impl]
     # round 8: sizes are computed as one extra aggregate of the
     # signature pass and ride the banded cells, so the ratio prefilter
     # runs before the candidate distinct and the verifier never
     # re-aggregates the postings for sizes (was two more full passes
     # over the shingle cache — one per join side)
     cands = minhash_lsh_candidates(
-        sign_fn(
+        minhash_signatures_jvm(
             df, id_col, text_col, n, num_hashes, seed, shingles=sh,
             with_size=True,
         ),
@@ -702,7 +529,6 @@ def minhash_index(
     bands: int = 25,
     rows_per_band: int = 5,
     seed: int = 7,
-    signature_impl: str = "jvm",
     persist: bool = False,
 ) -> MinHashIndex:
     """Build the incremental-dedup index for a corpus (one signature pass
@@ -727,15 +553,10 @@ def minhash_index(
     corpus pays one shingling pass + one signature pass, total. The
     persist=False path keeps the lazy frames (a production pipeline
     stores each frame once and never re-derives)."""
-    sign_fn = {
-        "jvm": minhash_signatures_jvm,
-        "arrow": minhash_signatures,
-        "oph": minhash_signatures_oph,
-    }[signature_impl]
     sh = shingle_sets(df, id_col, text_col, n)
     if persist:
         sh = sh.persist()
-        sigs = sign_fn(
+        sigs = minhash_signatures_jvm(
             df, id_col, text_col, n, num_hashes, seed, shingles=sh,
             with_size=True,
         ).localCheckpoint(eager=True)
@@ -744,7 +565,9 @@ def minhash_index(
             postings=sh,
             sizes=sigs.select(id_col, "sz"),
         )
-    sigs = sign_fn(df, id_col, text_col, n, num_hashes, seed, shingles=sh)
+    sigs = minhash_signatures_jvm(
+        df, id_col, text_col, n, num_hashes, seed, shingles=sh
+    )
     return MinHashIndex(
         bands=banded_memberships(sigs, id_col, bands, rows_per_band),
         postings=sh,
@@ -763,7 +586,6 @@ def minhash_dedup_pairs_incremental(
     bands: int = 25,
     rows_per_band: int = 5,
     seed: int = 7,
-    signature_impl: str = "jvm",
 ) -> DataFrame:
     """Near-duplicate pairs TOUCHING a new document batch — new-vs-corpus
     and new-vs-new, never corpus-vs-corpus — against a prebuilt
@@ -783,11 +605,6 @@ def minhash_dedup_pairs_incremental(
 
     Output: (id_a, id_b, jaccard) — identical contract to
     ``minhash_dedup_pairs`` restricted to pairs with ≥1 new side."""
-    sign_fn = {
-        "jvm": minhash_signatures_jvm,
-        "arrow": minhash_signatures,
-        "oph": minhash_signatures_oph,
-    }[signature_impl]
     sh_new = shingle_sets(new_df, id_col, text_col, n).persist()
     try:
         # round 8: sign ONCE with the per-doc size as the free extra
@@ -796,7 +613,7 @@ def minhash_dedup_pairs_incremental(
         # the new-vs-corpus join and the new-vs-new cells each re-ran
         # the whole batch k-MIN signature aggregate, and the verifier's
         # sizes union re-aggregated the batch postings a third time
-        sigs_new = sign_fn(
+        sigs_new = minhash_signatures_jvm(
             new_df, id_col, text_col, n, num_hashes, seed, shingles=sh_new,
             with_size=True,
         ).localCheckpoint(eager=True)

@@ -3,15 +3,19 @@ mention detection ... in Arrow batches").
 
 The reference probes in-memory dicts per record (gene cache probe,
 kg_scripts/talisman_gene_validator.py:99-145; reference-lookup probes,
-kg_scripts/go_kg_builder.py:237-304). The Spark-native equivalent for a
-*multi-token, large* dictionary is an Aho-Corasick automaton built once per
-executor from a broadcast alias list, run over Arrow batches via
-``mapInPandas`` — O(len(text)) per document regardless of dictionary size,
-no per-row Python at the DataFrame layer.
+kg_scripts/go_kg_builder.py:237-304). Two Spark-native equivalents:
+
+- ``scan_mentions_token_join``: word n-grams broadcast-joined against the
+  alias dim, JVM-only — the default for token-aligned dictionaries;
+- ``scan_mentions`` / ``scan_mentions_linked``: a trie-compiled regex
+  (``RegexTrieScanner``) built once per Python worker from a broadcast
+  alias list, run over Arrow batches via ``mapInPandas`` — the C regex
+  engine walks the trie, no per-row Python at the DataFrame layer.
 
 Scale notes:
 - the alias dictionary ships once per executor (Spark broadcast), not per
-  task; the automaton is memoized per (process, broadcast id);
+  task; each Python worker keeps the scanner of the dictionary it scanned
+  last (one entry, so reused workers do not accumulate dictionaries);
 - input is pruned to (id, text) before the scan so shuffles never carry
   other columns through the Python worker;
 - output is exploded mention rows — downstream consumers should aggregate
@@ -21,72 +25,11 @@ Scale notes:
 from __future__ import annotations
 
 import re
-from collections import deque
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class AhoCorasick:
-    """Minimal pure-Python Aho-Corasick automaton (lowercase patterns).
-
-    find_all returns (start, end, pattern) for every occurrence; the caller
-    applies word-boundary filtering. Built once per executor process.
-    """
-
-    def __init__(self, patterns: Iterable[str]) -> None:
-        # goto is a list of dicts: state -> {char: state}
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[str]] = [[]]
-        self.fail: list[int] = [0]
-        for pat in sorted(set(p for p in patterns if p)):
-            self._insert(pat)
-        self._build_failure()
-
-    def _insert(self, pat: str) -> None:
-        state = 0
-        for ch in pat:
-            nxt = self.goto[state].get(ch)
-            if nxt is None:
-                self.goto.append({})
-                self.out.append([])
-                self.fail.append(0)
-                nxt = len(self.goto) - 1
-                self.goto[state][ch] = nxt
-            state = nxt
-        self.out[state].append(pat)
-
-    def _build_failure(self) -> None:
-        q: deque[int] = deque()
-        for s in self.goto[0].values():
-            self.fail[s] = 0
-            q.append(s)
-        while q:
-            r = q.popleft()
-            for ch, s in self.goto[r].items():
-                q.append(s)
-                f = self.fail[r]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[s] = self.goto[f].get(ch, 0)
-                if self.fail[s] == s:
-                    self.fail[s] = 0
-                self.out[s] = self.out[s] + self.out[self.fail[s]]
-
-    def find_all(self, text: str) -> list[tuple[int, int, str]]:
-        state = 0
-        hits: list[tuple[int, int, str]] = []
-        goto, fail, out = self.goto, self.fail, self.out
-        for i, ch in enumerate(text):
-            while state and ch not in goto[state]:
-                state = fail[state]
-            state = goto[state].get(ch, 0)
-            if out[state]:
-                for pat in out[state]:
-                    hits.append((i - len(pat) + 1, i + 1, pat))
-        return hits
 
 
 class RegexTrieScanner:
@@ -95,7 +38,9 @@ class RegexTrieScanner:
     trie walk runs in the C regex engine (round-4, VERDICT r3 item 3 — the
     pure-Python AC char loop was the last interpreted hot path).
 
-    Semantics are EXACTLY ``AhoCorasick.find_all`` + ``_word_bounded``:
+    Semantics are EXACTLY an Aho-Corasick automaton's ``find_all`` plus a
+    word-boundary filter — the pure-Python reference in
+    ``tests/ac_reference.py`` (``AhoCorasick`` + ``word_bounded``):
 
     - ``(?=(TRIE)...)`` is zero-width, so the engine attempts a match at
       every position — overlapping occurrences (e.g. "kinase" inside an
@@ -109,7 +54,7 @@ class RegexTrieScanner:
     - boundary parity: AC rejects a hit when the char before ``start`` or
       at ``end`` is a word char (``str.isalnum()`` or ``_``). Python's
       ``\\w`` is documented as exactly alphanumeric-per-``isalnum`` plus
-      underscore, so ``(?<!\\w)`` / ``(?!\\w)`` match ``_word_bounded``
+      underscore, so ``(?<!\\w)`` / ``(?!\\w)`` match ``word_bounded``
       for every pattern, including ones starting or ending with non-word
       chars (where ``\\b`` would differ). Pinned by the Hypothesis
       equivalence test in tests/test_properties.py.
@@ -181,15 +126,19 @@ def _is_word_char(ch: str) -> bool:
     return ch.isalnum() or ch == "_"
 
 
-def _word_bounded(text: str, start: int, end: int) -> bool:
-    if start > 0 and _is_word_char(text[start - 1]):
-        return False
-    if end < len(text) and _is_word_char(text[end]):
-        return False
-    return True
+_SCANNER_CACHE: dict[tuple, object] = {}
 
 
-_AUTOMATON_CACHE: dict[tuple, object] = {}
+def _cached_scanner(key: tuple, build: Callable[[], object]) -> object:
+    """The worker's scanner for ``key``, built on first use. Python
+    workers are reused across tasks and jobs, so a memo that never
+    evicted would keep every dictionary a session scanned in every
+    worker; only the entry for the current key is kept."""
+    hit = _SCANNER_CACHE.get(key)
+    if hit is None:
+        _SCANNER_CACHE.clear()
+        hit = _SCANNER_CACHE[key] = build()
+    return hit
 
 # Whitespace-as-token-separator (round-5 parity fix): multi-word aliases
 # are stored space-separated, but extracted text separates lines with
@@ -217,7 +166,6 @@ def scan_mentions(
     id_col: str = "doc_id",
     text_col: str = "text",
     word_boundary: bool = True,
-    engine: str = "regex",
 ) -> DataFrame:
     """docs(id, text, ...) → mentions(id, surface, begin, end).
 
@@ -230,18 +178,11 @@ def scan_mentions(
     ``scan_mentions_token_join`` on text without whitespace runs (this
     repo's extractor guarantees that; see the module note on ``_WS_TO_SPACE``
     for the general case). ``begin``/``end`` are
-    [start, end) character offsets. Caveat shared by both engines: for
-    the rare code points whose ``str.lower()`` changes string LENGTH
-    (e.g. 'İ' → 'i̇'), offsets are positions in the lowered text, which
-    then diverge from the original; ASCII and 1:1 case folds are exact.
-
-    ``engine``: ``"regex"`` (default) runs the trie-compiled C-speed
-    scanner (RegexTrieScanner); ``"ac"`` keeps the pure-Python automaton.
-    Outputs are identical (Hypothesis-pinned); regex is ~an order of
-    magnitude faster per worker, so it is the corpus-scale default.
+    [start, end) character offsets. Caveat: for the rare code points
+    whose ``str.lower()`` changes string LENGTH (e.g. 'İ' → 'i̇'), offsets
+    are positions in the lowered text, which then diverge from the
+    original; ASCII and 1:1 case folds are exact.
     """
-    if engine not in ("regex", "ac"):
-        raise ValueError(f"unknown scan engine {engine!r}")
     spark = docs.sparkSession
     id_field = docs.schema[id_col]
     norm_aliases = sorted({a.lower() for a in aliases if a})
@@ -262,15 +203,10 @@ def scan_mentions(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
-        key = (engine, word_boundary, len(v), dict_digest)
-        scanner = _AUTOMATON_CACHE.get(key)
-        if scanner is None:
-            if engine == "regex":
-                scanner = RegexTrieScanner(v, word_boundary=word_boundary)
-            else:
-                scanner = AhoCorasick(v)
-            _AUTOMATON_CACHE[key] = scanner
-        boundary_in_scanner = engine == "regex"  # regex applies it itself
+        scanner = _cached_scanner(
+            (word_boundary, len(v), dict_digest),
+            lambda: RegexTrieScanner(v, word_boundary=word_boundary),
+        )
         for pdf in batches:
             ids: list = []
             surfaces: list[str] = []
@@ -281,12 +217,6 @@ def scan_mentions(
                     continue
                 low = text.lower().translate(_WS_TO_SPACE)
                 for s, e, pat in scanner.find_all(low):
-                    if (
-                        word_boundary
-                        and not boundary_in_scanner
-                        and not _word_bounded(low, s, e)
-                    ):
-                        continue
                     ids.append(doc_id)
                     surfaces.append(pat)
                     begins.append(s)
@@ -305,7 +235,6 @@ def scan_mentions_linked(
     id_col: str = "doc_id",
     text_col: str = "text",
     word_boundary: bool = True,
-    engine: str = "regex",
 ) -> DataFrame:
     """FUSED scan + link + per-doc distinct (round 4): docs(id, text) →
     distinct (id, entity_id, entity_type) rows, one worker pass.
@@ -328,8 +257,6 @@ def scan_mentions_linked(
     never needs repartitioning to dedup, because the dedup key (doc)
     is born partition-local.
     """
-    if engine not in ("regex", "ac"):
-        raise ValueError(f"unknown scan engine {engine!r}")
     spark = docs.sparkSession
     id_field = docs.schema[id_col]
     norm = sorted(
@@ -352,18 +279,13 @@ def scan_mentions_linked(
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
-        key = ("linked", engine, word_boundary, len(v), dict_digest)
-        cached = _AUTOMATON_CACHE.get(key)
-        if cached is None:
-            aliases = [a for a, _ in v]
-            if engine == "regex":
-                scanner = RegexTrieScanner(aliases, word_boundary=word_boundary)
-            else:
-                scanner = AhoCorasick(aliases)
-            cached = (scanner, dict(v))
-            _AUTOMATON_CACHE[key] = cached
-        scanner, amap = cached
-        apply_boundary = word_boundary and engine == "ac"
+        scanner, amap = _cached_scanner(
+            ("linked", word_boundary, len(v), dict_digest),
+            lambda: (
+                RegexTrieScanner([a for a, _ in v], word_boundary=word_boundary),
+                dict(v),
+            ),
+        )
         for pdf in batches:
             ids: list = []
             eids: list[str] = []
@@ -372,11 +294,7 @@ def scan_mentions_linked(
                 if not isinstance(text, str) or not text:
                     continue
                 low = text.lower().translate(_WS_TO_SPACE)
-                found: set[str] = set()
-                for s, e, pat in scanner.find_all(low):
-                    if apply_boundary and not _word_bounded(low, s, e):
-                        continue
-                    found.add(pat)
+                found = {pat for _, _, pat in scanner.find_all(low)}
                 ents: set[tuple[str, str]] = set()
                 for pat in found:
                     ents.update(amap[pat])
@@ -405,15 +323,15 @@ def scan_mentions_token_join(
     """JVM-only mention detection: word n-grams (1..max_words) exploded and
     broadcast-hash-joined against the alias dim. No Python anywhere — the
     whole scan is whole-stage codegen + one broadcast join, which is the
-    preferred shape at corpus scale (the Aho-Corasick pandas UDF above is
-    the fallback for dictionaries whose entries aren't token-aligned).
+    preferred shape at corpus scale (the regex-trie pandas UDF
+    ``scan_mentions`` above is the fallback for dictionaries whose entries
+    aren't token-aligned).
 
     Semantics vs scan_mentions: matching is per whitespace-token with
-    case-folding; equal to AC + word-boundary on single-space text. (AC
-    additionally refuses matches spanning line breaks; token n-grams join
-    across any whitespace — irrelevant for dictionaries that never span
-    lines.) Output: (id, surface, token_pos) — char offsets are not
-    materialized on this path.
+    case-folding; equal to scan_mentions on text whose tokens are
+    separated by single whitespace chars (see ``_WS_TO_SPACE``); token
+    n-grams also join across whitespace RUNS. Output: (id, surface,
+    token_pos) — char offsets are not materialized on this path.
     """
     if max_words is None:
         max_words = (

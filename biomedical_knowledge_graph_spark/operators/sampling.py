@@ -311,7 +311,6 @@ def stratified_topk(
     stratum_col: str | None = None,
     descending: bool = True,
     flag_name: str = "kept",
-    impl: str = "tree",
 ) -> DataFrame:
     """Exact top-k per stratum by an EXPLICIT score column — the
     per-domain document cap of RefinedWeb-style webtext pipelines (keep
@@ -319,7 +318,7 @@ def stratified_topk(
     dominate the corpus), and the generic "best k per group" selection
     step anywhere a full window sort would not survive corpus scale.
 
-    ``impl="tree"`` (default): the same bounded-buffer tree merge as
+    The same bounded-buffer tree merge as
     weighted_priority_sample (every collect_list buffer capped, the k-th
     surviving (score, id) key per stratum broadcast back as the
     admission threshold) — only (stratum, score, id) KEY STRUCTS ever
@@ -327,27 +326,15 @@ def stratified_topk(
     window row_number shuffles FULL rows and its whole-stratum sort
     makes hot strata (head domains) the last reducer.
 
-    ``impl="window"``: plain row_number — ONE full-row shuffle and
-    fewer stages. Measured crossover (1.92 M docs × ~270 B text,
-    20 k domains, 16 cores): window 4.2 s / 626 MB shuffled vs tree
-    7.7 s / 287 MB — the window's fewer stages win wall when rows are
-    narrow, but its shuffle bytes grow with document size while the
-    tree's stay key-sized (at 2–4 KB web docs the same corpus would
-    shuffle ~6–12 GB through the window against the tree's constant
-    ~0.3 GB), and one head domain still lands on one reducer. Use
-    "window" for narrow/dim-sized frames, "tree" for corpora.
-
     Ties break on ``id_col`` ascending, so the pick is a pure function
     of the data: equal to row_number() OVER (PARTITION BY stratum ORDER
-    BY score DESC|ASC, id) <= k in any engine, for both impls.
+    BY score DESC|ASC, id) <= k in any engine.
     ``order_col`` must be non-null and integer-castable (scale floats
     yourself — the exactness contract; same rule as
     weighted_priority_sample's weights); ``id_col`` must be unique and
     integer-castable."""
     if k <= 0:
         raise ValueError(f"k must be positive: {k}")
-    if impl not in ("tree", "window"):
-        raise ValueError(f"impl must be 'tree' or 'window': {impl!r}")
     reserved = {"_s", "_key", "_pid", "_chunk", "_pb", "_top", "_thr",
                 f"_thr_{stratum_col}", flag_name} & set(df.columns)
     if reserved:
@@ -371,13 +358,6 @@ def stratified_topk(
     ).otherwise(raw_s)
     parts = [stratum_col] if stratum_col is not None else []
     base = df.withColumn("_s", -s_ok if descending else s_ok)
-    if impl == "window":
-        w = Window.partitionBy(*parts).orderBy(
-            F.col("_s").asc(), F.col(id_col).asc()
-        )
-        return base.withColumn(
-            flag_name, F.row_number().over(w) <= k
-        ).drop("_s")
     key = F.struct(F.col("_s").alias("p"), F.col(id_col).alias("i"))
     return _tree_topk_flag(base, key, parts, k, stratum_col, flag_name).drop(
         "_s"

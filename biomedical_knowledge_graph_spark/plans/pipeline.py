@@ -2,7 +2,8 @@
 
 pages(url, warc_ts, html, lang)
   ① extract: pandas UDF html→text (byte-identical)            [S1]
-  ② mention detection: Aho-Corasick Arrow scan                [§2.9]
+  ② mention detection: word-n-gram broadcast join (or a        [§2.9]
+     regex-trie scan over Arrow batches)
   ③ entity linking: broadcast alias dim                        [J1/J8]
   ④ canonicalization incl. obsolete remap                      [J3/J4, SO2]
   ⑤ entity dedup: connected components over shared-alias graph [J5]
@@ -35,11 +36,14 @@ from biomedical_knowledge_graph_spark.operators.linking import (
     resolve_obsolete,
 )
 from biomedical_knowledge_graph_spark.operators.mentions import (
-    scan_mentions,  # noqa: F401 - the unfused scan stays public API
     scan_mentions_linked,
     scan_mentions_token_join,
 )
 from biomedical_knowledge_graph_spark.sinks.table_format import SnapshotTable
+
+# "ac"-strategy dictionary bounds: dim rows, distinct lowered alias chars
+_AC_MAX_ALIASES = 2_000_000
+_AC_MAX_CHARS = 20_000_000
 
 
 @dataclass
@@ -146,10 +150,9 @@ def build_kg(
     min_cooccur: int = 3,
     triples_sink: SnapshotTable | None = None,
     run_id: str | None = None,
-    cache_links: bool = True,
     mention_strategy: str = "token_join",
     max_entities_per_doc: int | None = None,
-    prune_rare: bool | str | None = None,
+    prune_rare: bool | str = "auto",
     pair_parallelism: int | str | None = "auto",
 ) -> KGResult:
     """mention_strategy:
@@ -159,25 +162,20 @@ def build_kg(
     - ``ac``: in-worker dictionary scan (regex-trie, Arrow batches;
       needed when aliases aren't token-aligned). Round 4: this path runs
       the FUSED scan+link+canonicalize+dedup (scan_mentions_linked) —
-      identical output, no link joins, no distinct shuffle."""
+      identical output, no link joins, no distinct shuffle.
+
+    ``links`` is always persisted. ``prune_rare="auto"`` (default) probes
+    it and prunes only a measured long-tailed dim (see cooccurrence_edges;
+    the decision rides in the sink's lineage row)."""
     # ① extract + prune html immediately (keep bytes out of every shuffle)
     docs = extract_pages(pages).filter(F.length("text") > 0)
 
     # ② mention scan — dictionary ships as one broadcast
     dim_current = resolve_obsolete(entity_dim)
     if mention_strategy == "ac":
-        # the AC automaton is built from a driver-collected alias list AND
-        # rebuilt per Python worker process — the binding limit is automaton
-        # memory (pure-Python trie ≈ 150 B/char × every worker), not the
-        # collect. Guard on BOTH a row probe and an exact char sum (the sum
-        # is a distributed single-scalar aggregate, safe at any dim size;
-        # it only runs once the row probe has passed). 20M chars ≈ 3 GB of
-        # automaton per process — beyond that use token_join, which never
-        # collects and streams entirely JVM-side.
-        import os as _os
-
-        max_aliases = int(_os.environ.get("BKG_AC_MAX_ALIASES", 2_000_000))
-        max_chars = int(_os.environ.get("BKG_AC_MAX_CHARS", 20_000_000))
+        # the scanner is built from a driver-collected alias list in EVERY
+        # Python worker, so bound dim rows and alias chars; beyond them use
+        # token_join, which never collects and streams JVM-side.
         # ONE row-bounded probe + ONE collect (round 7): the old chain ran
         # five serial dim-sized jobs before any corpus work — distinct-
         # alias probe, char-sum aggregate, alias_component_map's own probe
@@ -188,10 +186,10 @@ def build_kg(
         # rows. dim rows ≥ distinct aliases, so the row probe is at least
         # as strict as the old distinct-alias probe; the exact char guard
         # runs on the collected aliases before anything big is built.
-        if dim_current.limit(max_aliases + 1).count() > max_aliases:
+        if dim_current.limit(_AC_MAX_ALIASES + 1).count() > _AC_MAX_ALIASES:
             raise ValueError(
                 "alias dictionary too large for the AC (driver-collected, "
-                "per-worker-automaton) strategy; use "
+                "per-worker-scanner) strategy; use "
                 "mention_strategy='token_join'"
             )
         dim_rows = dim_current.select(
@@ -203,10 +201,10 @@ def build_kg(
             "canonical_id",
             "entity_type",
         ).collect()
-        if sum(len(a) for a in {r["alias_lc"] for r in dim_rows}) > max_chars:
+        if sum(len(a) for a in {r["alias_lc"] for r in dim_rows}) > _AC_MAX_CHARS:
             raise ValueError(
                 "alias dictionary too large for the AC (driver-collected, "
-                "per-worker-automaton) strategy; use "
+                "per-worker-scanner) strategy; use "
                 "mention_strategy='token_join'"
             )
         # ②+③+④+⑤ FUSED (round 4): the link join (alias → canonical) and
@@ -273,10 +271,9 @@ def build_kg(
             )
             .distinct()
         )
-    if cache_links:
-        # links feed three consumers (nodes, co-occurrence, metrics); without
-        # a persist each downstream action re-runs extraction + mention scan
-        links = links.persist()
+    # links feed three consumers (nodes, co-occurrence, metrics); without
+    # a persist each downstream action re-runs extraction + mention scan
+    links = links.persist()
 
     # node table: one row per resolved entity
     nodes = links.groupBy("entity_id").agg(
@@ -287,12 +284,7 @@ def build_kg(
     # ⑥ co-occurrence triples — hash-encoded pair keys and the auto
     # df-prune probe are safe to opt into here because `links` is
     # persisted above, so each probe action costs one cached scan, not a
-    # pipeline re-run. prune_rare=None resolves to "auto" when links is
-    # cached (probe + prune only if the dim is measured long-tailed,
-    # decision recorded in the sink's lineage row), else to the static
-    # prune (one extra uncached scan beats re-running extraction twice).
-    if prune_rare is None:
-        prune_rare = "auto" if cache_links else True
+    # pipeline re-run.
     co_decision: dict = {}
     co = cooccurrence_edges(
         links,
@@ -301,7 +293,7 @@ def build_kg(
         min_count=min_cooccur,
         max_entities_per_doc=max_entities_per_doc,
         pair_parallelism=pair_parallelism,
-        encode_ids=cache_links and max_entities_per_doc is None,
+        encode_ids=max_entities_per_doc is None,
         prune_rare=prune_rare,
         decision_log=co_decision,
         # links is distinct per (doc, entity) on BOTH strategy paths

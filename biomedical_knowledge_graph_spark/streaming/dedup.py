@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import inspect
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,7 +45,7 @@ _INDEX_SCHEMAS = {
 }
 
 # every parameter that changes the BYTES the index stores: shingle width
-# (postings), hash family size / seed / impl (signature values), band
+# (postings), hash family size / seed (signature values), band
 # geometry (bucket hashes). A restart with any of these changed probes
 # the old band table with incompatible buckets and silently misses
 # cross-epoch duplicates (ADVICE r6 item 2) — so the first epoch writes
@@ -56,17 +55,15 @@ _GEOMETRY_KEYS = ("n", "num_hashes", "bands", "rows_per_band", "seed")
 
 def _effective_geometry(minhash_kwargs: dict) -> dict:
     """The resolved index geometry: explicit kwargs overlaid on the batch
-    operator's own defaults (single source of truth — no copied literals),
-    plus the env-resolved signature impl (jvm/arrow/oph produce different
-    signature values, so mixing impls across epochs corrupts the index
-    exactly like a band-geometry change)."""
+    operator's own defaults (single source of truth — no copied literals).
+    ``signature_impl`` is the constant ``"jvm"``: the signature family is
+    no longer selectable, but manifests written while it was still carry
+    the key, and those indexes must keep passing the restart check."""
     params = inspect.signature(minhash_dedup_pairs_incremental).parameters
     geo = {
         k: minhash_kwargs.get(k, params[k].default) for k in _GEOMETRY_KEYS
     }
-    geo["signature_impl"] = minhash_kwargs.get(
-        "signature_impl"
-    ) or os.environ.get("BKG_MINHASH_IMPL", "jvm")
+    geo["signature_impl"] = "jvm"
     return geo
 
 

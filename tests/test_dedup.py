@@ -73,7 +73,7 @@ def test_minhash_equals_exact_at_high_threshold(spark):
 def test_minhash_signature_properties(spark):
     sigs = {
         r.doc_id: list(r.signature)
-        for r in dedup.minhash_signatures(_docs(spark)).collect()
+        for r in dedup.minhash_signatures_jvm(_docs(spark)).collect()
     }
     assert sigs[1] == sigs[2]  # identical docs → identical signatures
     sim_34 = sum(a == b for a, b in zip(sigs[4], sigs[5])) / len(sigs[4])
@@ -105,52 +105,6 @@ def test_simhash_band_guard():
 
     with pytest.raises(ValueError):
         dedup.simhash_near_pairs(None, max_hamming=8, bands=8)
-
-
-def test_minhash_jvm_signature_parity(spark):
-    """The JVM min-aggregate signature path admits the same verified pairs
-    as the Arrow/numpy path (different hash family, same LSH semantics +
-    exact verify)."""
-    from biomedical_knowledge_graph_spark.operators import dedup as d
-
-    docs = spark.createDataFrame(
-        [(i, ("the quick brown fox jumps over the lazy dog " * 3) + (f"tail {i % 4}"))
-         for i in range(40)],
-        "doc_id long, text string",
-    )
-    outs = {
-        impl: {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in d.minhash_dedup_pairs(
-                docs, threshold=0.8, signature_impl=impl
-            ).collect()
-        }
-        for impl in ("arrow", "jvm", "oph")
-    }
-    # identical non-empty verified pairs from all three signature impls
-    assert outs["arrow"] == outs["jvm"] == outs["oph"] and outs["arrow"]
-    import pytest
-
-    with pytest.raises(ValueError):
-        d.minhash_dedup_pairs(docs, signature_impl="nope")
-
-
-def test_oph_signatures_dense_and_deterministic(spark):
-    from biomedical_knowledge_graph_spark.operators import dedup as d
-
-    docs = spark.createDataFrame(
-        [(0, "tiny doc"), (1, "a" * 200), (2, "the quick brown fox " * 10)],
-        "doc_id long, text string",
-    )
-    s1 = {r.doc_id: tuple(r.signature) for r in d.minhash_signatures_oph(docs).collect()}
-    s2 = {r.doc_id: tuple(r.signature) for r in d.minhash_signatures_oph(docs).collect()}
-    assert s1 == s2  # deterministic
-    for sig in s1.values():
-        assert len(sig) == 125  # default matches the family's 25x5 geometry
-        assert all(v >= 0 for v in sig)  # densification filled every bin
-    # doc 1 is a single repeated char: exactly ONE distinct shingle ->
-    # one filled bin, 127 borrowed — the extreme densification case
-    assert 1 in s1
 
 
 def test_banded_memberships_geometry_guard(spark):
@@ -221,39 +175,33 @@ def test_minhash_inline_size_path_matches_classic(spark):
     # round-8 optimization: sizes computed inside the signature aggregate
     # and threaded through the banded cells (ratio prefilter before the
     # candidate distinct, no sizes joins in verify) must yield the exact
-    # same verified pairs as the classic candidates + sizes-join path,
-    # for every signature impl
+    # same verified pairs as the classic candidates + sizes-join path
     docs = spark.createDataFrame(
         [(i, t) for i, (_, t) in enumerate(DOCS)], "doc_id long, text string"
     )
     sh = dedup.shingle_sets(docs, "doc_id", "text").persist()
     try:
-        for impl, fn in (
-            ("jvm", dedup.minhash_signatures_jvm),
-            ("arrow", dedup.minhash_signatures),
-            ("oph", dedup.minhash_signatures_oph),
-        ):
-            sigs = fn(docs, shingles=sh, with_size=True)
-            # sz column equals the per-doc distinct shingle count
-            got_sz = {r.doc_id: r.sz for r in sigs.collect()}
-            want_sz = {
-                r.doc_id: r.c
-                for r in sh.groupBy("doc_id").agg(F.count("*").alias("c")).collect()
-            }
-            assert got_sz == want_sz, impl
-            inline = dedup.minhash_lsh_candidates(
-                sigs, size_ratio_at_least=0.5
-            )
-            assert set(inline.columns) == {"id_a", "id_b", "sz_a", "sz_b"}
-            classic = dedup.minhash_lsh_candidates(fn(docs, shingles=sh))
-            v_inline = {
-                (r.id_a, r.id_b, r.jaccard)
-                for r in dedup.verify_pairs(inline, sh, threshold=0.5).collect()
-            }
-            v_classic = {
-                (r.id_a, r.id_b, r.jaccard)
-                for r in dedup.verify_pairs(classic, sh, threshold=0.5).collect()
-            }
-            assert v_inline == v_classic, impl
+        sigs = dedup.minhash_signatures_jvm(docs, shingles=sh, with_size=True)
+        # sz column equals the per-doc distinct shingle count
+        got_sz = {r.doc_id: r.sz for r in sigs.collect()}
+        want_sz = {
+            r.doc_id: r.c
+            for r in sh.groupBy("doc_id").agg(F.count("*").alias("c")).collect()
+        }
+        assert got_sz == want_sz
+        inline = dedup.minhash_lsh_candidates(sigs, size_ratio_at_least=0.5)
+        assert set(inline.columns) == {"id_a", "id_b", "sz_a", "sz_b"}
+        classic = dedup.minhash_lsh_candidates(
+            dedup.minhash_signatures_jvm(docs, shingles=sh)
+        )
+        v_inline = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.verify_pairs(inline, sh, threshold=0.5).collect()
+        }
+        v_classic = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.verify_pairs(classic, sh, threshold=0.5).collect()
+        }
+        assert v_inline == v_classic
     finally:
         sh.unpersist()

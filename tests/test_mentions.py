@@ -1,12 +1,16 @@
-"""Aho-Corasick mention scanner vs a naive oracle."""
+"""Dictionary mention scanners vs naive oracles; the pure-Python
+Aho-Corasick reference (tests/ac_reference.py) vs a regex oracle."""
 
 from __future__ import annotations
 
 import random
 import re
 
+from ac_reference import AhoCorasick
+
 from biomedical_knowledge_graph_spark.operators.mentions import (
-    AhoCorasick,
+    _SCANNER_CACHE,
+    _cached_scanner,
     scan_mentions,
 )
 
@@ -85,8 +89,9 @@ def test_scan_mentions_matches_naive(spark):
 
 
 def test_token_join_matches_ac_on_single_line_text(spark):
-    """The JVM token-n-gram scanner and the AC scanner agree on (doc, surface)
-    sets for token-aligned dictionaries over single-line text."""
+    """The JVM token-n-gram scanner and the in-worker regex-trie scanner
+    agree on (doc, surface) sets for token-aligned dictionaries over
+    single-line text."""
     from biomedical_knowledge_graph_spark.operators.mentions import (
         scan_mentions_token_join,
     )
@@ -136,8 +141,8 @@ def test_pipeline_strategies_agree(spark):
 
 def test_scan_mentions_linked_both_engines_equal_join(spark):
     """Operator-level fused-scan contract: scan_mentions_linked must equal
-    scan + join + per-doc distinct for BOTH engines, including nested
-    prefix aliases and multi-entity (ambiguous) aliases."""
+    scan + join + per-doc distinct, including nested prefix aliases and
+    multi-entity (ambiguous) aliases."""
     from pyspark.sql import functions as F
 
     from biomedical_knowledge_graph_spark.operators.mentions import (
@@ -179,16 +184,13 @@ def test_scan_mentions_linked_both_engines_equal_join(spark):
     assert ("d3", "E4", "gene") in want and ("d3", "E5", "drug") in want
     # word boundary: 'betamax' must NOT match the alias 'beta'
     assert not [w for w in want if w[0] == "d5"]
-    for engine in ("regex", "ac"):
-        got = sorted(
-            map(
-                tuple,
-                scan_mentions_linked(
-                    docs, link_map, id_col="doc_id", engine=engine
-                ).collect(),
-            )
+    got = sorted(
+        map(
+            tuple,
+            scan_mentions_linked(docs, link_map, id_col="doc_id").collect(),
         )
-        assert got == want, engine
+    )
+    assert got == want
 
 
 def test_regex_trie_scanner_empty_pattern_set():
@@ -206,7 +208,7 @@ def test_regex_trie_scanner_empty_pattern_set():
 def test_multiword_alias_spans_line_break(spark):
     """Round-5 parity fix: a multi-word alias whose tokens are separated
     by '\\n' in the extracted text (paragraph boundary) must be found by
-    BOTH in-worker scanners and the JVM token_join path — whitespace is a
+    the in-worker scanner and the JVM token_join path — whitespace is a
     token separator, not a literal. Found as a 6-link divergence on the
     480k campaign corpus (worker scanners did literal matching and missed
     every alias spanning a paragraph break)."""
@@ -227,28 +229,24 @@ def test_multiword_alias_spans_line_break(spark):
     # 'alpha kinase beta' spans the d1 line break; 'separated alias' a tab
     aliases = ["alpha kinase beta", "separated alias", "omega"]
 
-    for engine in ("regex", "ac"):
-        got = {
-            (r.doc_id, r.surface)
-            for r in scan_mentions(
-                docs, aliases, id_col="doc_id", engine=engine
-            ).collect()
-        }
-        assert ("d1", "alpha kinase beta") in got, engine
-        assert ("d2", "alpha kinase beta") in got, engine
-        assert ("d3", "separated alias") in got, engine
-        assert ("d1", "omega") in got, engine
+    got = {
+        (r.doc_id, r.surface)
+        for r in scan_mentions(docs, aliases, id_col="doc_id").collect()
+    }
+    assert ("d1", "alpha kinase beta") in got
+    assert ("d2", "alpha kinase beta") in got
+    assert ("d3", "separated alias") in got
+    assert ("d1", "omega") in got
 
-        linked = {
-            (r.doc_id, r.entity_id)
-            for r in scan_mentions_linked(
-                docs,
-                {a: [(f"E:{i}", "t")] for i, a in enumerate(aliases)},
-                id_col="doc_id",
-                engine=engine,
-            ).collect()
-        }
-        assert ("d1", "E:0") in linked and ("d3", "E:1") in linked, engine
+    linked = {
+        (r.doc_id, r.entity_id)
+        for r in scan_mentions_linked(
+            docs,
+            {a: [(f"E:{i}", "t")] for i, a in enumerate(aliases)},
+            id_col="doc_id",
+        ).collect()
+    }
+    assert ("d1", "E:0") in linked and ("d3", "E:1") in linked
 
     # and the JVM token_join path agrees on the same rows
     dim = spark.createDataFrame(
@@ -265,3 +263,21 @@ def test_multiword_alias_spans_line_break(spark):
         .collect()
     }
     assert ("d1", "alpha kinase beta") in tj and ("d3", "separated alias") in tj
+
+
+def test_scanner_cache_keeps_only_current_key():
+    """A reused Python worker keeps one scanner: switching dictionaries
+    evicts the previous one, and a repeated key is served from the cache."""
+    _SCANNER_CACHE.clear()
+    builds = []
+
+    def build(tag):
+        builds.append(tag)
+        return tag
+
+    assert _cached_scanner(("a",), lambda: build("A")) == "A"
+    assert _cached_scanner(("a",), lambda: build("A2")) == "A"
+    assert _cached_scanner(("b",), lambda: build("B")) == "B"
+    assert list(_SCANNER_CACHE) == [("b",)]
+    assert builds == ["A", "B"]
+    _SCANNER_CACHE.clear()

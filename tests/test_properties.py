@@ -8,8 +8,9 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
+from ac_reference import AhoCorasick, word_bounded
+
 from biomedical_knowledge_graph_spark.operators.extraction import extract_text
-from biomedical_knowledge_graph_spark.operators.mentions import AhoCorasick
 
 # -- extraction ---------------------------------------------------------------
 
@@ -79,14 +80,13 @@ def test_regex_trie_scanner_equals_aho_corasick(patterns, text, word_boundary):
     non-word chars (where \\b would differ from AC's check)."""
     from biomedical_knowledge_graph_spark.operators.mentions import (
         RegexTrieScanner,
-        _word_bounded,
     )
 
     ac = AhoCorasick(patterns)
     want = {
         (s, e, p)
         for s, e, p in ac.find_all(text)
-        if not word_boundary or _word_bounded(text, s, e)
+        if not word_boundary or word_bounded(text, s, e)
     }
     got = set(RegexTrieScanner(patterns, word_boundary=word_boundary).find_all(text))
     assert got == want

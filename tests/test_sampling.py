@@ -477,16 +477,6 @@ def test_stratified_topk_matches_window_reference(spark):
             want_kept = {r.doc_id for r in want.filter("kept").collect()}
             assert got_kept == want_kept, (desc, k)
             assert got.count() == 2000  # flag, not filter
-            # the impl="window" escape hatch (narrow/dim-sized frames)
-            # must pick the identical set
-            win_kept = {
-                r.doc_id
-                for r in stratified_topk(
-                    df.repartition(11), "doc_id", "score", k,
-                    stratum_col="dom", descending=desc, impl="window",
-                ).filter("kept").collect()
-            }
-            assert win_kept == want_kept, (desc, k)
 
     plan = stratified_topk(
         df, "doc_id", "score", 5, stratum_col="dom"

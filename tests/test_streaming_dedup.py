@@ -107,7 +107,3 @@ def test_stream_dedup_geometry_manifest(spark, tmp_path):
     with pytest.raises(pyspark.errors.StreamingQueryException) as ei:
         run("ckpt2", bands=5, rows_per_band=25)
     assert "geometry mismatch" in str(ei.value)
-    # changed signature impl → loud failure too
-    with pytest.raises(pyspark.errors.StreamingQueryException) as ei:
-        run("ckpt3", signature_impl="arrow")
-    assert "geometry mismatch" in str(ei.value)
