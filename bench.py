@@ -168,12 +168,7 @@ def main() -> None:
     # one rep lands in a quiet window
     for _ in range(3):
         t0 = time.time()
-        # 'ac' strategy: the mention scan runs in per-core Python worker
-        # processes (separate heaps) — measured faster AND better-scaling
-        # than the single-JVM token-n-gram explode, whose allocation churn
-        # plateaus near 2x in one shared heap (outputs are identical; both
-        # strategies stay available and tested)
-        result = build_kg(spark, pages, dim, min_cooccur=3, mention_strategy="ac")
+        result = build_kg(spark, pages, dim, min_cooccur=3)
         n_triples = result.triples.count()
         n_links = result.links.count()
         pipe_walls.append(time.time() - t0)

@@ -36,7 +36,6 @@ def run(
     out_root: str,
     run_id: str,
     min_cooccur: int = 3,
-    mention_strategy: str = "token_join",
 ) -> dict:
     pages = spark.read.parquet(pages_path)
     entity_dim = spark.read.parquet(dict_path)
@@ -63,7 +62,6 @@ def run(
         min_cooccur=min_cooccur,
         triples_sink=triples_sink,
         run_id=run_id,
-        mention_strategy=mention_strategy,
     )
     nodes_sink.merge_append(result.nodes, run_id=run_id)
 
@@ -101,7 +99,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument("--min-cooccur", type=int, default=3)
-    ap.add_argument("--mention-strategy", default="token_join")
     args = ap.parse_args()
     spark = get_spark("bkg-build-job")
     report = run(
@@ -111,7 +108,6 @@ def main() -> None:
         args.out,
         args.run_id,
         args.min_cooccur,
-        args.mention_strategy,
     )
     print(json.dumps({k: v for k, v in report.items() if k != "lineage"}))
 

@@ -127,7 +127,6 @@ def run(
     run_id: str,
     min_cooccur: int = 2,
     namespace: str | None = None,
-    mention_strategy: str = "ac",
 ) -> dict:
     triples_sink = SnapshotTable(
         os.path.join(out_root, "triples"),
@@ -160,7 +159,6 @@ def run(
             min_cooccur=min_cooccur,
             triples_sink=triples_sink,
             run_id=f"{run_id}-annotation",
-            mention_strategy=mention_strategy,
         )
         nodes_sink.merge_append(result.nodes, run_id=f"{run_id}-annotation")
     finally:

@@ -5,12 +5,15 @@ The reference probes in-memory dicts per record (gene cache probe,
 kg_scripts/talisman_gene_validator.py:99-145; reference-lookup probes,
 kg_scripts/go_kg_builder.py:237-304). Two Spark-native equivalents:
 
-- ``scan_mentions_token_join``: word n-grams broadcast-joined against the
-  alias dim, JVM-only — the default for token-aligned dictionaries;
 - ``scan_mentions`` / ``scan_mentions_linked``: a trie-compiled regex
   (``RegexTrieScanner``) built once per Python worker from a broadcast
   alias list, run over Arrow batches via ``mapInPandas`` — the C regex
   engine walks the trie, no per-row Python at the DataFrame layer.
+  ``build_kg`` and the kg_* queries run ``scan_mentions_linked``;
+- ``scan_mentions_token_join``: word n-grams broadcast-joined against the
+  alias dim, JVM-only; matches whole whitespace tokens only, so an alias
+  followed by punctuation ("brca1,") is missed. Kept as the reference
+  chain the fused scan is tested against.
 
 Scale notes:
 - the alias dictionary ships once per executor (Spark broadcast), not per
@@ -322,10 +325,9 @@ def scan_mentions_token_join(
 ) -> DataFrame:
     """JVM-only mention detection: word n-grams (1..max_words) exploded and
     broadcast-hash-joined against the alias dim. No Python anywhere — the
-    whole scan is whole-stage codegen + one broadcast join, which is the
-    preferred shape at corpus scale (the regex-trie pandas UDF
-    ``scan_mentions`` above is the fallback for dictionaries whose entries
-    aren't token-aligned).
+    whole scan is whole-stage codegen + one broadcast join. A token keeps
+    its punctuation, so "brca1," does not match the alias "brca1"; the
+    regex-trie ``scan_mentions`` above matches it.
 
     Semantics vs scan_mentions: matching is per whitespace-token with
     case-folding; equal to scan_mentions on text whose tokens are

@@ -2,19 +2,19 @@
 
 pages(url, warc_ts, html, lang)
   ① extract: pandas UDF html→text (byte-identical)            [S1]
-  ② mention detection: word-n-gram broadcast join (or a        [§2.9]
-     regex-trie scan over Arrow batches)
-  ③ entity linking: broadcast alias dim                        [J1/J8]
+  ② mention detection: regex-trie scan over Arrow batches      [§2.9]
+  ③ entity linking: alias map shipped with the scanner         [J1/J8]
   ④ canonicalization incl. obsolete remap                      [J3/J4, SO2]
-  ⑤ entity dedup: connected components over shared-alias graph [J5]
+  ⑤ entity dedup: union-find over the shared-alias graph       [J5]
+     (②–⑤ run as one fused scan; see build_kg)
   ⑥ relation building: co-occurrence groupBy + thresholds      [J6, A1, P6]
   ⑦ triple materialization: anti-join dedup + snapshot commit  [J2, K1]
   ⑧ metrics                                                     [A2-A11]
 
 Each stage is a DataFrame transform; nothing collects to the driver except
-final metrics. At cluster scale the pages scan is an Iceberg table and the
-sinks are Iceberg MERGE INTO; offline both ends are parquet with identical
-semantics.
+the alias dim (②–⑤) and final metrics. At cluster scale the pages scan is
+an Iceberg table and the sinks are Iceberg MERGE INTO; offline both ends
+are parquet with identical semantics.
 """
 
 from __future__ import annotations
@@ -24,26 +24,29 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biomedical_knowledge_graph_spark.operators.components import (
-    connected_components,
-)
 from biomedical_knowledge_graph_spark.operators.cooccurrence import (
     cooccurrence_edges,
 )
 from biomedical_knowledge_graph_spark.operators.extraction import extract_pages
 from biomedical_knowledge_graph_spark.operators.linking import (
-    link_mentions,
+    link_mentions,  # noqa: F401 - unused; perfbench's traced run wraps it here
     resolve_obsolete,
 )
 from biomedical_knowledge_graph_spark.operators.mentions import (
     scan_mentions_linked,
-    scan_mentions_token_join,
+    scan_mentions_token_join,  # noqa: F401 - unused; perfbench wraps it here
 )
 from biomedical_knowledge_graph_spark.sinks.table_format import SnapshotTable
 
-# "ac"-strategy dictionary bounds: dim rows, distinct lowered alias chars
+# alias-dictionary bounds of the driver-collected, per-worker scanner: dim
+# rows, distinct lowered alias chars
 _AC_MAX_ALIASES = 2_000_000
 _AC_MAX_CHARS = 20_000_000
+_TOO_LARGE = (
+    "alias dictionary too large for the driver-collected, per-worker "
+    f"scanner (bounds: {_AC_MAX_ALIASES} rows, {_AC_MAX_CHARS} distinct "
+    "lowered alias chars)"
+)
 
 
 @dataclass
@@ -59,8 +62,8 @@ def _union_find_components(pairs) -> dict[str, str]:
     sharing an alias merge; every root is the lexicographic MINIMUM
     canonical_id of its component (merges attach the higher root under
     the lower). Returns {canonical_id: resolved_id} for every id seen.
-    Shared by alias_component_map's local mode and build_kg's fused AC
-    path so both produce bit-identical resolutions."""
+    build_kg composes it into the scanner's link map; tests join it
+    into the unfused reference chain."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -83,66 +86,6 @@ def _union_find_components(pairs) -> dict[str, str]:
     return {cid: find(cid) for cid in ids}
 
 
-def alias_component_map(
-    dim_current: DataFrame, mode: str = "auto", broadcast_threshold: int = 5_000_000
-) -> DataFrame:
-    """⑤ entity resolution: ids sharing an alias merge (J5 as CC).
-
-    Returns (canonical_id, resolved_id). Two strategies:
-
-    - ``local`` (default for broadcast-sized dims): the alias dim is by
-      definition small enough to broadcast — union-find on the driver is
-      exact, one pass, and avoids ~log(n) distributed CC iterations whose
-      fixed job overhead dominates on dimension tables.
-    - ``distributed``: large-star/small-star CC over the shared-alias edge
-      list (the per-alias-minimum anchoring keeps hub aliases linear, no k²
-      pair blowup) — for linkage graphs that do NOT fit on the driver
-      (fact-scale entity resolution; see also components.resolve_entities).
-    """
-    probed = False
-    if mode == "auto":
-        # size probe BEFORE any collect: limit(k+1).count() touches at most
-        # k+1 rows; a 100M-row alias dim routes to the distributed path
-        # instead of OOMing the driver
-        probe = dim_current.limit(broadcast_threshold + 1).count()
-        mode = "local" if probe <= broadcast_threshold else "distributed"
-        probed = True
-    if mode == "local":
-        # explicit mode='local' still gets the guard; auto already probed
-        if (
-            not probed
-            and dim_current.limit(broadcast_threshold + 1).count()
-            > broadcast_threshold
-        ):
-            raise ValueError("alias dim too large for local CC; use distributed")
-        rows = dim_current.select("alias", "canonical_id").collect()
-        data = sorted(
-            _union_find_components(
-                (r["alias"], r["canonical_id"]) for r in rows
-            ).items()
-        )
-        return dim_current.sparkSession.createDataFrame(
-            data, "canonical_id string, resolved_id string"
-        )
-
-    anchor = dim_current.groupBy("alias").agg(
-        F.min("canonical_id").alias("dst")
-    )
-    edges = (
-        dim_current.join(anchor, "alias")
-        .select(F.col("canonical_id").alias("src"), "dst")
-        .filter(F.col("src") != F.col("dst"))
-    )
-    cc = connected_components(edges)
-    ids = dim_current.select("canonical_id").distinct()
-    return ids.join(
-        cc, ids["canonical_id"] == cc["node"], "left"
-    ).select(
-        "canonical_id",
-        F.coalesce(F.col("component"), F.col("canonical_id")).alias("resolved_id"),
-    )
-
-
 def build_kg(
     spark: SparkSession,
     pages: DataFrame,
@@ -150,127 +93,70 @@ def build_kg(
     min_cooccur: int = 3,
     triples_sink: SnapshotTable | None = None,
     run_id: str | None = None,
-    mention_strategy: str = "token_join",
     max_entities_per_doc: int | None = None,
     prune_rare: bool | str = "auto",
     pair_parallelism: int | str | None = "auto",
 ) -> KGResult:
-    """mention_strategy:
-    - ``token_join`` (default): JVM-only word-n-gram explode + broadcast
-      join (whole-stage codegen end to end; the 100 TB path for
-      token-aligned dictionaries);
-    - ``ac``: in-worker dictionary scan (regex-trie, Arrow batches;
-      needed when aliases aren't token-aligned). Round 4: this path runs
-      the FUSED scan+link+canonicalize+dedup (scan_mentions_linked) —
-      identical output, no link joins, no distinct shuffle.
+    """Pages and an alias dim in; docs, links, nodes and triples out.
 
-    ``links`` is always persisted. ``prune_rare="auto"`` (default) probes
+    ``links`` (doc_id, entity_id, entity_type) is distinct per (doc,
+    entity) and always persisted. ``prune_rare="auto"`` (default) probes
     it and prunes only a measured long-tailed dim (see cooccurrence_edges;
-    the decision rides in the sink's lineage row)."""
+    the decision rides in the sink's lineage row).
+
+    The alias dim is collected to the driver and every Python worker
+    builds its scanner from it, so a dim over ``_AC_MAX_ALIASES`` rows or
+    ``_AC_MAX_CHARS`` distinct lowered alias chars raises ``ValueError``."""
     # ① extract + prune html immediately (keep bytes out of every shuffle)
     docs = extract_pages(pages).filter(F.length("text") > 0)
 
-    # ② mention scan — dictionary ships as one broadcast
+    # ②–⑤ one row-bounded probe and one collect feed both size guards,
+    # the union-find components and the composed alias → (resolved id,
+    # type) map. dim rows ≥ distinct aliases, so the row probe is at
+    # least as strict as a distinct-alias probe; the exact char guard runs
+    # on the collected aliases before anything big is built.
     dim_current = resolve_obsolete(entity_dim)
-    if mention_strategy == "ac":
-        # the scanner is built from a driver-collected alias list in EVERY
-        # Python worker, so bound dim rows and alias chars; beyond them use
-        # token_join, which never collects and streams JVM-side.
-        # ONE row-bounded probe + ONE collect (round 7): the old chain ran
-        # five serial dim-sized jobs before any corpus work — distinct-
-        # alias probe, char-sum aggregate, alias_component_map's own probe
-        # + collect, then the link_rows collect — and their fixed job
-        # latency was ~25% of the whole build at bench scale. Everything
-        # they computed (size guards, union-find components, the composed
-        # alias → (resolved, type) map) derives from the same collected
-        # rows. dim rows ≥ distinct aliases, so the row probe is at least
-        # as strict as the old distinct-alias probe; the exact char guard
-        # runs on the collected aliases before anything big is built.
-        if dim_current.limit(_AC_MAX_ALIASES + 1).count() > _AC_MAX_ALIASES:
-            raise ValueError(
-                "alias dictionary too large for the AC (driver-collected, "
-                "per-worker-scanner) strategy; use "
-                "mention_strategy='token_join'"
-            )
-        dim_rows = dim_current.select(
-            # alias case-fold in SQL, not Python: the scan lowers doc text
-            # engine-side, and the dictionary side must fold identically
-            # (Python str.lower diverges on some Unicode)
-            F.lower("alias").alias("alias_lc"),
-            "alias",
-            "canonical_id",
-            "entity_type",
-        ).collect()
-        if sum(len(a) for a in {r["alias_lc"] for r in dim_rows}) > _AC_MAX_CHARS:
-            raise ValueError(
-                "alias dictionary too large for the AC (driver-collected, "
-                "per-worker-scanner) strategy; use "
-                "mention_strategy='token_join'"
-            )
-        # ②+③+④+⑤ FUSED (round 4): the link join (alias → canonical) and
-        # the component join (canonical → resolved) are both broadcast
-        # maps, and EVERY mention of a doc is produced inside that doc's
-        # scan task — so composing the maps driver-side and deduping
-        # per doc in the worker yields the same distinct
-        # (doc, entity, type) rows with NO link joins and NO distinct
-        # shuffle (the dedup key is born partition-local). Equality with
-        # the unfused chain is pinned by test_pipeline.
-        comp = _union_find_components(
-            (r["alias"], r["canonical_id"]) for r in dim_rows
-        )
-        link_rows = [
-            {
-                "alias": r["alias_lc"],
-                "canonical_id": r["canonical_id"],
-                "resolved_id": comp[r["canonical_id"]],
-                "entity_type": r["entity_type"],
-            }
-            for r in dim_rows
-        ]
-        # replicate link_mentions' dedup contract: case-duplicate dim rows
-        # collapse per (alias, canonical) with MIN entity_type (nulls lose)
-        per_ac: dict[tuple[str, str], tuple[str, str]] = {}
-        for r in link_rows:
-            k = (r["alias"], r["canonical_id"])
-            v = (r["resolved_id"], r["entity_type"])
-            cur = per_ac.get(k)
-            if (
-                cur is None
-                or cur[1] is None
-                or (v[1] is not None and v[1] < cur[1])
-            ):
-                per_ac[k] = v
-        link_map: dict[str, list[tuple[str, str]]] = {}
-        for (alias, _), v in per_ac.items():
-            link_map.setdefault(alias, []).append(v)
-        links = scan_mentions_linked(
-            docs, link_map, id_col="url", text_col="text"
-        ).select(
-            F.col("url").alias("doc_id"),
-            F.col("entity_id"),
-            "entity_type",
-        )
-    else:
-        mentions = scan_mentions_token_join(
-            docs, dim_current, id_col="url", text_col="text"
-        )
-
-        # ③ link via broadcast dim
-        linked = link_mentions(mentions, dim_current, id_col="url").filter(
-            F.col("canonical_id").isNotNull()
-        )
-
-        # ④+⑤ canonicalize: collapse ids that share aliases (CC)
-        comp_map = alias_component_map(dim_current)
-        links = (
-            linked.join(F.broadcast(comp_map), "canonical_id")
-            .select(
-                F.col("url").alias("doc_id"),
-                F.col("resolved_id").alias("entity_id"),
-                "entity_type",
-            )
-            .distinct()
-        )
+    if dim_current.limit(_AC_MAX_ALIASES + 1).count() > _AC_MAX_ALIASES:
+        raise ValueError(_TOO_LARGE)
+    dim_rows = dim_current.select(
+        # alias case-fold in SQL, not Python: the scan lowers doc text
+        # engine-side, and the dictionary side must fold identically
+        # (Python str.lower diverges on some Unicode)
+        F.lower("alias").alias("alias_lc"),
+        "alias",
+        "canonical_id",
+        "entity_type",
+    ).collect()
+    if sum(len(a) for a in {r["alias_lc"] for r in dim_rows}) > _AC_MAX_CHARS:
+        raise ValueError(_TOO_LARGE)
+    # the link map (alias → canonical) and the component map (canonical →
+    # resolved) compose driver-side, and every mention of a doc is found
+    # in that doc's scan task, so deduping per doc in the worker yields
+    # distinct (doc, entity, type) rows with no link join and no distinct
+    # shuffle. Equality with the unfused scan → link → component-join →
+    # distinct chain is pinned by test_pipeline.
+    comp = _union_find_components(
+        (r["alias"], r["canonical_id"]) for r in dim_rows
+    )
+    # link_mentions' dedup contract: case-duplicate dim rows collapse per
+    # (alias, canonical) with MIN entity_type (nulls lose)
+    per_ac: dict[tuple[str, str], tuple[str, str]] = {}
+    for r in dim_rows:
+        k = (r["alias_lc"], r["canonical_id"])
+        v = (comp[r["canonical_id"]], r["entity_type"])
+        cur = per_ac.get(k)
+        if cur is None or cur[1] is None or (v[1] is not None and v[1] < cur[1]):
+            per_ac[k] = v
+    link_map: dict[str, list[tuple[str, str]]] = {}
+    for (alias, _), v in per_ac.items():
+        link_map.setdefault(alias, []).append(v)
+    links = scan_mentions_linked(
+        docs, link_map, id_col="url", text_col="text"
+    ).select(
+        F.col("url").alias("doc_id"),
+        F.col("entity_id"),
+        "entity_type",
+    )
     # links feed three consumers (nodes, co-occurrence, metrics); without
     # a persist each downstream action re-runs extraction + mention scan
     links = links.persist()
@@ -296,9 +182,8 @@ def build_kg(
         encode_ids=max_entities_per_doc is None,
         prune_rare=prune_rare,
         decision_log=co_decision,
-        # links is distinct per (doc, entity) on BOTH strategy paths
-        # (fused per-doc dedup / explicit .distinct()), so the a-priori
-        # df prune is a plain count
+        # links is distinct per (doc, entity) (per-doc dedup in the
+        # scan), so the a-priori df prune is a plain count
         input_distinct=True,
     )
     triples = co.select(
@@ -328,7 +213,6 @@ def build_kg_increment(
     entity_dim: DataFrame,
     counts_table,
     run_id: str,
-    mention_strategy: str = "token_join",
     max_entities_per_doc: int | None = None,
     pair_parallelism: int | str | None = "auto",
 ) -> dict:
@@ -373,7 +257,6 @@ def build_kg_increment(
         min_cooccur=1,
         triples_sink=None,
         run_id=run_id,
-        mention_strategy=mention_strategy,
         max_entities_per_doc=max_entities_per_doc,
         pair_parallelism=pair_parallelism,
         # min_count=1 makes the a-priori prune inapplicable (nothing is

@@ -119,24 +119,20 @@ def test_token_join_matches_ac_on_single_line_text(spark):
 
 
 def test_pipeline_strategies_agree(spark):
+    """build_kg's Aho-Corasick mentions and the token-join scanner must
+    yield the same triples once each is linked and canonicalized."""
+    from kg_reference import triples_from_links, unfused_links
+
     from biomedical_knowledge_graph_spark import fixtures
     from biomedical_knowledge_graph_spark.plans.pipeline import build_kg
 
     pages = fixtures.pages_df(spark, n_pages=120, seed=3)
     dim = fixtures.entity_dict_df(spark)
-    t_ac = {
-        tuple(r)
-        for r in build_kg(
-            spark, pages, dim, min_cooccur=2, mention_strategy="ac"
-        ).triples.collect()
-    }
-    t_tj = {
-        tuple(r)
-        for r in build_kg(
-            spark, pages, dim, min_cooccur=2, mention_strategy="token_join"
-        ).triples.collect()
-    }
+    t_ac = {tuple(r) for r in build_kg(spark, pages, dim, min_cooccur=2).triples.collect()}
+    tj_links = {tuple(r) for r in unfused_links(spark, pages, dim).collect()}
+    t_tj = triples_from_links(spark, tj_links, min_cooccur=2)
     assert t_ac == t_tj
+    assert t_ac  # non-trivial
 
 
 def test_scan_mentions_linked_both_engines_equal_join(spark):

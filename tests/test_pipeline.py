@@ -3,9 +3,26 @@ reference ruleset (BASELINE.md target: P/R ≥ 0.95)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
+from kg_reference import triples_from_links, unfused_links
+from pyspark.sql import functions as F
+
 from biomedical_knowledge_graph_spark import fixtures
-from biomedical_knowledge_graph_spark.plans.pipeline import build_kg
-from biomedical_knowledge_graph_spark.sinks.table_format import SnapshotTable
+from biomedical_knowledge_graph_spark.operators.cooccurrence import (
+    cooccurrence_edges,
+)
+from biomedical_knowledge_graph_spark.plans import pipeline
+from biomedical_knowledge_graph_spark.plans.pipeline import (
+    build_kg,
+    build_kg_increment,
+    published_triples,
+)
+from biomedical_knowledge_graph_spark.sinks.table_format import (
+    AggregatingSnapshotTable,
+    SnapshotTable,
+)
 
 
 def test_triples_match_reference_ruleset(spark, tmp_path):
@@ -86,30 +103,84 @@ def test_cooccurrence_fanout_cap(spark):
 
 
 def test_fused_ac_links_equal_unfused_chain(spark):
-    """Round 4: the fused scan+link+canonicalize+dedup (mention_strategy
-    'ac' → scan_mentions_linked) must produce EXACTLY the unfused chain's
-    links and triples — including obsolete remaps, shared-alias component
-    resolution, and multi-entity aliases."""
-    pages = spark.createDataFrame(
-        fixtures.pages_pdf(n_pages=200, seed=7), schema=fixtures.PAGES_SCHEMA
-    )
+    """build_kg's fused scan+link+canonicalize+dedup must produce EXACTLY
+    the unfused chain's links and triples — including obsolete remaps,
+    shared-alias component resolution, and multi-entity aliases — on two
+    corpora."""
     dim = fixtures.entity_dict_df(spark)
-    fused = build_kg(spark, pages, dim, min_cooccur=2, mention_strategy="ac")
-    unfused = build_kg(
-        spark, pages, dim, min_cooccur=2, mention_strategy="token_join"
+    for pages in (
+        spark.createDataFrame(
+            fixtures.pages_pdf(n_pages=200, seed=7), schema=fixtures.PAGES_SCHEMA
+        ),
+        fixtures.pages_df(spark, n_pages=120, seed=3),
+    ):
+        fused = build_kg(spark, pages, dim, min_cooccur=2)
+        want_links = {tuple(r) for r in unfused_links(spark, pages, dim).collect()}
+        got_links = {
+            (r.doc_id, r.entity_id, r.entity_type) for r in fused.links.collect()
+        }
+        assert got_links == want_links and len(got_links) > 0
+        want_triples = triples_from_links(spark, want_links, min_cooccur=2)
+        got_triples = {tuple(r) for r in fused.triples.collect()}
+        assert got_triples == want_triples and len(got_triples) > 0
+        fused.links.unpersist()
+
+
+def _punctuation_inputs(spark):
+    html = [
+        b"<html><body><p>Loss of BRCA1, TP53 and apoptosis.</p></body></html>",
+        b"<html><body><p>BRCA1 TP53 apoptosis</p></body></html>",
+    ]
+    pages = spark.createDataFrame(
+        [
+            (f"http://p/{i}", dt.datetime(2024, 1, 1), h, None, "en")
+            for i, h in enumerate(html)
+        ],
+        schema=fixtures.PAGES_SCHEMA,
     )
-    f_links = {
-        (r.doc_id, r.entity_id, r.entity_type) for r in fused.links.collect()
-    }
-    u_links = {
-        (r.doc_id, r.entity_id, r.entity_type) for r in unfused.links.collect()
-    }
-    assert f_links == u_links and len(f_links) > 0
-    f_triples = {tuple(r) for r in fused.triples.collect()}
-    u_triples = {tuple(r) for r in unfused.triples.collect()}
-    assert f_triples == u_triples and len(f_triples) > 0
-    fused.links.unpersist()
-    unfused.links.unpersist()
+    dim = spark.createDataFrame(
+        [
+            ("BRCA1", "G:1", "gene", "ns", False, None),
+            ("TP53", "G:2", "gene", "ns", False, None),
+            ("apoptosis", "T:1", "term", "ns", False, None),
+        ],
+        schema=fixtures.ENTITY_DICT_SCHEMA,
+    )
+    return pages, dim
+
+
+_PUNCT_PAIRS = {("G:1", "G:2"), ("G:1", "T:1"), ("G:2", "T:1")}
+
+
+def test_punctuated_mentions_count_toward_weight(spark, tmp_path):
+    """"BRCA1," and "apoptosis." are mentions: with a bare second page,
+    every pair of the three entities has weight 2, in a full build and
+    in an incremental one."""
+    pages, dim = _punctuation_inputs(spark)
+    full = build_kg(spark, pages, dim, min_cooccur=2)
+    got = {(r.subj, r.obj, r.weight) for r in full.triples.collect()}
+    assert got == {(a, b, 2) for a, b in _PUNCT_PAIRS}
+    full.links.unpersist()
+
+    table = AggregatingSnapshotTable(
+        str(tmp_path / "counts"), key_cols=["subj", "obj"], agg_spec={"weight": "sum"}
+    )
+    build_kg_increment(spark, pages, dim, table, run_id="punct-0")
+    published = published_triples(spark, table, min_cooccur=2)
+    got = {(r.subj, r.obj, r.weight) for r in published.collect()}
+    assert got == {(a, b, 2) for a, b in _PUNCT_PAIRS}
+
+
+def test_alias_dictionary_size_guards(spark, monkeypatch):
+    """A dictionary over either bound fails before any corpus work."""
+    pages, dim = _punctuation_inputs(spark)
+    monkeypatch.setattr(pipeline, "_AC_MAX_ALIASES", 2)
+    with pytest.raises(ValueError, match="too large"):
+        build_kg(spark, pages, dim)
+    monkeypatch.setattr(pipeline, "_AC_MAX_ALIASES", 3)
+    monkeypatch.setattr(pipeline, "_AC_MAX_CHARS", len("brca1tp53apoptosis") - 1)
+    with pytest.raises(ValueError, match="too large"):
+        build_kg(spark, pages, dim)
 
 
 def test_apriori_prune_is_exact(spark):

@@ -3,13 +3,11 @@
 - short/empty docs through both mention strategies (sequence(1,0)==[1,0]);
 - shingle_sets / fingerprint emit nothing for texts shorter than n;
 - link_mentions case-folds dictionary aliases to match the scanners;
-- read_expression_matrix_long survives non-numeric cells under ANSI mode;
-- alias_component_map auto mode routes oversized dims to the distributed path.
+- read_expression_matrix_long survives non-numeric cells under ANSI mode.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from biomedical_knowledge_graph_spark.operators import dedup, textstats
@@ -18,7 +16,6 @@ from biomedical_knowledge_graph_spark.operators.mentions import (
     scan_mentions,
     scan_mentions_token_join,
 )
-from biomedical_knowledge_graph_spark.plans.pipeline import alias_component_map
 from biomedical_knowledge_graph_spark.sources import readers
 
 
@@ -137,30 +134,6 @@ def test_expression_matrix_na_cells(spark, tmp_path):
     long_df = readers.read_expression_matrix_long(spark, str(p), key_col="gene")
     rows = {(r.entity, r.condition, r.value) for r in long_df.collect()}
     assert rows == {("G1", "c1", 1.5), ("G2", "c2", 2.5)}
-
-
-def test_alias_component_map_auto_routes_distributed(spark):
-    """auto mode must NOT collect a dim larger than the threshold; the
-    distributed path must produce the identical component map."""
-    rows = [(f"alias{i}", f"C:{i:03d}") for i in range(40)]
-    rows += [("shared", "C:000"), ("shared", "C:001"), ("shared2", "C:002"),
-             ("shared2", "C:003")]
-    dim = spark.createDataFrame(rows, "alias string, canonical_id string")
-    local = {
-        (r.canonical_id, r.resolved_id)
-        for r in alias_component_map(dim, mode="local").collect()
-    }
-    auto_small_threshold = {
-        (r.canonical_id, r.resolved_id)
-        for r in alias_component_map(dim, mode="auto", broadcast_threshold=10).collect()
-    }
-    assert auto_small_threshold == local
-    merged = dict(local)
-    assert merged["C:001"] == "C:000"
-    assert merged["C:003"] == "C:002"
-    assert merged["C:005"] == "C:005"
-    with pytest.raises(ValueError):
-        alias_component_map(dim, mode="local", broadcast_threshold=10)
 
 
 def test_asof_bucketed_hot_key(spark):

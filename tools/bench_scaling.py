@@ -114,19 +114,13 @@ def timed_run(
     pages = spark.read.parquet(pages_path)
     n_pages = pages.count()
     dim = fixtures.synthetic_entity_dict_df(spark, 5000, seed=42)
-    strategy = os.environ.get("BKG_MENTION_STRATEGY", "ac")
     for _ in range(warm_reps):
         # small warm-up corpus run: JIT/codegen/AQE caches, not the data
-        r = build_kg(spark, pages.limit(5000), dim, min_cooccur=3,
-                     mention_strategy=strategy)
+        r = build_kg(spark, pages.limit(5000), dim, min_cooccur=3)
         r.triples.count()
         r.links.unpersist()
-    # mention_strategy='ac': the Aho-Corasick scan runs in per-core Python
-    # worker processes; the JVM token-n-gram explode is allocation-bound
-    # inside ONE shared heap and plateaus near 2x regardless of threads —
-    # a single-JVM artifact that separate executors would not share.
     t0 = time.time()
-    result = build_kg(spark, pages, dim, min_cooccur=3, mention_strategy=strategy)
+    result = build_kg(spark, pages, dim, min_cooccur=3)
     n_triples = result.triples.count()
     n_links = result.links.count()
     wall = time.time() - t0
