@@ -3,7 +3,8 @@
 NOT the driver bench (bench.py is frozen): this file exists so a single
 query can be timed with the noop sink, its physical plan captured, and
 its job/stage counts read from the Spark UI REST API — the evidence
-trail for OPTIMIZATION_r08.md and plans/r08/*.txt.
+trail for OPTIMIZATION_r08.md and the round-8 plans (plans/r08/*.txt,
+deleted after commit 6ee73c4; read them with git show).
 
 Usage:
     python bench_extra.py <query> [<query> ...] [--reps N] [--explain DIR]

@@ -23,6 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from biomedical_knowledge_graph_spark.plans import validation as V
 from biomedical_knowledge_graph_spark.plans.metrics import collect_all_metrics
 from biomedical_knowledge_graph_spark.plans.pipeline import build_kg
 from biomedical_knowledge_graph_spark.session import get_spark
@@ -64,24 +65,23 @@ def run(
         run_id=run_id,
     )
     nodes_sink.merge_append(result.nodes, run_id=run_id)
+    result.links.unpersist()
 
     # per-phase validation checkpoint (reference: go_kg_builder.py:2159-2296
     # runtime validation queries): committed edges must reference committed
     # nodes, and both tables must be non-empty — fail the job rather than
-    # report metrics over a half-built graph
-    from biomedical_knowledge_graph_spark.plans import validation as V
-
-    nodes_df = nodes_sink.read(spark)
-    triples_df = triples_sink.read(spark)
+    # report metrics over a half-built graph. The non-empty checks read
+    # the sinks' parquet footers and referential integrity rides the
+    # metrics' per-id pass: one Spark action
     vreport = V.ValidationReport()
-    V.validate_non_empty(nodes_df, "nodes", vreport)
-    V.validate_non_empty(triples_df, "triples", vreport)
-    V.validate_referential_integrity(
-        triples_df, nodes_df, ["subj", "obj"], "entity_id", vreport
-    )
+    V.record_non_empty(nodes_sink.row_count(), "nodes", vreport)
+    V.record_non_empty(triples_sink.row_count(), "triples", vreport)
+    if vreport.passed:
+        report = collect_all_metrics(
+            nodes_sink.read(spark), triples_sink.read(spark), checks=vreport
+        )
     vreport.require()
 
-    report = collect_all_metrics(nodes_df, triples_df)
     report["validation"] = vreport.to_dict()
     report["lineage"] = {
         "triples": triples_sink.lineage(),

@@ -72,9 +72,10 @@ def ontology_phase(
     )
     lineage_nodes = nodes_sink.merge_append(nodes, run_id=run_id)
     lineage_triples = triples_sink.merge_append(typed, run_id=run_id)
-    report = V.validate_non_empty(terms, "ontology_terms").to_dict()
+    n_terms = terms.count()
+    report = V.record_non_empty(n_terms, "ontology_terms").to_dict()
     return {
-        "terms": terms.count(),
+        "terms": n_terms,
         "nodes_added": lineage_nodes["rows_added"],
         "typed_triples_added": lineage_triples["rows_added"],
         "validation": report,
@@ -161,28 +162,28 @@ def run(
             run_id=f"{run_id}-annotation",
         )
         nodes_sink.merge_append(result.nodes, run_id=f"{run_id}-annotation")
+        result.links.unpersist()
     finally:
         terms.unpersist()
 
-    # Phase 3 — validation checkpoint + golden metrics + text report
-    nodes_df = nodes_sink.read(spark)
-    triples_df = triples_sink.read(spark)
+    # Phase 3 — validation checkpoint + golden metrics + text report, one
+    # Spark action: the non-empty checks read the sinks' parquet footers
+    # and referential integrity rides the metrics' per-id pass
     vreport = V.ValidationReport()
-    V.validate_non_empty(nodes_df, "nodes", vreport)
-    V.validate_non_empty(triples_df, "triples", vreport)
-    # typed edges may reference foreign-namespace terms that were filtered
-    # out (the reference keeps those dangling too and reports them) — check
-    # only co-occurrence edges for referential integrity
-    V.validate_referential_integrity(
-        triples_df.filter(F.col("pred") == "CO_OCCURS_WITH"),
-        nodes_df,
-        ["subj", "obj"],
-        "entity_id",
-        vreport,
-    )
+    V.record_non_empty(nodes_sink.row_count(), "nodes", vreport)
+    V.record_non_empty(triples_sink.row_count(), "triples", vreport)
+    if vreport.passed:
+        # typed edges may reference foreign-namespace terms that were
+        # filtered out (the reference keeps those dangling too and reports
+        # them) — check only co-occurrence edges for referential integrity
+        report = collect_all_metrics(
+            nodes_sink.read(spark),
+            triples_sink.read(spark),
+            checks=vreport,
+            checked_edges=F.col("pred") == "CO_OCCURS_WITH",
+        )
     vreport.require()
 
-    report = collect_all_metrics(nodes_df, triples_df)
     report["phase1"] = phase1
     report["validation"] = vreport.to_dict()
     report["lineage"] = {

@@ -70,7 +70,8 @@ def cooccurrence_edges(
     The probe is an ACTION — it re-runs everything upstream of ``links``
     once — so encoding defaults OFF and is opted into by callers whose
     links are persisted (the production pipeline), where the probe costs
-    one cached scan.
+    one cached scan. When the ``prune_rare="auto"`` probe runs too, the
+    injectivity probe is folded into its aggregate: one action for both.
 
     ``pair_parallelism``: partition count for the pair-explosion stage.
     The per-doc entity arrays are SMALL in bytes but explode ~k²/2 pair
@@ -121,6 +122,17 @@ def cooccurrence_edges(
     # this file's header applies to the self-join shape, not this one)
     pairs_in = links.select(doc_col, ent_col)
     prune_eligible = min_count > 1 and max_entities_per_doc is None
+    if max_entities_per_doc is not None:
+        # the fan-out cap contract is "lexicographically-first k" — hash
+        # order would silently select a different k, so the cap keeps the
+        # string path (cap users trade the encoding win for bounded skew)
+        encode_ids = False
+    # the encode_ids injectivity probe: (vocabulary size, distinct hashes)
+    id_probe = (
+        F.count("*").alias("_n"),
+        F.countDistinct(F.xxhash64(ent_col)).alias("_nh"),
+    )
+    id_stats = None
     if prune_rare == "auto":
         # round-5 auto-mode (VERDICT r4 items 2/7): the df prune is a
         # measured win on long-tailed entity dims (web dictionaries) and
@@ -146,6 +158,10 @@ def cooccurrence_edges(
             probe_agg = (
                 F.count("*") if input_distinct else F.countDistinct(doc_col)
             )
+            # with encode_ids the injectivity probe rides this aggregate:
+            # it runs on the pre-prune vocabulary, a superset of what the
+            # pairs use, and a hash injective there is injective on any
+            # subset, so the check stays exact
             stats = (
                 pairs_in.groupBy(ent_col)
                 .agg(probe_agg.alias("_df"))
@@ -155,9 +171,12 @@ def cooccurrence_edges(
                         F.when(F.col("_df") < min_count, F.col("_df"))
                         .otherwise(F.lit(0))
                     ).alias("_rare"),
+                    *(id_probe if encode_ids else ()),
                 )
                 .first()
             )
+            if encode_ids:
+                id_stats = stats
             total = stats["_total"] or 0
             rare_frac = (stats["_rare"] or 0) / total if total else 0.0
             prune_rare = rare_frac >= prune_probe_threshold
@@ -208,22 +227,15 @@ def cooccurrence_edges(
         pairs_in = pairs_in.join(F.broadcast(frequent), ent_col, "left_semi")
     decode = None
     decode_broadcast = False
-    if max_entities_per_doc is not None:
-        # the fan-out cap contract is "lexicographically-first k" — hash
-        # order would silently select a different k, so the cap keeps the
-        # string path (cap users trade the encoding win for bounded skew)
-        encode_ids = False
     if encode_ids:
         vocab = pairs_in.select(ent_col).distinct()
-        stats = vocab.agg(
-            F.count("*").alias("n"),
-            F.countDistinct(F.xxhash64(ent_col)).alias("nh"),
-        ).first()
-        if stats["n"] == stats["nh"]:  # injective on this vocabulary
+        if id_stats is None:
+            id_stats = vocab.agg(*id_probe).first()
+        if id_stats["_n"] == id_stats["_nh"]:  # injective on this vocabulary
             decode = vocab.select(
                 F.col(ent_col).alias("_ent"), F.xxhash64(ent_col).alias("_eid")
             )
-            decode_broadcast = stats["n"] <= 5_000_000
+            decode_broadcast = id_stats["_n"] <= 5_000_000
             pairs_in = pairs_in.select(
                 doc_col, F.xxhash64(ent_col).alias(ent_col)
             )

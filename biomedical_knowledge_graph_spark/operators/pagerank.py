@@ -81,8 +81,11 @@ def pagerank_fixed_point(
         )
     ).filter(F.col("src") != F.col("dst"))
     # one symmetrized edge list reused every iteration: persist and
-    # pre-shuffle on src so each iteration's join reuses the exchange
-    e = e.repartition("src").persist()
+    # pre-shuffle on src so each iteration's join reuses the exchange.
+    # The explicit count keeps that partitioning: AQE coalesces the final
+    # shuffle of a persisted plan (session.py) unless the count is pinned
+    parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = e.repartition(parts, "src").persist()
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     nodes = e.select(F.col("src").alias("node")).distinct()
     n = nodes.count()

@@ -3,18 +3,22 @@ the reference's de-facto correctness artifact
 (kg_scripts/biomedical_kg_metrics.py:165-261; golden snapshot at
 kg_scripts/neo4j_schema_outputs/biomedical_kg_metrics.json).
 
-Two passes of groupBy queries over the node/edge tables → one JSON-able dict.
-Every aggregate is exact (the thresholds in the pipeline depend on exact
-counts); at 10¹² scale the lineage counters could switch to
-approx_count_distinct, but the golden report stays exact by contract.
+GroupBy queries over the node/edge tables → one JSON-able dict
+(``collect_all_metrics``, one action) or one long-format frame
+(``metrics_summary_df``). Every aggregate is exact (the thresholds in the
+pipeline depend on exact counts); at 10¹² scale the lineage counters could
+switch to approx_count_distinct, but the golden report stays exact by
+contract.
 """
 
 from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from biomedical_knowledge_graph_spark.plans.validation import ValidationReport
 
 
 def _per_id(
@@ -23,24 +27,31 @@ def _per_id(
     id_col: str,
     subj_col: str,
     obj_col: str,
+    checked: Column | None = None,
 ) -> DataFrame:
     """One row per id of the tagged union of the edge-endpoint multiset
     (single triples scan via ``explode(array(subj, obj))``) and the node
     ids, after one shuffle on the id: ``deg`` = endpoint occurrences,
     ``is_node`` = 1 when a node row carries the id. Degree, orphan and
-    dangling aggregates all fall out of these pairs."""
+    dangling aggregates all fall out of these pairs. ``checked`` = true
+    when the id is an endpoint of a triple the ``checked`` predicate keeps
+    (every triple when None)."""
+    checked = F.lit(True) if checked is None else F.coalesce(checked, F.lit(False))
     tagged = (
         triples.select(
-            F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias(id_col)
+            F.explode(F.array(F.col(subj_col), F.col(obj_col))).alias(id_col),
+            checked.alias("_checked"),
         )
         .withColumn("_is_node", F.lit(0))
         .unionByName(
-            nodes.select(F.col(id_col)).withColumn("_is_node", F.lit(1))
+            nodes.select(F.col(id_col), F.lit(False).alias("_checked"))
+            .withColumn("_is_node", F.lit(1))
         )
     )
     return tagged.groupBy(id_col).agg(
         F.sum(F.lit(1) - F.col("_is_node")).alias("deg"),
         F.max("_is_node").alias("is_node"),
+        F.max("_checked").alias("checked"),
     )
 
 
@@ -168,74 +179,87 @@ def metrics_summary_df(
     return node_part.unionByName(total_edges).unionByName(tiers)
 
 
-def collect_all_metrics(nodes: DataFrame, triples: DataFrame) -> dict:
+def collect_all_metrics(
+    nodes: DataFrame,
+    triples: DataFrame,
+    checks: ValidationReport | None = None,
+    checked_edges: Column | None = None,
+) -> dict:
     """The full golden report (biomedical_kg_metrics.py:35-177 analogue):
     node counts by label, relationship counts by type and by confidence
     tier, degree stats over the undirected endpoint multiset, orphan nodes
     (no edges) and dangling endpoints (edge references a missing node).
 
-    Two actions, the ``metrics_summary_df`` shape:
+    One action over one tagged union of three branches, the
+    ``metrics_summary_df`` shape:
 
     1. the per-id tagged union (``_per_id``) folded into one row;
-    2. the node by-type and edge by-(pred, tier) group-bys as one tagged
-       union; every label/type/tier count and both totals are driver-side
-       sums of its rows.
+    2. the node by-type group-by;
+    3. the edge by-(pred, tier) group-by.
+
+    Every label/type/tier count and both totals are driver-side sums of
+    the group-by rows.
 
     A NULL id keeps anti-join semantics: a NULL node id is an orphan and
     a NULL endpoint is dangling (NULL never matches a key), on top of
-    counting as one connected id when it is an endpoint."""
+    counting as one connected id when it is an endpoint.
+
+    ``checks``: the same per-id pass adds the ``referential_integrity``
+    check to it, with ``validate_referential_integrity``'s count: the
+    distinct endpoints of the triples ``checked_edges`` keeps (all of them
+    when None) that no node row carries."""
     deg, is_node = F.col("deg"), F.col("is_node")
     is_null = F.col("entity_id").isNull()
-    ids = _per_id(nodes, triples, "entity_id", "subj", "obj").agg(
+    missing = (is_node == 0) | is_null
+    ids = _per_id(nodes, triples, "entity_id", "subj", "obj", checked_edges).agg(
         F.count(F.when(deg > 0, 1)).alias("connected_nodes"),
         F.sum(deg).alias("deg_sum"),
         F.max(F.when(deg > 0, deg)).alias("max_degree"),
         F.count(F.when((is_node == 1) & ((deg == 0) | is_null), 1)).alias(
             "orphan_nodes"
         ),
-        F.count(F.when((deg > 0) & ((is_node == 0) | is_null), 1)).alias(
-            "dangling_endpoints"
-        ),
-    ).collect()[0]
-
-    # the absent side's key columns are typed NULLs, so every key keeps
-    # its own column's type in the union
-    def null_of(df: DataFrame, col: str):
-        return F.lit(None).cast(df.schema[col].dataType).alias(col)
-
-    by_type = nodes.groupBy("entity_type").count().select(
-        F.lit(True).alias("is_node"),
-        "entity_type",
-        null_of(triples, "pred"),
-        null_of(triples, "confidence"),
-        "count",
+        F.count(F.when((deg > 0) & missing, 1)).alias("dangling_endpoints"),
+        F.count(F.when(F.col("checked") & missing, 1)).alias("dangling_checked"),
     )
-    by_pred_tier = triples.groupBy("pred", "confidence").count().select(
-        F.lit(False).alias("is_node"),
-        null_of(nodes, "entity_type"),
-        "pred",
-        "confidence",
-        "count",
+    # absent columns are typed NULLs in the union, so every key keeps its
+    # own column's type; ``_kind`` tells the branches apart
+    union = (
+        ids.withColumn("_kind", F.lit("ids"))
+        .unionByName(
+            nodes.groupBy("entity_type").count().withColumn("_kind", F.lit("node")),
+            allowMissingColumns=True,
+        )
+        .unionByName(
+            triples.groupBy("pred", "confidence")
+            .count()
+            .withColumn("_kind", F.lit("edge")),
+            allowMissingColumns=True,
+        )
     )
     nodes_by_type, edges_by_type, edges_by_conf = {}, Counter(), Counter()
-    for r in by_type.unionByName(by_pred_tier).collect():
-        if r["is_node"]:
+    for r in union.collect():
+        if r["_kind"] == "ids":
+            per_id = r
+        elif r["_kind"] == "node":
             nodes_by_type[r["entity_type"]] = r["count"]
         else:
             edges_by_type[r["pred"]] += r["count"]
             edges_by_conf[r["confidence"]] += r["count"]
+    if checks is not None:
+        n = per_id["dangling_checked"]
+        checks.add("referential_integrity", n == 0, n, 0)
 
-    connected = ids["connected_nodes"]
+    connected = per_id["connected_nodes"]
     return {
         "total_nodes": sum(nodes_by_type.values()),
         "nodes_by_type": nodes_by_type,
         "total_edges": sum(edges_by_type.values()),
         "edges_by_type": dict(edges_by_type),
         "connected_nodes": connected,
-        "avg_degree": round(ids["deg_sum"] / connected, 4) if connected else 0.0,
-        "max_degree": ids["max_degree"],
-        "orphan_nodes": ids["orphan_nodes"],
-        "dangling_endpoints": ids["dangling_endpoints"],
+        "avg_degree": round(per_id["deg_sum"] / connected, 4) if connected else 0.0,
+        "max_degree": per_id["max_degree"],
+        "orphan_nodes": per_id["orphan_nodes"],
+        "dangling_endpoints": per_id["dangling_endpoints"],
         "edges_by_confidence": dict(edges_by_conf),
     }
 

@@ -110,23 +110,28 @@ def build_kg(
     # ① extract + prune html immediately (keep bytes out of every shuffle)
     docs = extract_pages(pages).filter(F.length("text") > 0)
 
-    # ②–⑤ one row-bounded probe and one collect feed both size guards,
-    # the union-find components and the composed alias → (resolved id,
-    # type) map. dim rows ≥ distinct aliases, so the row probe is at
-    # least as strict as a distinct-alias probe; the exact char guard runs
+    # ②–⑤ one row-bounded collect feeds both size guards, the union-find
+    # components and the composed alias → (resolved id, type) map. It
+    # stops one row past the bound, so an oversized dim never reaches the
+    # driver whole. dim rows ≥ distinct aliases, so the row guard is at
+    # least as strict as a distinct-alias guard; the exact char guard runs
     # on the collected aliases before anything big is built.
-    dim_current = resolve_obsolete(entity_dim)
-    if dim_current.limit(_AC_MAX_ALIASES + 1).count() > _AC_MAX_ALIASES:
+    dim_rows = (
+        resolve_obsolete(entity_dim)
+        .select(
+            # alias case-fold in SQL, not Python: the scan lowers doc text
+            # engine-side, and the dictionary side must fold identically
+            # (Python str.lower diverges on some Unicode)
+            F.lower("alias").alias("alias_lc"),
+            "alias",
+            "canonical_id",
+            "entity_type",
+        )
+        .limit(_AC_MAX_ALIASES + 1)
+        .collect()
+    )
+    if len(dim_rows) > _AC_MAX_ALIASES:
         raise ValueError(_TOO_LARGE)
-    dim_rows = dim_current.select(
-        # alias case-fold in SQL, not Python: the scan lowers doc text
-        # engine-side, and the dictionary side must fold identically
-        # (Python str.lower diverges on some Unicode)
-        F.lower("alias").alias("alias_lc"),
-        "alias",
-        "canonical_id",
-        "entity_type",
-    ).collect()
     if sum(len(a) for a in {r["alias_lc"] for r in dim_rows}) > _AC_MAX_CHARS:
         raise ValueError(_TOO_LARGE)
     # the link map (alias → canonical) and the component map (canonical →

@@ -82,8 +82,18 @@ def validate_minimum_counts(
 def validate_non_empty(
     df: DataFrame, name: str, report: ValidationReport | None = None
 ) -> ValidationReport:
+    return record_non_empty(df.limit(1).count(), name, report)
+
+
+def record_non_empty(
+    rows: int, name: str, report: ValidationReport | None = None
+) -> ValidationReport:
+    """``non_empty[name]`` from a row count the caller already holds (a
+    ``count()`` it needs anyway, a sink's parquet footers): no Spark
+    action. The observed value is capped at 1, as ``validate_non_empty``'s
+    ``limit(1)`` probe sees it."""
     report = report or ValidationReport()
-    observed = df.limit(1).count()
+    observed = min(rows, 1)
     report.add(f"non_empty[{name}]", observed > 0, observed, 1)
     return report
 

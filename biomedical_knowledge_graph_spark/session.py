@@ -4,6 +4,16 @@ Settings rationale (scale-first, per SURVEY.md §4):
 - AQE on (+ skew-join splitting + partition coalescing): runtime re-planning
   replaces the reference's hand-tuned batch sizes
   (reference: kg_scripts/config/neo4j_config.py:22-26).
+- AQE also sizes persisted plans. Spark plans a cached frame with its
+  final-stage rules off (``canChangeCachedPlanOutputPartitioning`` defaults
+  to false, so readers can rely on the cache's partitioning); a cached
+  frame that ends in a shuffle then keeps every ``shuffle.partitions``
+  however small it is. The sink's staged merge batch (a ``dropDuplicates``
+  of a few thousand rows) ran its cache fill, bucket probe and write as
+  32-task stages: 192 of a warm 1 500-term ontology build's 317 tasks on
+  4 cores, where this setting leaves 131. Readers that need a cached
+  frame's partitioning pin it with an explicit count
+  (``repartition(n, col)``), which AQE never coalesces.
 - Arrow on: every Python-side kernel (extraction, mention scan) crosses the
   JVM boundary in columnar batches, never per row.
 - UTC session timezone: DuckDB-oracle parity (duckdb timestamps are
@@ -71,6 +81,11 @@ def _builder(
         # binds.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final shuffle of a persisted plan too (see
+        # the module docstring)
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(

@@ -117,11 +117,18 @@ def test_asof_join_matches_pandas_oracle(spark):
             assert ts_r <= left_ts
 
 
-def test_full_build_job_phases_and_resume(spark, tmp_path, monkeypatch):
+def test_full_build_job_phases_and_resume(
+    spark, tmp_path, monkeypatch, sql_executions
+):
     """The multi-phase orchestrator (§3.1 analogue): ontology phase commits
     term nodes + typed triples, annotation phase links pages against the
     ontology-derived dictionary, metrics/validation/report artifacts land,
-    and a replay with the same run-id commits zero new rows."""
+    and a replay with the same run-id commits zero new rows.
+
+    A first run is 10 SQL executions: phase 1's two commits and its
+    terms count; build_kg's dictionary collect and co-occurrence probe;
+    two commits per table (bucket probe + write) in phase 2; phase 3's
+    one metrics pass. An added probe or re-count fails here."""
     from biomedical_knowledge_graph_spark.jobs import full_build_job as J
 
     obo = tmp_path / "go.obo"
@@ -177,7 +184,14 @@ def test_full_build_job_phases_and_resume(spark, tmp_path, monkeypatch):
     )
 
     out = str(tmp_path / "out")
-    report = J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=2)
+    reports = []
+    n_sql = sql_executions(
+        lambda: reports.append(
+            J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=2)
+        )
+    )
+    assert n_sql == 10
+    report = reports[0]
     assert len(parse_calls) == 1
     assert report["phase1"]["terms"] == 4
     assert report["phase1"]["typed_triples_added"] == 2  # IS_A + PART_OF
@@ -200,6 +214,34 @@ def test_full_build_job_phases_and_resume(spark, tmp_path, monkeypatch):
     total_after = triples_tbl.count(spark)
     assert total_after == total_before  # exact no-op replay
     assert report2["phase1"]["typed_triples_added"] == 0
+
+
+def test_full_build_job_empty_graph_fails_before_report(spark, tmp_path):
+    """A build that commits no triple (no ontology edges, no page with two
+    terms) fails phase 3's non-empty check with ``ValidationError`` and
+    writes neither the metrics JSON nor the text report."""
+    import pytest
+
+    from biomedical_knowledge_graph_spark.jobs import full_build_job as J
+    from biomedical_knowledge_graph_spark.plans.validation import ValidationError
+
+    obo = tmp_path / "flat.obo"
+    obo.write_text(
+        "format-version: 1.2\n\n[Term]\nid: T:1\nname: alpha kinase\n\n"
+        "[Term]\nid: T:2\nname: beta channel\n"
+    )
+    pages_path = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(f"u{i}", b"<html><body>alpha kinase alone</body></html>") for i in range(4)],
+        "url string, html binary",
+    ).write.parquet(pages_path)
+    out = str(tmp_path / "out")
+    with pytest.raises(
+        ValidationError, match=r"^non_empty\[triples\]: observed=0 threshold=1$"
+    ):
+        J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=1)
+    assert not os.path.exists(os.path.join(out, "metrics-r1.json"))
+    assert not os.path.exists(os.path.join(out, "report-r1.txt"))
 
 
 def test_alias_dim_obsolete_without_replaced_by(spark, tmp_path):

@@ -352,6 +352,47 @@ def test_auto_probes_skip_unpersisted_input(spark):
     assert got == want
 
 
+def test_encode_probe_rides_prune_probe(spark, sql_executions):
+    """With ``prune_rare="auto"`` and ``encode_ids`` both on, the
+    injectivity probe is folded into the prune probe's aggregate: one
+    action at plan time instead of two, the same ``decision_log`` as
+    without encoding, and the string path's output, whether the prune
+    fires (long-tailed input) or not (dense input)."""
+    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
+        cooccurrence_edges,
+    )
+
+    tailed = [(f"d{d}", e) for d in range(5) for e in ("A", "B")]
+    tailed += [("d0", "C"), ("d1", "C"), ("d2", "D"), ("d0", "E"), ("d3", "F")]
+    dense = [(f"d{d}", e) for d in range(4) for e in ("A", "B", "C")]
+    for rows, pruned in ((tailed, True), (dense, False)):
+        links = spark.createDataFrame(
+            rows, "doc_id string, canonical_id string"
+        ).persist()
+        try:
+            logs, outs = [], []
+            for encode in (False, True):
+                log: dict = {}
+                n = sql_executions(
+                    lambda: outs.append(
+                        cooccurrence_edges(
+                            links,
+                            min_count=3,
+                            prune_rare="auto",
+                            encode_ids=encode,
+                            decision_log=log,
+                        )
+                    )
+                )
+                assert n == 1
+                logs.append(log)
+            assert logs[0] == logs[1] and logs[0]["prune_rare"] is pruned
+            want, got = (sorted(map(tuple, o.collect())) for o in outs)
+            assert got == want and len(got) == (1 if pruned else 3)
+        finally:
+            links.unpersist()
+
+
 def test_pipeline_lineage_records_prune_decision(spark, tmp_path):
     """build_kg(prune_rare='auto') surfaces the co-occurrence plan
     decision in the snapshot sink's lineage row (VERDICT r4 item 7)."""

@@ -505,29 +505,12 @@ def test_footer_counters_on_awkward_partitions(spark, tmp_path):
     assert t.read(spark).filter(F.col("p").isNull()).count() == 48
 
 
-def _sql_executions(spark, action) -> int:
-    """SQL executions ``action()`` ran, from the SQL status store once the
-    listener bus has drained. The store keeps only the newest
-    ``spark.sql.ui.retainedExecutions`` entries, so the count is taken
-    from the newest execution id (ids are sequential), not the size."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def newest() -> int:
-        bus.waitUntilEmpty()
-        n = store.executionsCount()
-        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
-
-    before = newest()
-    action()
-    return newest() - before
-
-
-def test_commit_spark_actions(spark, tmp_path):
+def test_commit_spark_actions(spark, tmp_path, sql_executions):
     """Commit bookkeeping adds no Spark action: a first commit, a delta
     append and each compaction are exactly one SQL execution (the write);
-    a merge into a non-empty bucketed table is two (bucket probe + write).
-    A counter re-derived with count()/collect() fails here."""
+    a merge into a non-empty bucketed table is two (bucket probe + write);
+    ``row_count`` reads footers and runs none. A counter re-derived with
+    count()/collect() fails here."""
     from biomedical_knowledge_graph_spark.sinks.table_format import (
         AggregatingSnapshotTable,
     )
@@ -540,10 +523,12 @@ def test_commit_spark_actions(spark, tmp_path):
         t = SnapshotTable(
             str(tmp_path / f"m{b is None}"), key_cols=["subj", "obj"], bucket_expr=b
         )
-        assert _sql_executions(spark, lambda: t.merge_append(rows(0, 30))) == 1
+        assert t.row_count() == 0
+        assert sql_executions(lambda: t.merge_append(rows(0, 30))) == 1
         expect = 2 if b else 1
-        assert _sql_executions(spark, lambda: t.merge_append(rows(20, 50))) == expect
-        assert _sql_executions(spark, lambda: t.compact(spark)) == 1
+        assert sql_executions(lambda: t.merge_append(rows(20, 50))) == expect
+        assert sql_executions(t.row_count) == 0 and t.row_count() == 50
+        assert sql_executions(lambda: t.compact(spark)) == 1
         assert t.lineage()[-1]["rows_total"] == 50
 
     a = AggregatingSnapshotTable(
@@ -553,8 +538,25 @@ def test_commit_spark_actions(spark, tmp_path):
         bucket_expr=bucket,
     )
     for run in ("d1", "d2"):
-        n = _sql_executions(spark, lambda: a.delta_append(rows(0, 30), run_id=run))
+        n = sql_executions(lambda: a.delta_append(rows(0, 30), run_id=run))
         assert n == 1
-    assert _sql_executions(spark, lambda: a.delta_append(rows(0, 30), run_id="d1")) == 0
-    assert _sql_executions(spark, lambda: a.compact(spark)) == 1
+    assert sql_executions(lambda: a.delta_append(rows(0, 30), run_id="d1")) == 0
+    assert sql_executions(lambda: a.compact(spark)) == 1
     assert a.lineage()[-1]["rows_total"] == 30
+
+
+def test_persisted_shuffle_is_coalesced(spark):
+    """AQE sizes a persisted plan's final shuffle like any other
+    (session.py): the sink's staged merge batch, a ``dropDuplicates`` of
+    ~500 rows, caches into fewer partitions than
+    ``spark.sql.shuffle.partitions``. With Spark's default every such
+    cache kept one partition, and one task per reader, per shuffle
+    partition."""
+    rows = _df(spark, [(f"s{i % 250}", f"o{i % 250}", i) for i in range(500)])
+    staged = rows.dropDuplicates(["subj", "obj"]).persist()
+    try:
+        assert staged.count() == 250
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert staged.rdd.getNumPartitions() < shuffle_parts
+    finally:
+        staged.unpersist()

@@ -56,6 +56,46 @@ def test_referential_integrity(spark):
     assert not rep.passed and rep.checks[0]["observed"] == 1
 
 
+def test_metrics_pass_integrity_and_non_empty_match_validators(spark):
+    """The checks the jobs take without a Spark action of their own equal
+    the standalone validators: ``collect_all_metrics(checks=...)`` adds
+    ``validate_referential_integrity``'s check (all triples, then only
+    the ones a predicate keeps; NULL endpoints and NULL node ids
+    included), and ``record_non_empty`` adds ``validate_non_empty``'s."""
+    from pyspark.sql import functions as F
+
+    from biomedical_knowledge_graph_spark.plans.metrics import collect_all_metrics
+
+    nodes = spark.createDataFrame(
+        [("A", "gene"), ("A", "gene"), ("B", "term"), (None, "term")],
+        "entity_id string, entity_type string",
+    )
+    triples = spark.createDataFrame(
+        [
+            ("A", "CO_OCCURS_WITH", "B", 2, "low"),
+            ("A", "CO_OCCURS_WITH", "Z", 3, "low"),
+            ("B", "CO_OCCURS_WITH", "Z", 3, "low"),
+            ("B", "IS_A", "Y", 1, None),
+            ("Y", None, None, 1, None),
+        ],
+        "subj string, pred string, obj string, weight long, confidence string",
+    )
+    for pred, want in ((None, 3), (F.col("pred") == "CO_OCCURS_WITH", 1)):
+        edges = triples if pred is None else triples.filter(pred)
+        ref = V.validate_referential_integrity(
+            edges, nodes, ["subj", "obj"], "entity_id"
+        )
+        got = V.ValidationReport()
+        plain = collect_all_metrics(nodes, triples)
+        assert collect_all_metrics(nodes, triples, got, pred) == plain
+        assert got.checks == ref.checks and ref.checks[0]["observed"] == want
+    for df, rows in ((nodes, 4), (nodes.limit(0), 0)):
+        assert (
+            V.record_non_empty(rows, "n").checks
+            == V.validate_non_empty(df, "n").checks
+        )
+
+
 def test_job_report_includes_validation(spark, tmp_path):
     """The build job runs the checkpoint and embeds the report."""
     from biomedical_knowledge_graph_spark import fixtures
