@@ -74,12 +74,12 @@ def run(
     # the sinks' parquet footers and referential integrity rides the
     # metrics' per-id pass: one Spark action
     vreport = V.ValidationReport()
-    V.record_non_empty(nodes_sink.row_count(), "nodes", vreport)
-    V.record_non_empty(triples_sink.row_count(), "triples", vreport)
-    if vreport.passed:
-        report = collect_all_metrics(
-            nodes_sink.read(spark), triples_sink.read(spark), checks=vreport
-        )
+    V.record_non_empty(nodes_sink.count(), "nodes", vreport)
+    V.record_non_empty(triples_sink.count(), "triples", vreport)
+    nodes_df, triples_df = nodes_sink.read(spark), triples_sink.read(spark)
+    if nodes_df is None or triples_df is None:
+        vreport.require()  # a table with no commit: non_empty failed
+    report = collect_all_metrics(nodes_df, triples_df, checks=vreport)
     vreport.require()
 
     report["validation"] = vreport.to_dict()

@@ -170,18 +170,20 @@ def run(
     # Spark action: the non-empty checks read the sinks' parquet footers
     # and referential integrity rides the metrics' per-id pass
     vreport = V.ValidationReport()
-    V.record_non_empty(nodes_sink.row_count(), "nodes", vreport)
-    V.record_non_empty(triples_sink.row_count(), "triples", vreport)
-    if vreport.passed:
-        # typed edges may reference foreign-namespace terms that were
-        # filtered out (the reference keeps those dangling too and reports
-        # them) — check only co-occurrence edges for referential integrity
-        report = collect_all_metrics(
-            nodes_sink.read(spark),
-            triples_sink.read(spark),
-            checks=vreport,
-            checked_edges=F.col("pred") == "CO_OCCURS_WITH",
-        )
+    V.record_non_empty(nodes_sink.count(), "nodes", vreport)
+    V.record_non_empty(triples_sink.count(), "triples", vreport)
+    nodes_df, triples_df = nodes_sink.read(spark), triples_sink.read(spark)
+    if nodes_df is None or triples_df is None:
+        vreport.require()  # a table with no commit: non_empty failed
+    # typed edges may reference foreign-namespace terms that were filtered
+    # out (the reference keeps those dangling too and reports them) —
+    # check only co-occurrence edges for referential integrity
+    report = collect_all_metrics(
+        nodes_df,
+        triples_df,
+        checks=vreport,
+        checked_edges=F.col("pred") == "CO_OCCURS_WITH",
+    )
     vreport.require()
 
     report["phase1"] = phase1

@@ -161,7 +161,10 @@ def cooccurrence_edges(
             # with encode_ids the injectivity probe rides this aggregate:
             # it runs on the pre-prune vocabulary, a superset of what the
             # pairs use, and a hash injective there is injective on any
-            # subset, so the check stays exact
+            # subset, so the check stays exact. ``_kept`` is the size of
+            # the vocabulary the prune leaves, which the decode map is
+            # built from
+            kept = F.count(F.when(F.col("_df") >= min_count, 1)).alias("_kept")
             stats = (
                 pairs_in.groupBy(ent_col)
                 .agg(probe_agg.alias("_df"))
@@ -171,15 +174,16 @@ def cooccurrence_edges(
                         F.when(F.col("_df") < min_count, F.col("_df"))
                         .otherwise(F.lit(0))
                     ).alias("_rare"),
-                    *(id_probe if encode_ids else ()),
+                    *((*id_probe, kept) if encode_ids else ()),
                 )
                 .first()
             )
-            if encode_ids:
-                id_stats = stats
             total = stats["_total"] or 0
             rare_frac = (stats["_rare"] or 0) / total if total else 0.0
             prune_rare = rare_frac >= prune_probe_threshold
+            if encode_ids:
+                vocab_n = stats["_kept"] if prune_rare else stats["_n"]
+                id_stats = (stats["_n"], stats["_nh"], vocab_n)
             if decision_log is not None:
                 decision_log.update(
                     prune_rare=bool(prune_rare),
@@ -230,12 +234,14 @@ def cooccurrence_edges(
     if encode_ids:
         vocab = pairs_in.select(ent_col).distinct()
         if id_stats is None:
-            id_stats = vocab.agg(*id_probe).first()
-        if id_stats["_n"] == id_stats["_nh"]:  # injective on this vocabulary
+            n, nh = vocab.agg(*id_probe).first()
+            id_stats = (n, nh, n)
+        n, nh, vocab_n = id_stats
+        if n == nh:  # injective on this vocabulary
             decode = vocab.select(
                 F.col(ent_col).alias("_ent"), F.xxhash64(ent_col).alias("_eid")
             )
-            decode_broadcast = id_stats["_n"] <= 5_000_000
+            decode_broadcast = vocab_n <= 5_000_000
             pairs_in = pairs_in.select(
                 doc_col, F.xxhash64(ent_col).alias(ent_col)
             )

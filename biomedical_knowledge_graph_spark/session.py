@@ -8,12 +8,10 @@ Settings rationale (scale-first, per SURVEY.md §4):
   final-stage rules off (``canChangeCachedPlanOutputPartitioning`` defaults
   to false, so readers can rely on the cache's partitioning); a cached
   frame that ends in a shuffle then keeps every ``shuffle.partitions``
-  however small it is. The sink's staged merge batch (a ``dropDuplicates``
-  of a few thousand rows) ran its cache fill, bucket probe and write as
-  32-task stages: 192 of a warm 1 500-term ontology build's 317 tasks on
-  4 cores, where this setting leaves 131. Readers that need a cached
-  frame's partitioning pin it with an explicit count
-  (``repartition(n, col)``), which AQE never coalesces.
+  however small it is, and every reader of the cache (the sink's staged
+  merge batch: its fill, bucket probe and write) runs one task per
+  partition. Readers that need a cached frame's partitioning pin it with
+  an explicit count (``repartition(n, col)``), which AQE never coalesces.
 - Arrow on: every Python-side kernel (extraction, mention scan) crosses the
   JVM boundary in columnar batches, never per row.
 - UTC session timezone: DuckDB-oracle parity (duckdb timestamps are

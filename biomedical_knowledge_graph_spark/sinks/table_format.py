@@ -473,16 +473,12 @@ class SnapshotTable:
                     os.path.join(data_dir, entry), ignore_errors=True
                 )
 
-    def row_count(self) -> int:
+    def count(self) -> int:
         """Rows in the live snapshots, from their parquet footers: no
         Spark action."""
         return sum(
             _footer_counts(f, T.StructType([]))[0] for f in self.current_files()
         )
-
-    def count(self, spark: SparkSession) -> int:
-        df = self.read(spark)
-        return 0 if df is None else df.count()
 
     def assert_unique_keys(self, spark: SparkSession) -> None:
         df = self.read(spark)

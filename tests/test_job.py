@@ -209,9 +209,9 @@ def test_full_build_job_phases_and_resume(
     assert _os.path.exists(f"{out}/metrics-r1.json")
     assert _os.path.exists(f"{out}/report-r1.txt")
 
-    total_before = triples_tbl.count(spark)
+    total_before = triples_tbl.count()
     report2 = J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=2)
-    total_after = triples_tbl.count(spark)
+    total_after = triples_tbl.count()
     assert total_after == total_before  # exact no-op replay
     assert report2["phase1"]["typed_triples_added"] == 0
 

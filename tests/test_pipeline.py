@@ -47,11 +47,11 @@ def test_triples_match_reference_ruleset(spark, tmp_path):
 
     # sink got the same triples, exactly once
     sink.assert_unique_keys(spark)
-    assert sink.count(spark) == len(got)
+    assert sink.count() == len(got)
 
     # rerun over the same input: resume contract — nothing new lands
     again = build_kg(spark, pages, dim, min_cooccur=3, triples_sink=sink)
-    assert sink.count(spark) == len(got)
+    assert sink.count() == len(got)
     assert again is not None
 
 

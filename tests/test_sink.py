@@ -21,7 +21,7 @@ def test_merge_append_idempotent(spark, tmp_path):
     # overlapping batch: only the new key lands
     r3 = t.merge_append(_df(spark, [("a", "c", 9), ("d", "e", 3)]), run_id="r3")
     assert r3["rows_added"] == 1
-    assert t.count(spark) == 3
+    assert t.count() == 3
     t.assert_unique_keys(spark)
     assert [line["run_id"] for line in t.lineage()] == ["r1", "r2", "r3"]
 
@@ -33,10 +33,10 @@ def test_crash_before_commit_is_invisible(spark, tmp_path):
     # simulate a crashed writer: orphan parquet directory, no manifest
     orphan = os.path.join(root, "data", "part-999999-deadbeef")
     _df(spark, [("zz", "zz", 0)]).write.parquet(orphan)
-    assert t.count(spark) == 1  # reader sees only manifest-listed files
+    assert t.read(spark).count() == 1  # reader sees only manifest-listed files
     # resume: rerun the batch that "crashed" — lands exactly once
     t.merge_append(_df(spark, [("zz", "zz", 0)]))
-    assert t.count(spark) == 2
+    assert t.count() == 2
 
 
 def test_dedup_within_batch(spark, tmp_path):
@@ -64,9 +64,9 @@ def test_partitioned_bucketed_sink(spark, tmp_path):
     ]
     assert len(buckets) >= 2
     # read-back is complete and idempotent merge still holds
-    assert t.count(spark) == 40
+    assert t.read(spark).count() == 40
     t.merge_append(_df(spark, rows))
-    assert t.count(spark) == 40
+    assert t.count() == 40
     # partition pruning: a _bucket filter reaches PartitionFilters
     df = t.read(spark).filter("_bucket = 1")
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -143,7 +143,7 @@ def test_compaction_bounds_snapshot_count(spark, tmp_path):
         )
     # auto-compaction kept the live snapshot-root count bounded
     assert len(t.current_files()) <= 3
-    assert t.count(spark) == 40
+    assert t.count() == 40
     t.assert_unique_keys(spark)
     # superseded snapshot dirs were physically removed
     import os
@@ -509,7 +509,7 @@ def test_commit_spark_actions(spark, tmp_path, sql_executions):
     """Commit bookkeeping adds no Spark action: a first commit, a delta
     append and each compaction are exactly one SQL execution (the write);
     a merge into a non-empty bucketed table is two (bucket probe + write);
-    ``row_count`` reads footers and runs none. A counter re-derived with
+    ``count`` reads footers and runs none. A counter re-derived with
     count()/collect() fails here."""
     from biomedical_knowledge_graph_spark.sinks.table_format import (
         AggregatingSnapshotTable,
@@ -523,11 +523,11 @@ def test_commit_spark_actions(spark, tmp_path, sql_executions):
         t = SnapshotTable(
             str(tmp_path / f"m{b is None}"), key_cols=["subj", "obj"], bucket_expr=b
         )
-        assert t.row_count() == 0
+        assert t.count() == 0
         assert sql_executions(lambda: t.merge_append(rows(0, 30))) == 1
         expect = 2 if b else 1
         assert sql_executions(lambda: t.merge_append(rows(20, 50))) == expect
-        assert sql_executions(t.row_count) == 0 and t.row_count() == 50
+        assert sql_executions(t.count) == 0 and t.count() == 50
         assert sql_executions(lambda: t.compact(spark)) == 1
         assert t.lineage()[-1]["rows_total"] == 50
 
@@ -549,9 +549,9 @@ def test_persisted_shuffle_is_coalesced(spark):
     """AQE sizes a persisted plan's final shuffle like any other
     (session.py): the sink's staged merge batch, a ``dropDuplicates`` of
     ~500 rows, caches into fewer partitions than
-    ``spark.sql.shuffle.partitions``. With Spark's default every such
-    cache kept one partition, and one task per reader, per shuffle
-    partition."""
+    ``spark.sql.shuffle.partitions``. With Spark's default such a cache
+    kept all ``spark.sql.shuffle.partitions`` partitions, and each reader
+    ran one task per partition."""
     rows = _df(spark, [(f"s{i % 250}", f"o{i % 250}", i) for i in range(500)])
     staged = rows.dropDuplicates(["subj", "obj"]).persist()
     try:

@@ -77,10 +77,10 @@ def test_stream_merge_exactly_once(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    assert table.count(spark) == df.count()
+    assert table.count() == df.count()
     # replay the same data as a fresh batch → no dupes (key-based resume)
     table.merge_append(df.select("event_id", "event_type", "value"))
-    assert table.count(spark) == df.count()
+    assert table.count() == df.count()
     table.assert_unique_keys(spark)
 
 

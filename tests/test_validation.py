@@ -89,6 +89,12 @@ def test_metrics_pass_integrity_and_non_empty_match_validators(spark):
         plain = collect_all_metrics(nodes, triples)
         assert collect_all_metrics(nodes, triples, got, pred) == plain
         assert got.checks == ref.checks and ref.checks[0]["observed"] == want
+    # over an empty node table (the jobs still run the pass when
+    # non_empty[nodes] fails) every endpoint is counted, as there
+    got, none = V.ValidationReport(), nodes.limit(0)
+    collect_all_metrics(none, triples, got)
+    ref = V.validate_referential_integrity(triples, none, ["subj", "obj"], "entity_id")
+    assert got.checks == ref.checks
     for df, rows in ((nodes, 4), (nodes.limit(0), 0)):
         assert (
             V.record_non_empty(rows, "n").checks
