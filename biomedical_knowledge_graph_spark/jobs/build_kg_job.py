@@ -30,6 +30,64 @@ from biomedical_knowledge_graph_spark.session import get_spark
 from biomedical_knowledge_graph_spark.sinks.table_format import SnapshotTable
 
 
+def kg_sinks(out_root: str) -> tuple[SnapshotTable, SnapshotTable]:
+    """The (triples, nodes) tables under ``out_root``. Both are bucketed by
+    a key hash (Iceberg bucket(16, subj) analogue: point lookups and keyed
+    joins prune to one bucket) and, being long-lived, compacted every 16
+    snapshots (Iceberg rewrite_data_files maintenance analogue)."""
+
+    def table(name: str, key_cols: list[str]) -> SnapshotTable:
+        return SnapshotTable(
+            os.path.join(out_root, name),
+            key_cols=key_cols,
+            bucket_expr=f"pmod(xxhash64({key_cols[0]}), 16)",
+            compact_after=16,
+        )
+
+    return table("triples", ["subj", "pred", "obj"]), table("nodes", ["entity_id"])
+
+
+def validate_and_report(
+    spark: SparkSession,
+    triples_sink: SnapshotTable,
+    nodes_sink: SnapshotTable,
+    out_root: str,
+    run_id: str,
+    collect_metrics,
+    extra: dict | None = None,
+    **metric_kwargs,
+) -> dict:
+    """The build jobs' last phase: validation checkpoint and golden
+    metrics in one Spark action, written to ``metrics-<run_id>.json``.
+
+    Committed edges must reference committed nodes and both tables must be
+    non-empty (reference: go_kg_builder.py:2159-2296 runtime validation
+    queries), or the job fails with ``ValidationError`` before anything is
+    written, rather than report metrics over a half-built graph. The
+    non-empty checks read the sinks' parquet footers and referential
+    integrity rides ``collect_metrics``' per-id pass; ``metric_kwargs`` go
+    to it. ``extra`` keys land in the report before ``validation`` and
+    ``lineage``."""
+    vreport = V.ValidationReport()
+    V.record_non_empty(nodes_sink.count(), "nodes", vreport)
+    V.record_non_empty(triples_sink.count(), "triples", vreport)
+    nodes_df, triples_df = nodes_sink.read(spark), triples_sink.read(spark)
+    if nodes_df is None or triples_df is None:
+        vreport.require()  # a table with no commit: non_empty failed
+    report = collect_metrics(nodes_df, triples_df, checks=vreport, **metric_kwargs)
+    vreport.require()
+
+    report.update(extra or {})
+    report["validation"] = vreport.to_dict()
+    report["lineage"] = {
+        "triples": triples_sink.lineage(),
+        "nodes": nodes_sink.lineage(),
+    }
+    with open(os.path.join(out_root, f"metrics-{run_id}.json"), "w") as f:
+        json.dump(report, f, indent=2)
+    return report
+
+
 def run(
     spark: SparkSession,
     pages_path: str,
@@ -40,22 +98,7 @@ def run(
 ) -> dict:
     pages = spark.read.parquet(pages_path)
     entity_dim = spark.read.parquet(dict_path)
-    # edge table bucketed by subject hash (Iceberg bucket(16, subj)
-    # analogue): point lookups and subj-keyed joins prune to one bucket
-    triples_sink = SnapshotTable(
-        os.path.join(out_root, "triples"),
-        key_cols=["subj", "pred", "obj"],
-        bucket_expr="pmod(xxhash64(subj), 16)",
-        # long-lived table: bound snapshot-file growth (Iceberg
-        # rewrite_data_files maintenance analogue)
-        compact_after=16,
-    )
-    nodes_sink = SnapshotTable(
-        os.path.join(out_root, "nodes"),
-        key_cols=["entity_id"],
-        bucket_expr="pmod(xxhash64(entity_id), 16)",
-        compact_after=16,
-    )
+    triples_sink, nodes_sink = kg_sinks(out_root)
     result = build_kg(
         spark,
         pages,
@@ -66,30 +109,9 @@ def run(
     )
     nodes_sink.merge_append(result.nodes, run_id=run_id)
     result.links.unpersist()
-
-    # per-phase validation checkpoint (reference: go_kg_builder.py:2159-2296
-    # runtime validation queries): committed edges must reference committed
-    # nodes, and both tables must be non-empty — fail the job rather than
-    # report metrics over a half-built graph. The non-empty checks read
-    # the sinks' parquet footers and referential integrity rides the
-    # metrics' per-id pass: one Spark action
-    vreport = V.ValidationReport()
-    V.record_non_empty(nodes_sink.count(), "nodes", vreport)
-    V.record_non_empty(triples_sink.count(), "triples", vreport)
-    nodes_df, triples_df = nodes_sink.read(spark), triples_sink.read(spark)
-    if nodes_df is None or triples_df is None:
-        vreport.require()  # a table with no commit: non_empty failed
-    report = collect_all_metrics(nodes_df, triples_df, checks=vreport)
-    vreport.require()
-
-    report["validation"] = vreport.to_dict()
-    report["lineage"] = {
-        "triples": triples_sink.lineage(),
-        "nodes": nodes_sink.lineage(),
-    }
-    with open(os.path.join(out_root, f"metrics-{run_id}.json"), "w") as f:
-        json.dump(report, f, indent=2)
-    return report
+    return validate_and_report(
+        spark, triples_sink, nodes_sink, out_root, run_id, collect_all_metrics
+    )
 
 
 def main() -> None:

@@ -31,6 +31,10 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from biomedical_knowledge_graph_spark.jobs.build_kg_job import (
+    kg_sinks,
+    validate_and_report,
+)
 from biomedical_knowledge_graph_spark.plans import validation as V
 from biomedical_knowledge_graph_spark.plans.metrics import (
     collect_all_metrics,
@@ -129,20 +133,7 @@ def run(
     min_cooccur: int = 2,
     namespace: str | None = None,
 ) -> dict:
-    triples_sink = SnapshotTable(
-        os.path.join(out_root, "triples"),
-        key_cols=["subj", "pred", "obj"],
-        bucket_expr="pmod(xxhash64(subj), 16)",
-        # long-lived table: bound snapshot-file growth (Iceberg
-        # rewrite_data_files maintenance analogue)
-        compact_after=16,
-    )
-    nodes_sink = SnapshotTable(
-        os.path.join(out_root, "nodes"),
-        key_cols=["entity_id"],
-        bucket_expr="pmod(xxhash64(entity_id), 16)",
-        compact_after=16,
-    )
+    triples_sink, nodes_sink = kg_sinks(out_root)
 
     # one OBO parse feeds BOTH phases (persisted for the duration)
     terms = read_obo_terms(spark, obo_path, namespace=namespace).persist()
@@ -166,34 +157,21 @@ def run(
     finally:
         terms.unpersist()
 
-    # Phase 3 — validation checkpoint + golden metrics + text report, one
-    # Spark action: the non-empty checks read the sinks' parquet footers
-    # and referential integrity rides the metrics' per-id pass
-    vreport = V.ValidationReport()
-    V.record_non_empty(nodes_sink.count(), "nodes", vreport)
-    V.record_non_empty(triples_sink.count(), "triples", vreport)
-    nodes_df, triples_df = nodes_sink.read(spark), triples_sink.read(spark)
-    if nodes_df is None or triples_df is None:
-        vreport.require()  # a table with no commit: non_empty failed
-    # typed edges may reference foreign-namespace terms that were filtered
+    # Phase 3 — validation checkpoint + golden metrics + text report.
+    # Typed edges may reference foreign-namespace terms that were filtered
     # out (the reference keeps those dangling too and reports them) —
-    # check only co-occurrence edges for referential integrity
-    report = collect_all_metrics(
-        nodes_df,
-        triples_df,
-        checks=vreport,
+    # check only co-occurrence edges for referential integrity.
+    # collect_all_metrics is looked up here, in this module, at call time
+    report = validate_and_report(
+        spark,
+        triples_sink,
+        nodes_sink,
+        out_root,
+        run_id,
+        collect_all_metrics,
+        extra={"phase1": phase1},
         checked_edges=F.col("pred") == "CO_OCCURS_WITH",
     )
-    vreport.require()
-
-    report["phase1"] = phase1
-    report["validation"] = vreport.to_dict()
-    report["lineage"] = {
-        "triples": triples_sink.lineage(),
-        "nodes": nodes_sink.lineage(),
-    }
-    with open(os.path.join(out_root, f"metrics-{run_id}.json"), "w") as f:
-        json.dump(report, f, indent=2)
     with open(os.path.join(out_root, f"report-{run_id}.txt"), "w") as f:
         f.write(format_report(report))
     return report

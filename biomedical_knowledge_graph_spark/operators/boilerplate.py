@@ -145,7 +145,6 @@ def remove_repeated_windows(
     text_col: str = "text",
     w: int = 10,
     min_count: int = 2,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Exact-substring dedup at token-window granularity (the
     scale-practical form of Lee et al.'s "Deduplicating Training Data
@@ -172,33 +171,15 @@ def remove_repeated_windows(
     Every exchange is key-partitioned and corpus-row-bounded; nothing
     corpus-shaped is broadcast.
 
-    Rescan ledger (VERDICT r6 item 3 — the measured persist-vs-rescan
-    decision): the shared frames are ``arr`` (token arrays; feeds the
-    token stream, the window stream, and the id/count spine) and
-    ``wins`` (window hashes; feeds the frequency aggregate and the
-    join-back). The r6 shape left both lazy and scanned the corpus 5×.
-    Measured at 480 k Zipf docs, local[16], interleaved min-of-2
-    (tools/bench_windows_shapes.py; BENCH.md round-7 table):
-
-    - ``checkpoint=False`` — pure rescan, 4 corpus scans (the spine and
-      token totals now derive from ``arr``, which removes one scan and
-      one token-stream aggregate in EVERY shape): 42.65 s;
-    - ``checkpoint="arr"`` — ``arr`` lazily localCheckpointed at
-      DISK_ONLY: one corpus scan + split, all three consumers read the
-      stored arrays; the per-window md5 transform still runs twice
-      (frequency + join-back branches): 38.33 s;
-    - ``checkpoint=True`` (default — the measured winner, 32.58 s) —
-      also checkpoints ``wins``: the w-token concat + md5 per position
-      runs ONCE; the stored window stream is ~(tokens × 44-byte hash
-      rows), corpus-scale disk I/O — but the min_count aggregate already
-      shuffles that same stream, so storing it costs bytes the job
-      moves anyway while saving a full window-hash CPU pass.
-
-    At 100 TB the same trade holds structurally: the stored stream is
-    the size of the aggregate's own exchange input, and the avoided
-    recompute (split + per-window md5 over every token position) grows
-    with the corpus. ``checkpoint="arr"`` remains the fallback when
-    executor-local disk is the binding constraint."""
+    Both shared frames are lazily localCheckpointed at DISK_ONLY: ``arr``
+    (token arrays; feeds the token stream, the window stream and the
+    id/count spine) so the corpus is scanned and split once, and ``wins``
+    (window hashes; feeds the frequency aggregate and the join-back) so
+    the w-token concat + md5 per position runs once. The stored window
+    stream is the same bytes the min_count aggregate's exchange consumes.
+    Measured against rescanning either frame at 480 k Zipf docs (BENCH.md
+    round-7 table): 32.6 s stored vs 38.3 s (``arr`` only) and 42.7 s
+    (neither)."""
     if w < 2:
         raise ValueError(f"window must be ≥ 2 tokens: {w}")
     if min_count < 2:
@@ -213,11 +194,8 @@ def remove_repeated_windows(
             f"t -> length(t) > 0)"
         ).alias("_ts"),
     )
-    if checkpoint:
-        # token-array corpus: disk, never memory
-        arr = arr.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
+    # token-array corpus: disk, never memory
+    arr = arr.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     # *_outer + null-drop, NOT plain explode: InferFiltersFromGenerate
     # would re-evaluate the expensive generator child (the token split /
     # the per-window md5 transform) two extra times per row as an
@@ -240,14 +218,7 @@ def remove_repeated_windows(
     ).filter(F.col("_w").isNotNull()).select(
         id_col, F.col("_w.pos").alias("_wpos"), F.col("_w.wh").alias("_wh")
     )
-    if checkpoint is True:
-        # full mode (measured winner, module ledger): store the window
-        # stream too so the per-window md5 transform runs once — the
-        # stored stream is the same bytes the min_count aggregate's
-        # exchange consumes
-        wins = wins.localCheckpoint(
-            eager=False, storageLevel=StorageLevel.DISK_ONLY
-        )
+    wins = wins.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
     hot = (
         wins.groupBy("_wh")
         .agg(F.count("*").alias("_c"))

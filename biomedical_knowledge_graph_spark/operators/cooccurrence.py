@@ -15,12 +15,12 @@ Scale design (SURVEY.md §7.4-3 — the quadratic blowup is here):
    map-side partial aggregation dedupes before the shuffle — equivalent
    to the reference's count-distinct-after-expansion, with no separate
    distinct shuffle);
-2. optionally cap per-doc fan-out (a doc mentioning 10⁴ entities creates
-   5·10⁷ pairs; ``max_entities_per_doc`` bounds it; NULL = exact);
-3. the self-join shuffles both sides on the doc key once — same
-   partitioning, Catalyst reuses the exchange; AQE skew-join splits giant
-   docs;
-4. pair counting is a map-side-combinable hash aggregate.
+2. pairs are emitted JVM-side from each doc's sorted entity set, never by
+   a self-join;
+3. pair counting is a map-side-combinable hash aggregate.
+
+A per-doc fan-out cap (``max_entities_per_doc``) is an operator option for
+skewed inputs; ``build_kg`` runs uncapped (exact).
 """
 
 from __future__ import annotations
@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_TIERS: tuple[tuple[int, str], ...] = ((50, "high"), (10, "medium"), (3, "low"))
+# ``prune_rare="auto"`` prunes when rare entities carry this share of links
+PRUNE_PROBE_THRESHOLD = 0.10
 
 
 def confidence_tier(count_col, tiers=DEFAULT_TIERS):
@@ -47,69 +49,50 @@ def cooccurrence_edges(
     min_count: int = 3,
     tiers=DEFAULT_TIERS,
     max_entities_per_doc: int | None = None,
-    pair_parallelism: int | str | None = "auto",
+    pair_parallelism: str | None = "auto",
     encode_ids: bool = False,
-    prune_rare: bool | str = True,
-    prune_probe_threshold: float = 0.10,
+    prune_rare: bool | str = False,
     decision_log: dict | None = None,
     input_distinct: bool = False,
-    probe_ok: bool | None = None,
 ) -> DataFrame:
     """links(doc, entity, ...) → edges(subj, obj, shared_docs, confidence)
     with subj < obj (undirected canonical form).
 
-    ``encode_ids``: run the pair explosion + count over xxhash64-encoded
-    8-byte entity keys instead of strings, decoding back after the
-    min_count filter (measured 23.5 s → 16.4 s for the phase at 16 cores,
-    120 k pages — pair rows are the pipeline's largest intermediate, and
-    fixed-width longs hash, compare and shuffle far cheaper than UTF8
-    strings). EXACT: a one-aggregate injectivity probe (count(entities) ==
-    count(distinct hashes)) guards the encoding — on a collision (odds
-    ~n²/2⁶⁵) it falls back to raw strings; the decode re-canonicalizes
-    subj < obj in STRING order, so output is byte-identical either way.
-    The probe is an ACTION — it re-runs everything upstream of ``links``
-    once — so encoding defaults OFF and is opted into by callers whose
-    links are persisted (the production pipeline), where the probe costs
-    one cached scan. When the ``prune_rare="auto"`` probe runs too, the
-    injectivity probe is folded into its aggregate: one action for both.
+    Two options run a driver ACTION over ``links`` at plan time, so both
+    act only when ``links.storageLevel`` shows the frame persisted (one
+    cached scan); on an unpersisted frame they fall back and say so in
+    ``decision_log``:
 
-    ``pair_parallelism``: partition count for the pair-explosion stage.
-    The per-doc entity arrays are SMALL in bytes but explode ~k²/2 pair
-    rows each, so AQE's byte-based coalescing (advisory 8-64 MB) happily
-    squeezes the shuffle feeding the heaviest compute of the whole
-    pipeline onto a handful of tasks — measured as a co-occurrence phase
-    whose wall was FLAT from 8 to 16 cores (37.5 s → 36.8 s at 120 k
-    pages) while every other phase kept scaling. Partitioning an
-    output-explosive stage must track its OUTPUT volume, not its input
-    bytes: "auto" pins an explicit repartition to 3× defaultParallelism
-    (explicit numPartitions is exempt from AQE coalescing); an int pins
-    that count; None keeps the raw groupBy partitioning (at true corpus
-    scale doc_sets is large enough that AQE sizes it correctly anyway).
+    - ``encode_ids``: pair explosion and count run over xxhash64-encoded
+      long keys, decoded after the min_count filter. An injectivity probe
+      (count(entities) == count(distinct hashes)) guards it; on a
+      collision it keeps the strings. The decode restores subj < obj in
+      string order, so the output is byte-identical either way.
+    - ``prune_rare="auto"``: probe the exact df distribution and drop
+      entities with df < min_count before the pair explosion (exact:
+      shared_docs(a, b) <= min(df(a), df(b))) only when they carry ≥
+      ``PRUNE_PROBE_THRESHOLD`` of the link mass. With encoding on, the
+      injectivity probe rides the same aggregate. ``False`` (default)
+      never prunes.
 
-    ``prune_rare``: True/False force the a-priori df prune on/off;
-    ``"auto"`` probes the exact df distribution (one aggregate ACTION
-    over ``links`` — prefer persisted links) and prunes only when
-    entities below ``min_count`` carry ≥ ``prune_probe_threshold`` of
-    the link mass. Output is identical under all three settings (the prune
-    is exact); only the plan differs. ``decision_log``: a dict the
-    caller owns; auto-mode records its decision + the measured rare-row
-    fraction there so pipelines can surface it in lineage rows.
+    ``pair_parallelism="auto"`` repartitions the per-doc sets to 3×
+    defaultParallelism before the explosion: the sets are small in bytes
+    but explode ~k²/2 rows each, and an explicit count is exempt from
+    AQE's byte-based coalescing. ``None`` keeps the groupBy partitioning
+    (bounded fan-out inputs, where the exchange is pure overhead).
 
-    ``probe_ok``: both auto modes (``prune_rare="auto"`` and
-    ``encode_ids``) run a driver ACTION over ``links``; on an
-    unpersisted frame that silently re-runs everything upstream once per
-    probe. VERDICT r5 item 5: the contract is now enforced in code, not
-    docstring — with the default ``probe_ok=None`` the probes run only
-    when ``links.storageLevel`` shows the frame persisted, else both
-    auto modes fall back (prune off, encoding off) with a
-    ``probe_skipped_unpersisted`` note in ``decision_log``. Pass
-    ``probe_ok=True`` to force the probes on an unpersisted frame the
-    caller knows is cheap to scan (e.g. a bare table read), or
-    ``probe_ok=False`` to forbid them outright.
-    """
-    if probe_ok is None:
-        level = links.storageLevel
-        probe_ok = bool(level.useMemory or level.useDisk)
+    ``max_entities_per_doc`` caps each doc's set at its lexicographically
+    first k entities (a skew bound, no longer exact); it keeps the string
+    path and disables the prune. ``decision_log``: a dict the caller owns
+    that receives ``prune_rare``, ``prune_rare_mode`` and
+    ``rare_row_frac``."""
+    if prune_rare not in (False, "auto") or pair_parallelism not in ("auto", None):
+        raise ValueError(
+            f"prune_rare={prune_rare!r} / pair_parallelism={pair_parallelism!r}: "
+            "prune_rare takes False or 'auto', pair_parallelism 'auto' or None"
+        )
+    level = links.storageLevel
+    probe_ok = bool(level.useMemory or level.useDisk)
     if not probe_ok and encode_ids:
         encode_ids = False
         if decision_log is not None:
@@ -133,28 +116,18 @@ def cooccurrence_edges(
         F.countDistinct(F.xxhash64(ent_col)).alias("_nh"),
     )
     id_stats = None
+    prune, mode, rare_frac = False, "explicit", None
     if prune_rare == "auto":
-        # round-5 auto-mode (VERDICT r4 items 2/7): the df prune is a
-        # measured win on long-tailed entity dims (web dictionaries) and
-        # a measured 1.57× REGRESSION on dense bounded-fan-out dims
-        # (lineitem parts: every key frequent, the extra pass is pure
-        # overhead). Decide from the exact df distribution in ONE cheap
+        # the df prune is a measured win on long-tailed entity dims (web
+        # dictionaries) and a measured 1.57× REGRESSION on dense
+        # bounded-fan-out dims (every key frequent, the extra pass is pure
+        # overhead). Decide from the exact df distribution in ONE
         # aggregate action: the same groupBy(entity) the prune itself
-        # needs, collapsed to two scalars — total (doc, entity) mass and
-        # the mass carried by entities with df < min_count (exactly the
-        # rows pruning would delete). NOTE this is an ACTION over
-        # ``links``; gated on ``probe_ok`` (persisted input or explicit
-        # caller opt-in) so an unpersisted frame never pays a silent
-        # second upstream scan.
-        prune_rare = False
-        if not probe_ok:
-            if decision_log is not None:
-                decision_log.update(
-                    prune_rare=False,
-                    prune_rare_mode="auto-skipped-unpersisted",
-                    rare_row_frac=None,
-                )
-        elif prune_eligible:
+        # needs, collapsed to the total (doc, entity) mass and the mass
+        # carried by entities with df < min_count (exactly the rows
+        # pruning would delete)
+        mode = "auto" if probe_ok else "auto-skipped-unpersisted"
+        if probe_ok and prune_eligible:
             probe_agg = (
                 F.count("*") if input_distinct else F.countDistinct(doc_col)
             )
@@ -180,29 +153,17 @@ def cooccurrence_edges(
             )
             total = stats["_total"] or 0
             rare_frac = (stats["_rare"] or 0) / total if total else 0.0
-            prune_rare = rare_frac >= prune_probe_threshold
+            prune = rare_frac >= PRUNE_PROBE_THRESHOLD
             if encode_ids:
-                vocab_n = stats["_kept"] if prune_rare else stats["_n"]
+                vocab_n = stats["_kept"] if prune else stats["_n"]
                 id_stats = (stats["_n"], stats["_nh"], vocab_n)
-            if decision_log is not None:
-                decision_log.update(
-                    prune_rare=bool(prune_rare),
-                    prune_rare_mode="auto",
-                    rare_row_frac=round(rare_frac, 6),
-                )
-        elif decision_log is not None:
-            decision_log.update(
-                prune_rare=False,
-                prune_rare_mode="auto",
-                rare_row_frac=None,
-            )
-    elif decision_log is not None:
+    if decision_log is not None:
         decision_log.update(
-            prune_rare=bool(prune_rare and prune_eligible),
-            prune_rare_mode="explicit",
-            rare_row_frac=None,
+            prune_rare=prune,
+            prune_rare_mode=mode,
+            rare_row_frac=None if rare_frac is None else round(rare_frac, 6),
         )
-    if prune_rare and prune_eligible:
+    if prune:
         # a-priori support pruning (round 4, EXACT): shared_docs(a, b) <=
         # min(df(a), df(b)), so an entity mentioned in fewer than
         # ``min_count`` docs cannot appear in ANY surviving pair — drop it
@@ -211,9 +172,7 @@ def cooccurrence_edges(
         # vocabulary while the output is provably unchanged
         # (oracle-checked; equality test with prune_rare=False). The df
         # table is entity-dim-sized and broadcast-semi-joins back — the
-        # fact side is never shuffled for the filter. Skipped under the
-        # fan-out cap: the cap's "lexicographically-first k" contract is
-        # defined on the UNpruned per-doc set.
+        # fact side is never shuffled for the filter.
         # ``input_distinct``: callers whose links are already distinct per
         # (doc, entity) — the fused scan, _doc_links — declare it so df
         # is a plain map-side-combinable count(*) (shuffles one partial
@@ -264,11 +223,9 @@ def cooccurrence_edges(
             "_ents", F.slice("_ents", 1, max_entities_per_doc)
         )
     if pair_parallelism == "auto":
-        pair_parallelism = (
+        doc_sets = doc_sets.repartition(
             links.sparkSession.sparkContext.defaultParallelism * 3
         )
-    if pair_parallelism:
-        doc_sets = doc_sets.repartition(pair_parallelism)
     # pair emission as TWO nested generators (posexplode + slice-explode)
     # instead of one flatten(transform(transform(...))) HOF: Catalyst
     # interprets higher-order-function lambdas per element (no codegen),

@@ -360,48 +360,28 @@ def minhash_dedup_pairs(
     # one shingle scan feeds both the signatures and the exact verify
     sh = shingle_sets(df, id_col, text_col, n).persist()
     try:
-        return _minhash_dedup_pairs_impl(
-            sh, id_col, threshold, num_hashes, bands, rows_per_band, seed, df,
-            text_col, n,
+        # sizes are computed as one extra aggregate of the signature pass
+        # and ride the banded cells, so the ratio prefilter runs before
+        # the candidate distinct and the verifier never re-aggregates the
+        # postings for sizes
+        cands = minhash_lsh_candidates(
+            minhash_signatures_jvm(
+                df, id_col, text_col, n, num_hashes, seed, shingles=sh,
+                with_size=True,
+            ),
+            id_col,
+            bands,
+            rows_per_band,
+            size_ratio_at_least=threshold,
+        )
+        # eager: materialize the (small) verified-pairs result and
+        # truncate lineage, so the cached shingle scan can be released
+        # below instead of leaking across repeated calls in one session
+        return verify_pairs(cands, sh, id_col, threshold).localCheckpoint(
+            eager=True
         )
     finally:
-        # the impl eagerly materializes (localCheckpoint) before returning,
-        # so the cached shingle scan is released here instead of leaking
-        # across repeated calls in one session (bench reps, oracle harness)
         sh.unpersist()
-
-
-def _minhash_dedup_pairs_impl(
-    sh: DataFrame,
-    id_col: str,
-    threshold: float,
-    num_hashes: int,
-    bands: int,
-    rows_per_band: int,
-    seed: int,
-    df: DataFrame,
-    text_col: str,
-    n: int,
-) -> DataFrame:
-    # round 8: sizes are computed as one extra aggregate of the
-    # signature pass and ride the banded cells, so the ratio prefilter
-    # runs before the candidate distinct and the verifier never
-    # re-aggregates the postings for sizes (was two more full passes
-    # over the shingle cache — one per join side)
-    cands = minhash_lsh_candidates(
-        minhash_signatures_jvm(
-            df, id_col, text_col, n, num_hashes, seed, shingles=sh,
-            with_size=True,
-        ),
-        id_col,
-        bands,
-        rows_per_band,
-        size_ratio_at_least=threshold,
-    )
-    result = verify_pairs(cands, sh, id_col, threshold)
-    # eager: materialize the (small) verified-pairs result and truncate
-    # lineage so the caller can unpersist the shared shingle scan
-    return result.localCheckpoint(eager=True)
 
 
 def verify_pairs(
@@ -516,7 +496,7 @@ class MinHashIndex:
         )
 
     def unpersist(self) -> None:
-        """Release the shared shingle cache of a persist=True index."""
+        """Release the index's shingle cache."""
         self.postings.unpersist()
 
 
@@ -529,49 +509,25 @@ def minhash_index(
     bands: int = 25,
     rows_per_band: int = 5,
     seed: int = 7,
-    persist: bool = False,
 ) -> MinHashIndex:
-    """Build the incremental-dedup index for a corpus (one signature pass
-    — the same cost as the map side of ``minhash_dedup_pairs``).
+    """Build the incremental-dedup index for a corpus (one shingling pass
+    plus one signature pass — the map side of ``minhash_dedup_pairs``).
 
-    ``persist=True`` caches the shared shingle scan so the index's three
-    frames (all derived from it) do not each recompute the corpus
-    shingling when the incremental verify references them — the same
-    recompute-per-reference trap minhash_lsh_candidates documents. Use
-    it whenever the index lives only as in-session derived plans (demos,
-    tests, the registry query) and release with ``index.unpersist()``;
-    a PRODUCTION index is three stored tables (write the frames once,
-    read them per batch), where re-reading is a scan, not a recompute,
-    and no cache is wanted.
-
-    Round 8: ``persist=True`` additionally eager-checkpoints the
-    SIGNATURE frame (doc-count × k longs — tiny) with the per-doc
-    shingle size as its free extra aggregate, and derives BOTH ``bands``
-    and ``sizes`` from it. Before, ``sizes`` was its own full
-    corpus-postings aggregate and every consumer of ``bands`` re-ran
-    the whole k-MIN signature aggregate from the shingle cache; now the
-    corpus pays one shingling pass + one signature pass, total. The
-    persist=False path keeps the lazy frames (a production pipeline
-    stores each frame once and never re-derives)."""
-    sh = shingle_sets(df, id_col, text_col, n)
-    if persist:
-        sh = sh.persist()
-        sigs = minhash_signatures_jvm(
-            df, id_col, text_col, n, num_hashes, seed, shingles=sh,
-            with_size=True,
-        ).localCheckpoint(eager=True)
-        return MinHashIndex(
-            bands=banded_memberships(sigs, id_col, bands, rows_per_band),
-            postings=sh,
-            sizes=sigs.select(id_col, "sz"),
-        )
+    The shingle scan is persisted (it is ``postings``, and the signatures
+    read it too) and the signature frame (doc-count × k longs, with the
+    per-doc shingle size as its free extra aggregate) is eagerly
+    checkpointed; ``bands`` and ``sizes`` both derive from it, so no
+    consumer re-runs the k-MIN aggregate or re-aggregates the postings.
+    Release the cache with ``index.unpersist()``."""
+    sh = shingle_sets(df, id_col, text_col, n).persist()
     sigs = minhash_signatures_jvm(
-        df, id_col, text_col, n, num_hashes, seed, shingles=sh
-    )
+        df, id_col, text_col, n, num_hashes, seed, shingles=sh,
+        with_size=True,
+    ).localCheckpoint(eager=True)
     return MinHashIndex(
         bands=banded_memberships(sigs, id_col, bands, rows_per_band),
         postings=sh,
-        sizes=sh.groupBy(id_col).agg(F.count("*").alias("sz")),
+        sizes=sigs.select(id_col, "sz"),
     )
 
 

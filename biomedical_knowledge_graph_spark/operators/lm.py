@@ -89,7 +89,6 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 1,
-    checkpoint: bool | str = True,
 ) -> DataFrame:
     """Add-k-smoothed bigram cross-entropy per document, trained on the
     corpus itself: P(w2|w1) = (C(w1,w2) + k) / (C(w1·) + k·V), score =
@@ -101,24 +100,22 @@ def bigram_lm_scores(
     scoring corpus B under model A is the same plan with the count
     tables built from A (or loaded from A's published tables).
 
-    ``checkpoint=True`` (default) lazily localCheckpoints the bigram
-    stream (DISK_ONLY) and the (w1, w2) count table so each executes
-    once, not once per consuming branch (see module docstring).
-    ``checkpoint="counts"`` stores only the count table and recomputes
-    the bigram stream for the score join-back (one extra corpus scan +
-    tokenize, zero bigram-stream disk traffic) — for deployments where
-    executor-local disk bandwidth binds before CPU."""
+    The bigram stream (DISK_ONLY) and the (w1, w2) count table are lazily
+    localCheckpointed so each executes once, not once per consuming
+    branch (see module docstring)."""
     if k <= 0:
         raise ValueError(f"smoothing k must be positive: {k}")
-    bg = doc_bigrams(df, id_col, text_col)
-    if checkpoint is True:
-        # corpus-bigram-sized: disk, never memory
-        bg = bg.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    c_bigram = bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    if checkpoint:
-        # vocabulary²-bounded (Zipf → far smaller); feeds c_left, vocab
-        # and the score join
-        c_bigram = c_bigram.localCheckpoint(eager=False)
+    # corpus-bigram-sized: disk, never memory
+    bg = doc_bigrams(df, id_col, text_col).localCheckpoint(
+        eager=False, storageLevel=StorageLevel.DISK_ONLY
+    )
+    # vocabulary²-bounded (Zipf → far smaller); feeds c_left, vocab and
+    # the score join
+    c_bigram = (
+        bg.groupBy("w1", "w2")
+        .agg(F.count("*").alias("c12"))
+        .localCheckpoint(eager=False)
+    )
     # C(w1·) derived from the count table, not the raw stream: every
     # bigram starting with w1 is a (w1, w2) row with multiplicity c12
     c_left = c_bigram.groupBy("w1").agg(F.sum("c12").alias("c1"))

@@ -44,15 +44,12 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(node, degree, triangles, clustering) for every node in the
     undirected simple graph induced by ``edges`` (self-loops dropped,
-    direction and duplicates ignored).
-
-    ``checkpoint=True`` (default) lazily localCheckpoints the shared
-    ``und``/``deg``/``oriented`` frames so the input subtree executes
-    once, not once per consuming branch (see module docstring).
+    direction and duplicates ignored). The shared ``und``/``deg``/
+    ``oriented`` frames are lazily localCheckpointed so the input subtree
+    executes once, not once per consuming branch (see module docstring).
     """
     und = (
         edges.select(
@@ -61,18 +58,16 @@ def triangle_counts(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        und = und.localCheckpoint(eager=False)
     # one explode over und, not a self-union of two projections: half
     # the reads of the (checkpointed) edge list
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=False)
     # orient a→b iff rank(a) < rank(b), rank = (degree, id)
     da = deg.select(
         F.col("node").alias("a"), F.col("degree").alias("_dega")
@@ -89,11 +84,7 @@ def triangle_counts(
         F.when(fwd, F.struct("_degb", F.col("b").alias("n")))
         .otherwise(F.struct(F.col("_dega").alias("_degb"), F.col("a").alias("n")))
         .alias("v"),
-    )
-    if checkpoint:
-        # feeds BOTH the wedge generator and the closing edge set — left
-        # lazy, the two rank joins above re-execute per branch
-        oriented = oriented.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)  # feeds the wedges and the closing edges
     # wedges from per-node rank-sorted out-neighbor arrays; pairs emitted
     # in rank order so the closing edge has the same orientation
     wedges = (

@@ -93,16 +93,14 @@ def build_kg(
     min_cooccur: int = 3,
     triples_sink: SnapshotTable | None = None,
     run_id: str | None = None,
-    max_entities_per_doc: int | None = None,
-    prune_rare: bool | str = "auto",
-    pair_parallelism: int | str | None = "auto",
 ) -> KGResult:
     """Pages and an alias dim in; docs, links, nodes and triples out.
 
     ``links`` (doc_id, entity_id, entity_type) is distinct per (doc,
-    entity) and always persisted. ``prune_rare="auto"`` (default) probes
-    it and prunes only a measured long-tailed dim (see cooccurrence_edges;
-    the decision rides in the sink's lineage row).
+    entity) and always persisted. Co-occurrence runs uncapped over
+    hash-encoded ids with ``prune_rare="auto"``: it probes ``links`` and
+    prunes only a measured long-tailed dim (see cooccurrence_edges; the
+    decision rides in the sink's lineage row).
 
     The alias dim is collected to the driver and every Python worker
     builds its scanner from it, so a dim over ``_AC_MAX_ALIASES`` rows or
@@ -182,10 +180,8 @@ def build_kg(
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=min_cooccur,
-        max_entities_per_doc=max_entities_per_doc,
-        pair_parallelism=pair_parallelism,
-        encode_ids=max_entities_per_doc is None,
-        prune_rare=prune_rare,
+        encode_ids=True,
+        prune_rare="auto",
         decision_log=co_decision,
         # links is distinct per (doc, entity) (per-doc dedup in the
         # scan), so the a-priori df prune is a plain count
@@ -218,8 +214,6 @@ def build_kg_increment(
     entity_dim: DataFrame,
     counts_table,
     run_id: str,
-    max_entities_per_doc: int | None = None,
-    pair_parallelism: int | str | None = "auto",
 ) -> dict:
     """Process ONLY a new batch of pages and fold its co-occurrence counts
     into a long-lived counter table — the operational shape a 10¹²-doc
@@ -228,18 +222,16 @@ def build_kg_increment(
 
     Correctness rests on one algebraic fact: ``shared_docs(a, b)`` is a
     count of DISTINCT documents, and crawl increments are disjoint
-    document sets, so per-increment partial counts ADD exactly. Three
+    document sets, so per-increment partial counts ADD exactly. Two
     consequences shape the implementation:
 
-    - the increment's pair counts run at ``min_count=1`` with NO df
-      pruning: a pair below today's publication threshold may be promoted
-      by a future increment, so the counter table must keep the
+    - the increment's pair counts run at ``min_count=1``, where the df
+      prune is ineligible (nothing is below support 1) and its probe
+      never runs: a pair below today's publication threshold may be
+      promoted by a future increment, so the counter table must keep the
       sub-threshold tail (the same tail any exact incremental counter
       keeps; thresholds/tiers are applied at READ time by
       ``published_triples``);
-    - the per-doc fan-out cap stays available (it is doc-local, so it is
-      increment-exact: capping doc d's entity set gives the same pairs no
-      matter which increment d arrives in);
     - the sink is an ``AggregatingSnapshotTable`` (merge-on-read deltas):
       the commit appends only the increment's pre-aggregated partials —
       per-increment cost is proportional to the increment, never to the
@@ -262,11 +254,6 @@ def build_kg_increment(
         min_cooccur=1,
         triples_sink=None,
         run_id=run_id,
-        max_entities_per_doc=max_entities_per_doc,
-        pair_parallelism=pair_parallelism,
-        # min_count=1 makes the a-priori prune inapplicable (nothing is
-        # below support 1) — skip even the auto probe's action
-        prune_rare=False,
     )
     partial = result.triples.select("subj", "obj", F.col("weight"))
     lineage = counts_table.delta_append(partial, run_id=run_id)

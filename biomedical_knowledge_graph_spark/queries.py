@@ -217,7 +217,6 @@ def kg_golden_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ent_col="entity_id",
         min_count=20,
         tiers=((300, "high"), (150, "medium"), (50, "low"), (20, "weak")),
-        prune_rare=False,
         input_distinct=True,  # fused scan emits per-doc-distinct links
         # bounded per-doc fan-out: pair output ~ input, so the
         # explosive-stage repartition is pure overhead (round-8
@@ -262,10 +261,6 @@ def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ent_col="entity_id",
         min_count=20,
         tiers=((300, "high"), (150, "medium"), (50, "low"), (20, "weak")),
-        # the testdata dictionary is dim-sized and all-frequent, and links
-        # is unpersisted here — the df prune would just re-run the scan
-        # (kg_golden_metrics exercises pruning over persisted links)
-        prune_rare=False,
         # bounded per-doc fan-out: pair output ~ input, so the
         # explosive-stage repartition is pure overhead (round-8
         # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
@@ -334,12 +329,6 @@ def kg_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             doc_col="l_orderkey",
             ent_col="l_partkey",
             min_count=3,
-            # dense dim, bounded fan-out (≤7 lineitems/order, every part
-            # in ~30 orders at sf1): nothing is rare, so the a-priori df
-            # prune is a pure extra pass — measured 1.57× slower in r4
-            # (VERDICT r4 item 2). The long-tailed-dim win lives in the
-            # web pipeline, which uses prune_rare="auto".
-            prune_rare=False,
             # bounded per-doc fan-out: pair output ~ input, so the
             # explosive-stage repartition is pure overhead (round-8
             # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
@@ -2329,7 +2318,6 @@ def kg_triples_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc_col="doc_id",
                 ent_col="entity_id",
                 min_count=1,  # keep the sub-threshold tail: exactness
-                prune_rare=False,
                 input_distinct=True,
             ).select("subj", "obj", F.col("shared_docs").alias("weight"))
             table.delta_append(partial, run_id=f"crawl-{i}")
@@ -2434,7 +2422,6 @@ def kg_triples_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc_col="doc_id",
                 ent_col="entity_id",
                 min_count=1,
-                prune_rare=False,
                 input_distinct=True,
             ).select("subj", "obj", F.col("shared_docs").alias("weight"))
             table.delta_append(partial, run_id=f"crawl-{i}")
@@ -2550,7 +2537,6 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=20,
-        prune_rare=False,
         # bounded per-doc fan-out: pair output ~ input, so the
         # explosive-stage repartition is pure overhead (round-8
         # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
@@ -3469,7 +3455,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents", parallelize=True)
     baseline = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) != 0)
     new_batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(4)) == 0)
-    index = _dd.minhash_index(baseline, persist=True)
+    index = _dd.minhash_index(baseline)
     try:
         return _dd.minhash_dedup_pairs_incremental(new_batch, index)
     finally:
@@ -3984,7 +3970,6 @@ def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=20,
-        prune_rare=False,
         # bounded per-doc fan-out: pair output ~ input, so the
         # explosive-stage repartition is pure overhead (round-8
         # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;

@@ -201,12 +201,9 @@ def stream_dedup_minhash(
             pairs.write.mode("overwrite").parquet(
                 f"{pairs_dir}/epoch={epoch_id}"
             )
-            # persist=True: the three index frames share one cached
-            # shingle scan across their three writes instead of
-            # re-shingling the batch per write
-            idx = minhash_index(
-                batch_df, id_col, text_col, persist=True, **minhash_kwargs
-            )
+            # the three index frames share one cached shingle scan across
+            # their three writes instead of re-shingling the batch per write
+            idx = minhash_index(batch_df, id_col, text_col, **minhash_kwargs)
             try:
                 for name, frame in (
                     ("bands", idx.bands),

@@ -66,7 +66,6 @@ def triples_from_links(spark, links, min_cooccur):
         ),
         ent_col="entity_id",
         min_count=min_cooccur,
-        prune_rare=False,
     )
     return {
         tuple(r)

@@ -160,10 +160,10 @@ def test_remove_repeated_windows_overlap_merge(spark):
 
 
 def test_remove_repeated_windows_plan_shape_and_shapes_agree(spark, tmp_path):
-    """VERDICT r6 item 3: with the default full checkpoint the outer
-    plan reads the corpus through stored RDDs only; all three checkpoint
-    shapes are value-identical (the 480 k measurement in BENCH.md picked
-    the default)."""
+    """VERDICT r6 item 3: with ``arr`` and ``wins`` checkpointed the outer
+    plan reads the corpus through stored RDDs only (the 480 k measurement
+    in BENCH.md picked this shape over the rescanning ones). Values are
+    pinned by the Python-reference tests."""
     from biomedical_knowledge_graph_spark.operators.boilerplate import (
         remove_repeated_windows,
     )
@@ -184,15 +184,3 @@ def test_remove_repeated_windows_plan_shape_and_shapes_agree(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 0, plan
     assert plan.count("Scan ExistingRDD") >= 2, plan
-    key = lambda r: (r.doc_id, r.text_clean, r.n_tokens, r.n_removed_tokens)  # noqa: E731
-    full = sorted(map(key, out.collect()))
-    for shape in (False, "arr"):
-        got = sorted(
-            map(
-                key,
-                remove_repeated_windows(
-                    docs, w=4, min_count=2, checkpoint=shape
-                ).collect(),
-            )
-        )
-        assert got == full, shape

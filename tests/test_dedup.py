@@ -158,7 +158,8 @@ def test_minhash_incremental_matches_batch_restriction(spark):
 
     # grow the index with the batch, dedup a further batch of exact dups
     # of doc 4 — both the old-corpus copy and the first-batch copy are hit
-    idx2 = idx.union(dedup.minhash_index(batch))
+    batch_idx = dedup.minhash_index(batch)
+    idx2 = idx.union(batch_idx)
     batch2 = spark.createDataFrame(
         [(7, DOCS[3][1])], "doc_id long, text string"
     )
@@ -169,6 +170,8 @@ def test_minhash_incremental_matches_batch_restriction(spark):
         ).collect()
     }
     assert (4, 7) in got2
+    idx.unpersist()
+    batch_idx.unpersist()
 
 
 def test_minhash_inline_size_path_matches_classic(spark):

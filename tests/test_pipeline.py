@@ -185,9 +185,9 @@ def test_alias_dictionary_size_guards(spark, monkeypatch):
 
 def test_apriori_prune_is_exact(spark):
     """Round 4: the a-priori df prune (entities in < min_count docs cannot
-    form a surviving pair) must not change the output — compare against
-    prune_rare=False on a corpus WITH rare entities, under both the plain
-    and input_distinct df paths."""
+    form a surviving pair) must not change the output. ``"auto"`` prunes
+    these persisted long-tailed links; compare against the unpruned
+    default under both the plain and input_distinct df paths."""
     from biomedical_knowledge_graph_spark.operators.cooccurrence import (
         cooccurrence_edges,
     )
@@ -199,30 +199,29 @@ def test_apriori_prune_is_exact(spark):
     for d in range(5):
         rows += [(f"d{d}", "A"), (f"d{d}", "B"), (f"d{d}", "A")]
     rows += [("d0", "C"), ("d1", "C"), ("d2", "D")]
-    links = spark.createDataFrame(rows, "doc_id string, canonical_id string")
-    want = sorted(
-        map(tuple, cooccurrence_edges(links, min_count=3, prune_rare=False).collect())
-    )
-    got = sorted(
-        map(tuple, cooccurrence_edges(links, min_count=3, prune_rare=True).collect())
-    )
-    assert got == want and len(got) == 1  # only (A, B) survives
-    # input_distinct path over pre-deduped links
-    got_d = sorted(
-        map(
-            tuple,
-            cooccurrence_edges(
-                links.distinct(), min_count=3, prune_rare=True, input_distinct=True
-            ).collect(),
+    links = spark.createDataFrame(rows, "doc_id string, canonical_id string").persist()
+    distinct = links.distinct().persist()
+    want = sorted(map(tuple, cooccurrence_edges(links, min_count=3).collect()))
+    assert len(want) == 1  # only (A, B) survives
+    for frame, input_distinct in ((links, False), (distinct, True)):
+        log: dict = {}
+        got = cooccurrence_edges(
+            frame,
+            min_count=3,
+            prune_rare="auto",
+            decision_log=log,
+            input_distinct=input_distinct,
         )
-    )
-    assert got_d == want
+        assert sorted(map(tuple, got.collect())) == want, input_distinct
+        assert log["prune_rare"] is True, input_distinct
+    distinct.unpersist()
+    links.unpersist()
 
 
 def test_prune_rare_auto_mode(spark):
     """Round 5 (VERDICT r4 items 2/7): prune_rare='auto' probes the exact
-    df distribution and decides per-input; output is identical to both
-    forced settings either way, and the decision (plus the measured
+    df distribution and decides per-input; output is identical to the
+    unpruned default either way, and the decision (plus the measured
     rare-row fraction) lands in the caller's decision_log."""
     from biomedical_knowledge_graph_spark.operators.cooccurrence import (
         cooccurrence_edges,
@@ -265,10 +264,7 @@ def test_prune_rare_auto_mode(spark):
         dense_rows, "doc_id string, canonical_id string"
     ).persist()
     want_dense = sorted(
-        map(
-            tuple,
-            cooccurrence_edges(dense, min_count=3, prune_rare=True).collect(),
-        )
+        map(tuple, cooccurrence_edges(dense, min_count=3).collect())
     )
     log2: dict = {}
     got_dense = sorted(
@@ -297,11 +293,10 @@ def test_prune_rare_auto_mode(spark):
 def test_auto_probes_skip_unpersisted_input(spark):
     """VERDICT r5 item 5: the auto-mode probes are driver ACTIONS over
     ``links``; on an unpersisted frame they silently re-run everything
-    upstream. The contract is now code, not docstring: with the default
-    probe_ok=None, an unpersisted input skips BOTH probes (prune off,
-    encoding off, decision_log notes) — proven here with a poisoned
-    frame whose evaluation raises, so ANY probe action at call time
-    would blow up the construction itself."""
+    upstream. The contract is code, not docstring: an unpersisted input
+    skips BOTH probes (prune off, encoding off, decision_log notes) —
+    proven here with a poisoned frame whose evaluation raises, so ANY
+    probe action at call time would blow up the construction itself."""
     import pytest
     from pyspark.sql import functions as F
     from biomedical_knowledge_graph_spark.operators.cooccurrence import (
@@ -332,24 +327,20 @@ def test_auto_probes_skip_unpersisted_input(spark):
     # the frame itself is genuinely poisoned — forcing it raises
     with pytest.raises(Exception, match="upstream scan ran"):
         out.collect()
-    # probe_ok=True restores the probes (caller vouches the scan is
-    # cheap) — on a healthy unpersisted frame the probe runs and logs
-    log2: dict = {}
-    cooccurrence_edges(
-        base, min_count=3, prune_rare="auto", probe_ok=True,
-        decision_log=log2,
-    ).collect()
-    assert log2["prune_rare_mode"] == "auto"
-    # output parity: unpersisted auto (probes skipped) == forced-off
-    want = sorted(
-        map(tuple, cooccurrence_edges(base, min_count=1,
-                                      prune_rare=False).collect())
-    )
+    # output parity: unpersisted auto (probes skipped) == the default
+    want = sorted(map(tuple, cooccurrence_edges(base, min_count=1).collect()))
     got = sorted(
-        map(tuple, cooccurrence_edges(base, min_count=1,
-                                      prune_rare="auto").collect())
+        map(tuple, cooccurrence_edges(base, min_count=1, prune_rare="auto").collect())
     )
     assert got == want
+    # persisting the frame restores the probes: the probe runs and logs
+    base.persist()
+    log2: dict = {}
+    cooccurrence_edges(
+        base, min_count=3, prune_rare="auto", decision_log=log2
+    ).collect()
+    assert log2["prune_rare_mode"] == "auto"
+    base.unpersist()
 
 
 def test_encode_probe_rides_prune_probe(spark, sql_executions):
@@ -412,31 +403,58 @@ def test_pipeline_lineage_records_prune_decision(spark, tmp_path):
 
 
 def test_pair_parallelism_reaches_pair_stage(spark):
-    """pair_parallelism must control the partition count of the
-    pair-explosion input all the way from the public entry points (the
-    knob exists because AQE coalesces that stage by its INPUT bytes and
-    starves the output-explosive explode; an explicit repartition(n) is
-    exempt from AQE coalescing). Pinned at the operator level by counting
-    the partitions the explode actually runs over, and at the
-    entry-point level by signature forwarding."""
-    import inspect
-
+    """pair_parallelism controls the partition count of the
+    pair-explosion input (it exists because AQE coalesces that stage by
+    its INPUT bytes and starves the output-explosive explode; an explicit
+    repartition(n) is exempt from AQE coalescing): "auto" pins 3×
+    defaultParallelism, None adds no repartition, and no other value is
+    accepted."""
     from biomedical_knowledge_graph_spark.operators.cooccurrence import (
         cooccurrence_edges,
     )
-    from biomedical_knowledge_graph_spark.plans import pipeline
 
     links = spark.createDataFrame(
         [(f"d{i}", f"E{i % 7:02d}") for i in range(200)],
         "doc_id string, canonical_id string",
     )
-    edges = cooccurrence_edges(links, min_count=1, pair_parallelism=13)
-    plan = edges._jdf.queryExecution().executedPlan().toString()
-    # explicit repartition survives into the physical plan, AQE-exempt
-    assert "RoundRobinPartitioning(13), REPARTITION_BY_NUM" in plan
-    edges.count()  # and executes
+    n = 3 * spark.sparkContext.defaultParallelism
+    for setting, present in (("auto", True), (None, False)):
+        edges = cooccurrence_edges(links, min_count=1, pair_parallelism=setting)
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        assert ("REPARTITION_BY_NUM" in plan) is present, (setting, plan)
+        if present:
+            assert f"RoundRobinPartitioning({n}), REPARTITION_BY_NUM" in plan, plan
+        edges.count()  # and executes
+    # the deleted values (an int count, a forced prune) fail loudly
+    for kwargs in ({"pair_parallelism": 13}, {"prune_rare": True}):
+        with pytest.raises(ValueError, match="takes"):
+            cooccurrence_edges(links, min_count=1, **kwargs)
 
-    # the knob is forwarded (not silently dropped) by both entry points
-    for fn in (pipeline.build_kg, pipeline.build_kg_increment):
-        src = inspect.getsource(fn)
-        assert "pair_parallelism=pair_parallelism" in src, fn.__name__
+
+def test_build_kg_plan_time_actions(spark, sql_executions):
+    """Building the plans runs two Spark actions before anything is forced
+    or committed: the alias-dim collect and one co-occurrence probe (the
+    df-prune probe with the injectivity check folded in; at
+    build_kg_increment's min_count=1 the prune is ineligible and the
+    injectivity probe runs alone)."""
+    pages = spark.createDataFrame(
+        fixtures.pages_pdf(n_pages=60, seed=7), schema=fixtures.PAGES_SCHEMA
+    )
+    dim = fixtures.entity_dict_df(spark)
+    results = []
+    assert sql_executions(lambda: results.append(build_kg(spark, pages, dim))) == 2
+    results[0].links.unpersist()
+
+    class Recorder:
+        """A counts table that records the delta instead of writing it."""
+
+        def committed_run_ids(self):
+            return set()
+
+        def delta_append(self, df, run_id):
+            self.delta = df
+            return {"run_id": run_id}
+
+    table = Recorder()
+    assert sql_executions(lambda: build_kg_increment(spark, pages, dim, table, "r0")) == 2
+    assert table.delta.columns == ["subj", "obj", "weight"]

@@ -3,12 +3,19 @@ on Spark and its oracle on DuckDB at sf0.01, compare row counts, column
 names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Above sf0.01 the verification-only queries (deliberately quadratic
+brute-force oracles, O(n²) on both engines) are skipped and reported as
+``skipped-quadratic``; their scalable variants run at every scale. The
+session takes ``get_spark()``'s defaults (``local[$SPARK_GRAFT_CPUS]``).
+Exits 1 if any query fails.
 """
 
 from __future__ import annotations
 
 import math
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -74,38 +81,77 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str
     return "OK"
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    names = sys.argv[2:] or list(REGISTRY)
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    failures = 0
-    for name in names:
-        q = REGISTRY[name]
-        try:
-            spark_pdf = q.fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"{name:35s} SPARK ERROR: {e}")
-            failures += 1
-            continue
-        if q.oracle is None:
-            print(f"{name:35s} rows-only: {len(spark_pdf)} rows")
-            continue
+def _above_small_scale(sf_dir: str) -> bool:
+    """True unless ``sf_dir``'s name ends in a scale factor ≤ 0.01."""
+    try:
+        return float(sf_dir.rstrip("/").split("sf")[-1]) > 0.01
+    except ValueError:
+        return True
+
+
+def _check(spark, con, name: str, sf_dir: str) -> dict:
+    q = REGISTRY[name]
+    t0 = time.time()
+    try:
+        spark_pdf = q.fn(spark, sf_dir).toPandas()
+    except Exception as e:  # noqa: BLE001
+        return {"verdict": f"SPARK ERROR: {e}"[:300], "rows": None}
+    if q.oracle is None:
+        verdict = "rows-only"
+    else:
         try:
             oracle_pdf = con.sql(q.oracle).df()
         except Exception as e:  # noqa: BLE001
-            print(f"{name:35s} ORACLE ERROR: {e}")
-            failures += 1
-            continue
+            return {"verdict": f"ORACLE ERROR: {e}"[:300], "rows": None}
         verdict = compare(name, spark_pdf, oracle_pdf)
-        print(f"{name:35s} {verdict}  ({len(spark_pdf)} rows)")
-        if verdict != "OK":
-            failures += 1
-    return 1 if failures else 0
+    return {
+        "verdict": verdict,
+        "rows": len(spark_pdf),
+        "wall_s": round(time.time() - t0, 2),
+    }
+
+
+def run_oracles(spark, sf_dir: str, names=None) -> dict[str, dict]:
+    """``{query: {"verdict", "rows"[, "wall_s"]}}`` for ``names`` (default:
+    the whole registry) over the tables in ``sf_dir``, one line printed
+    per query as it finishes."""
+    skip_quadratic = _above_small_scale(sf_dir)
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    out: dict[str, dict] = {}
+    for name in names or list(REGISTRY):
+        if skip_quadratic and REGISTRY[name].verification_only:
+            out[name] = {"verdict": "skipped-quadratic", "rows": None}
+        else:
+            out[name] = _check(spark, con, name, sf_dir)
+        rows = out[name]["rows"]
+        tail = "" if rows is None else f"  ({rows} rows)"
+        print(f"{sf_dir} {name:35s} {out[name]['verdict']}{tail}", flush=True)
+    return out
+
+
+def summarize(results: dict[str, dict]) -> dict[str, int]:
+    """Verdict counts; ``fail`` is every verdict other than OK, rows-only
+    and skipped-quadratic."""
+    verdicts = [r["verdict"] for r in results.values()]
+    counts = {
+        k: verdicts.count(v)
+        for k, v in (
+            ("ok", "OK"),
+            ("rows_only", "rows-only"),
+            ("skipped_quadratic", "skipped-quadratic"),
+        )
+    }
+    counts["fail"] = len(verdicts) - sum(counts.values())
+    return counts
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    summary = summarize(run_oracles(get_spark("oracle-check"), sf_dir, sys.argv[2:]))
+    print(summary)
+    return 1 if summary["fail"] else 0
 
 
 if __name__ == "__main__":

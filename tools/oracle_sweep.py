@@ -9,8 +9,12 @@ re-running it:
 Output shape:
     {"sweeps": {"0.01": {"<query>": {"verdict": "OK", "rows": N}, ...},
                 "0.1": {...}},
-     "summary": {"0.01": {"ok": N, "rows_only": N, "fail": N}, ...},
+     "summary": {"0.01": {"ok": N, "rows_only": N, "skipped_quadratic": N,
+                          "fail": N}, ...},
      "registry_size": N, "ts": "..."}
+
+Above sf0.01 the verification-only (quadratic) queries are skipped, as in
+``tools/check_oracle.py``, whose query/oracle loop this runs.
 """
 
 from __future__ import annotations
@@ -22,89 +26,22 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from biomedical_knowledge_graph_spark.queries import REGISTRY  # noqa: E402
 from biomedical_knowledge_graph_spark.session import get_spark  # noqa: E402
-from biomedical_knowledge_graph_spark.sources.testdata import (  # noqa: E402
-    TABLES,
-)
-from tools.check_oracle import compare  # noqa: E402
-
-
-def sweep(
-    spark, sf_dir: str, skip_verification_only: bool = False
-) -> dict[str, dict]:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    out: dict[str, dict] = {}
-    for name, q in REGISTRY.items():
-        if skip_verification_only and q.verification_only:
-            # deliberately-quadratic brute-force oracles (O(n²) on BOTH
-            # engines) are swept at the small SF only — same convention
-            # as the r4 sweep; their scalable variants run at every SF
-            out[name] = {"verdict": "skipped-quadratic", "rows": None}
-            continue
-        t0 = time.time()
-        try:
-            spark_pdf = q.fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            out[name] = {"verdict": f"SPARK ERROR: {e}"[:300], "rows": None}
-            continue
-        if q.oracle is None:
-            out[name] = {
-                "verdict": "rows-only",
-                "rows": len(spark_pdf),
-                "wall_s": round(time.time() - t0, 2),
-            }
-            continue
-        try:
-            oracle_pdf = con.sql(q.oracle).df()
-        except Exception as e:  # noqa: BLE001
-            out[name] = {"verdict": f"ORACLE ERROR: {e}"[:300], "rows": None}
-            continue
-        out[name] = {
-            "verdict": compare(name, spark_pdf, oracle_pdf),
-            "rows": len(spark_pdf),
-            "wall_s": round(time.time() - t0, 2),
-        }
-        print(f"{sf_dir} {name:35s} {out[name]['verdict']}", flush=True)
-    return out
+from tools.check_oracle import run_oracles, summarize  # noqa: E402
 
 
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "ORACLE_SWEEP.json"
     sfs = sys.argv[2:] or ["sf0.01", "sf0.1"]
-    spark = get_spark(
-        "oracle-sweep", master="local[16]", shuffle_partitions=32
-    )
+    spark = get_spark("oracle-sweep")
     sweeps: dict[str, dict] = {}
     summary: dict[str, dict] = {}
     for sf in sfs:
         sf_dir = sf if os.path.isabs(sf) else f"/root/testdata/{sf}"
         key = sf_dir.rstrip("/").split("sf")[-1]
-        try:
-            big = float(key) > 0.01
-        except ValueError:
-            big = True
-        res = sweep(spark, sf_dir, skip_verification_only=big)
-        sweeps[key] = res
-        skip_verdicts = ("OK", "rows-only", "skipped-quadratic")
-        summary[key] = {
-            "ok": sum(1 for r in res.values() if r["verdict"] == "OK"),
-            "rows_only": sum(
-                1 for r in res.values() if r["verdict"] == "rows-only"
-            ),
-            "skipped_quadratic": sum(
-                1
-                for r in res.values()
-                if r["verdict"] == "skipped-quadratic"
-            ),
-            "fail": sum(
-                1 for r in res.values() if r["verdict"] not in skip_verdicts
-            ),
-        }
+        sweeps[key] = run_oracles(spark, sf_dir)
+        summary[key] = summarize(sweeps[key])
     doc = {
         "sweeps": sweeps,
         "summary": summary,
