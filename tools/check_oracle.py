@@ -81,6 +81,13 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str
     return "OK"
 
 
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    summary = summarize(run_oracles(get_spark("oracle-check"), sf_dir, sys.argv[2:]))
+    print(summary)
+    return 1 if summary["fail"] else 0
+
+
 def _above_small_scale(sf_dir: str) -> bool:
     """True unless ``sf_dir``'s name ends in a scale factor ≤ 0.01."""
     try:
@@ -145,13 +152,6 @@ def summarize(results: dict[str, dict]) -> dict[str, int]:
     }
     counts["fail"] = len(verdicts) - sum(counts.values())
     return counts
-
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    summary = summarize(run_oracles(get_spark("oracle-check"), sf_dir, sys.argv[2:]))
-    print(summary)
-    return 1 if summary["fail"] else 0
 
 
 if __name__ == "__main__":
