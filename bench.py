@@ -1,14 +1,15 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on) and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is forced end-to-end with the noop sink (full materialization of
 every output column — a bare count() would let Catalyst prune the very
 columns under test). Extra keys report the KG-pipeline throughput
-(triples/sec) on a generated pages corpus; scaling-efficiency evidence
-(local[8] vs local[32]) lives in tools/bench_scaling.py → BENCH.md.
+(triples/sec) on a generated pages corpus; scaling evidence (N vs 4N
+cores) comes from tools/bench_scaling.py.
 """
 
 from __future__ import annotations
@@ -117,7 +118,7 @@ def _assert_headline_scalable() -> None:
 def main() -> None:
     _assert_headline_scalable()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark(
         app_name="bkg-bench",
         master=f"local[{cpus}]",
@@ -228,46 +229,23 @@ BENCH_LOCAL = os.path.join(_HERE, "BENCH_LOCAL.jsonl")
 
 
 def _parse_round_file(path: str) -> dict | None:
-    """One driver BENCH_r*.json → {sf, queries, pipeline, source} (the
-    driver wraps the bench line under "parsed"; a clipped tail-capture is
-    recovered from the raw tail fragment as in round 4)."""
-    import re
-
+    """One driver BENCH_r*.json → {sf, cpus, queries, pipeline, source}
+    (the driver wraps the bench line under "parsed"; a round whose line
+    did not parse carries no baseline)."""
     try:
         with open(path) as f:
             prev = json.load(f)
     except (OSError, json.JSONDecodeError):
         return None
-    cpus = prev.get("cpus")  # driver wrapper carries it at the top level
-    if isinstance(prev.get("parsed"), dict):
-        prev = prev["parsed"]
-    elif isinstance(prev.get("queries"), dict):
-        # raw bench-output line saved via `python bench.py > prev.json`
-        # (supported shape for BKG_PREV_BENCH) — use as-is
-        pass
-    elif isinstance(prev.get("tail"), str):
-        # clipped tail (r3): everything before '"sf":' is (a suffix of)
-        # the queries dict, so name/number pairs there are query walls.
-        # NOTE the fragment can silently MISS leading queries — that is
-        # exactly why baselines now merge across sources (r4 lost the
-        # kg_connected_components baseline to this and masked a 1.57x
-        # regression).
-        frag = prev["tail"].split('"sf":')[0]
-        m_sf = re.search(r'"sf": ([0-9.]+)', prev["tail"])
-        prev = {
-            "sf": float(m_sf.group(1)) if m_sf else None,
-            "queries": {
-                k: float(v)
-                for k, v in re.findall(r'"([a-z_0-9]+)": ([0-9.]+)', frag)
-            },
-        }
-    else:
+    if not isinstance(prev.get("parsed"), dict):
         return None
+    parsed = prev["parsed"]
     return {
-        "sf": prev.get("sf"),
-        "cpus": prev.get("cpus", cpus),
-        "queries": prev.get("queries") or {},
-        "pipeline": prev.get("pipeline"),
+        "sf": parsed.get("sf"),
+        # the driver wrapper carries the core count at the top level
+        "cpus": parsed.get("cpus", prev.get("cpus")),
+        "queries": parsed.get("queries") or {},
+        "pipeline": parsed.get("pipeline"),
         "source": os.path.basename(path),
     }
 
@@ -288,7 +266,7 @@ def _baseline_records(sf_val, cpus=None) -> list[dict]:
        depend on the driver's bounded tail-capture window);
     2. the driver's BENCH_r*.json files (numeric round order).
     Filtered to the same sf AND core count; baselines then resolve
-    per-query as the BEST wall across all records, so one clipped source
+    per-query as the BEST wall across all records, so one partial source
     can never drop a baseline and a regressed run can never become its
     own exculpatory baseline."""
     import glob
@@ -356,15 +334,8 @@ def _deltas_vs_previous_round(
     the same guard on wall/throughput (VERDICT r4 item 4 — r4's 22%
     pipeline drop sailed through a queries-only guard). Queries with no
     recoverable baseline anywhere are listed under "unrecoverable"
-    instead of silently skipped. BKG_PREV_BENCH restricts the baseline
-    to one file (driver wrapper, raw bench-output JSON, or a clipped
-    tail capture)."""
-    prev_path = os.environ.get("BKG_PREV_BENCH")
-    if prev_path:
-        rec = _parse_round_file(prev_path)
-        recs = [rec] if rec is not None and rec["sf"] == sf_val else []
-    else:
-        recs = _baseline_records(sf_val, cpus)
+    instead of silently skipped."""
+    recs = _baseline_records(sf_val, cpus)
     if not recs:
         return None
     per_query = {}

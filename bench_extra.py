@@ -2,8 +2,9 @@
 
 NOT the driver bench (bench.py is frozen): this file exists so a single
 query can be timed with the noop sink, its physical plan captured, and
-its job/stage counts read from the Spark UI REST API — the evidence
-trail for OPTIMIZATION_r08.md and the round-8 plans (plans/r08/*.txt,
+its job, stage and task counts read from the status tracker under a
+per-query job group (the status store works with the UI off) — the
+evidence trail for OPTIMIZATION_r08.md and the round-8 plans (plans/r08/*.txt,
 deleted after commit 6ee73c4; read them with git show).
 
 Usage:
@@ -18,7 +19,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -26,27 +26,18 @@ from biomedical_knowledge_graph_spark.queries import REGISTRY  # noqa: E402
 from biomedical_knowledge_graph_spark.session import get_spark  # noqa: E402
 
 
-def _rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app_id}{path}") as r:
-        return json.load(r)
-
-
-def _job_stats(spark, t_from: float) -> dict:
-    """Jobs/stages submitted after t_from (epoch seconds)."""
-    jobs = _rest(spark, "/jobs")
-    recent = [
-        j
-        for j in jobs
-        if time.mktime(
-            time.strptime(j["submissionTime"][:19], "%Y-%m-%dT%H:%M:%S")
-        )
-        >= t_from - 1
+def _job_stats(sc, group: str) -> dict:
+    """Jobs of one job group, the stages that ran tasks and those tasks."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-end events land async
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stage_ids = {s for j in jobs if j is not None for s in j.stageIds}
+    ran = [
+        st.numCompletedTasks
+        for st in map(tracker.getStageInfo, stage_ids)
+        if st is not None and st.numCompletedTasks
     ]
-    n_stages = sum(len(j.get("stageIds", [])) for j in recent)
-    n_tasks = sum(j.get("numTasks", 0) for j in recent)
-    return {"jobs": len(recent), "stages": n_stages, "tasks": n_tasks}
+    return {"jobs": len(jobs), "stages": len(ran), "tasks": sum(ran)}
 
 
 def main() -> None:
@@ -66,17 +57,12 @@ def main() -> None:
         raise SystemExit(f"unknown queries: {unknown}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark(
         app_name="bkg-bench-extra",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus) * 4,
-        extra_conf={
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            # measurement harness only: the REST API needs the UI (the
-            # driver bench keeps it off)
-            "spark.ui.enabled": "true",
-        },
+        extra_conf={"spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m"},
     )
 
     # same warmup as bench.py: JVM + one Python worker per core
@@ -102,23 +88,16 @@ def main() -> None:
                 f.write(plan)
         samples = []
         stats = None
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+        for rep in range(args.reps):
+            group = f"bench_extra:{name}:{rep}"
+            spark.sparkContext.setJobGroup(group, name)
             t0 = time.time()
             force(REGISTRY[name].fn(spark, sf_dir))
             dt = time.time() - t0
             samples.append(round(dt, 3))
             if stats is None or dt <= min(samples):
-                try:
-                    stats = _job_stats(spark, t0)
-                except Exception:
-                    stats = None
-            spark.sparkContext.setJobDescription(None)
-        out[name] = {
-            "min": min(samples),
-            "samples": samples,
-            **(stats or {}),
-        }
+                stats = _job_stats(spark.sparkContext, group)
+        out[name] = {"min": min(samples), "samples": samples, **stats}
         print(json.dumps({name: out[name]}), flush=True)
     print("TOTAL", round(sum(v["min"] for v in out.values()), 3))
 

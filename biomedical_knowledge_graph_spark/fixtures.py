@@ -199,30 +199,6 @@ def pages_df(spark: SparkSession, n_pages: int = 200, seed: int = 42) -> DataFra
     return spark.createDataFrame(pages_pdf(n_pages, seed), schema=PAGES_SCHEMA)
 
 
-def write_pages_parquet(
-    spark: SparkSession,
-    path: str,
-    n_pages: int,
-    seed: int = 42,
-    partitions: int | None = None,
-) -> None:
-    """Materialize a pages corpus for the bench (generated in chunks on the
-    driver; at real scale this table is the Iceberg input, not generated)."""
-    chunk = 50_000
-    writer_df = None
-    for start in range(0, n_pages, chunk):
-        n = min(chunk, n_pages - start)
-        pdf = pages_pdf(n, seed=seed + start)
-        pdf["url"] = pdf["url"].str.replace("/doc/", f"/doc{start}/", regex=False)
-        df = spark.createDataFrame(pdf, schema=PAGES_SCHEMA)
-        if partitions:
-            df = df.repartition(partitions)
-        mode = "overwrite" if start == 0 else "append"
-        df.write.mode(mode).parquet(path)
-        writer_df = df
-    assert writer_df is not None
-
-
 # ---------------------------------------------------------------------------
 # pure-Python reference ruleset (independent of the Spark implementation)
 # used for the P/R ≥ 0.95 gate — see tests/test_pipeline.py

@@ -79,21 +79,3 @@ def merge_upsert(
         if c not in set(existing.columns):
             out_cols.append(F.col(f"u.{c}").alias(c))
     return joined.select(out_cols)
-
-
-def canonical_nodes(
-    staged: DataFrame,
-    key: str = "canonical_id",
-    first_cols: list[str] | None = None,
-    set_cols: list[str] | None = None,
-) -> DataFrame:
-    """Deterministic groupBy canonicalization replacing the reference's
-    uniqueness constraints (SURVEY.md §1.3): one row per key, scalar
-    properties by deterministic ``min``-preference, multi-valued properties
-    as sorted distinct arrays."""
-    aggs: list[Column] = []
-    for c in first_cols or []:
-        aggs.append(F.min(c).alias(c))
-    for c in set_cols or []:
-        aggs.append(F.sort_array(F.collect_set(c)).alias(c))
-    return staged.groupBy(key).agg(*aggs)

@@ -6,9 +6,7 @@ Reference semantics being reproduced (SURVEY.md §2.3):
 - J1 existence validation with a count of misses
   (kg_scripts/go_kg_builder.py:1226-1245) → left join; nulls = misses;
 - obsolete→current remap (kg_scripts/go_kg_builder.py:279-290)
-  → self-join of the dim on ``replaced_by`` before broadcasting;
-- J9 missing-entity derivation (kg_scripts/go_branch_integrator.py:127-161)
-  → left_anti join.
+  → self-join of the dim on ``replaced_by`` before broadcasting.
 
 Context scoring (north_star "dictionary+context entity linking"): a
 deterministic score combining dictionary prior with a local-context feature,
@@ -20,9 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-ALIAS_DIM_COLUMNS = ("alias", "canonical_id", "entity_type", "namespace", "prior")
-
 
 def resolve_obsolete(dim: DataFrame) -> DataFrame:
     """Remap obsolete dictionary entries to their replacement ids.
@@ -92,15 +87,3 @@ def link_mentions(
         mentions[surface_col] == dim_scored["alias"],
         "left",
     ).drop("alias", "prior", "alias_fanout")
-
-
-def unlinked_mentions(linked: DataFrame) -> DataFrame:
-    """The J1 'missing' side: mentions that found no dictionary entry."""
-    return linked.filter(F.col("canonical_id").isNull())
-
-
-def missing_entities(
-    staged: DataFrame, existing: DataFrame, key: str = "canonical_id"
-) -> DataFrame:
-    """J9/SO1 set difference: staged keys not yet in the node table."""
-    return staged.join(existing.select(key), key, "left_anti")

@@ -127,14 +127,6 @@ def fake_thumbnail_features(payload: bytes, n_buckets: int = 8) -> list[int]:
     return hist
 
 
-def decode_video_frame(payload: bytes, frame_idx: int) -> "object":
-    """STUB: real video decode requires codec libraries not present in this
-    container. ``sample_frames`` below implements the real Spark-side
-    plumbing (one binary in → many frame rows out, deterministic offsets);
-    a real decoder replaces only the byte-window slice with a codec call."""
-    raise NotImplementedError("video codecs unavailable in this environment")
-
-
 def sample_frames(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -98,8 +98,6 @@ def load(
     if name not in TABLES:
         raise KeyError(name)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if os.environ.get("BKG_SCAN_PARALLELIZE", "1") == "0":
-        parallelize = False  # ops kill-switch / A-B harness
     if parallelize:
         par = spark.sparkContext.defaultParallelism
         est = _estimated_scan_splits(spark, f"{sf_dir}/{name}.parquet")

@@ -16,12 +16,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "biomedical_knowledge_graph_spark"
 
-KNOBS = {
-    "SPARK_GRAFT_CPUS",
-    "BKG_SHUFFLE_PARTITIONS",
-    "BKG_DRIVER_MEM",
-    "BKG_SCAN_PARALLELIZE",
-}
+KNOBS = {"SPARK_GRAFT_CPUS", "BKG_DRIVER_MEM"}
 
 
 def _is_environ(node: ast.AST) -> bool:

@@ -13,31 +13,20 @@ sys.path.insert(
 import bench  # noqa: E402
 
 
-def _fake_round(path, sf, queries, pipeline=None, clipped=False):
-    if clipped:
-        # mimic the driver's clipped tail-capture: the contract line's
-        # head (including some leading queries) fell outside the window
-        frag = (
-            ", ".join(f'"{k}": {v}' for k, v in queries.items())
-            + f', "sf": {sf}'
-        )
-        payload = {"tail": frag, "parsed": None}
-    else:
-        parsed = {"sf": sf, "queries": queries}
-        if pipeline:
-            parsed["pipeline"] = pipeline
-        payload = {"parsed": parsed}
+def _fake_round(path, sf, queries, pipeline=None):
+    parsed = {"sf": sf, "queries": queries}
+    if pipeline:
+        parsed["pipeline"] = pipeline
     with open(path, "w") as f:
-        json.dump(payload, f)
+        json.dump({"parsed": parsed}, f)
 
 
 def test_baseline_merges_across_clipped_rounds(tmp_path, monkeypatch):
-    """A query missing from the NEWEST round's (clipped) record must fall
+    """A query missing from the NEWEST round's (partial) record must fall
     back to the newest older source instead of silently losing its
     baseline — the exact failure that masked r4's kg_cc regression."""
     monkeypatch.setattr(bench, "_HERE", str(tmp_path))
     monkeypatch.setattr(bench, "BENCH_LOCAL", str(tmp_path / "BENCH_LOCAL.jsonl"))
-    monkeypatch.delenv("BKG_PREV_BENCH", raising=False)
     pipe = {"pages": 20000, "triples_per_sec": 100_000.0}
     _fake_round(
         tmp_path / "BENCH_r01.json",
@@ -45,10 +34,8 @@ def test_baseline_merges_across_clipped_rounds(tmp_path, monkeypatch):
         {"q_a": 2.0, "q_b": 4.0},
         pipeline=pipe,
     )
-    # newest round was clipped: q_a's baseline fell out of the window
-    _fake_round(
-        tmp_path / "BENCH_r02.json", 0.1, {"q_b": 3.0}, clipped=True
-    )
+    # newest round is partial: it carries no q_a wall
+    _fake_round(tmp_path / "BENCH_r02.json", 0.1, {"q_b": 3.0})
 
     d = bench._deltas_vs_previous_round(
         {"q_a": 2.1, "q_b": 9.0, "q_new": 1.0},
@@ -76,7 +63,6 @@ def test_local_history_outranks_round_files(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "_HERE", str(tmp_path))
     local = tmp_path / "BENCH_LOCAL.jsonl"
     monkeypatch.setattr(bench, "BENCH_LOCAL", str(local))
-    monkeypatch.delenv("BKG_PREV_BENCH", raising=False)
     _fake_round(tmp_path / "BENCH_r02.json", 0.1, {"q": 8.0})
     _fake_round(tmp_path / "BENCH_r10.json", 0.1, {"q": 5.0})
     d = bench._deltas_vs_previous_round({"q": 5.0}, 0.1)
@@ -118,7 +104,6 @@ def test_best_wall_baseline_and_noise_adjustment(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "_HERE", str(tmp_path))
     local = tmp_path / "BENCH_LOCAL.jsonl"
     monkeypatch.setattr(bench, "BENCH_LOCAL", str(local))
-    monkeypatch.delenv("BKG_PREV_BENCH", raising=False)
 
     qs = {f"q{i}": 1.0 for i in range(9)}
     with open(local, "w") as f:

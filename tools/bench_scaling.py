@@ -1,195 +1,330 @@
-"""Scaling-efficiency evidence (north_rule: throughput at N and 4N workers,
-efficiency ≥ 0.8).
+"""Strong-scaling harness (north rule: throughput at N and 4N executors,
+scaling efficiency >= 0.8).
 
-No real multi-executor cluster exists in this sandbox, so the contract is
-evidenced per BASELINE.md: the SAME job on the SAME input at two cluster
-sizes emulated as **CPU-pinned local-mode runs** — ``taskset -c 0-(N-1)
-local[N]`` vs ``taskset -c 0-(4N-1) local[4N]``.
+Every op runs the same body on the same input at two core counts, ``low``
+and ``high``, each run in its own subprocess pinned with ``taskset`` to
+the first ``cores`` CPUs of this process's affinity set. Pinning matters:
+Arrow/pandas-UDF Python workers are separate processes outside Spark's
+task-thread accounting, so an unpinned ``local[N]`` quietly uses more
+than N cores; a real executor is cgroup-bounded to its cores, Python
+workers included, and ``taskset`` reproduces that boundary. The core
+counts default to ``(max(1, n // 4), n)`` for the ``n`` CPUs this process
+may run on; a ``high`` above ``n`` is rejected before any process starts
+(``taskset`` would accept it and silently oversubscribe).
 
-Why pinning (and not just local[N] vs local[4N]): with Arrow/pandas UDFs
-the Python workers run in SEPARATE PROCESSES outside Spark's task-thread
-accounting, so an unpinned local[4] actually consumes ~8 cores (4 JVM task
-threads + 4 Python workers overlapping) — the "N" baseline silently gets
-extra hardware and the measured speedup understates real cluster scaling.
-An executor on a real cluster is cgroup-bounded to its cores, Python
-workers included; taskset reproduces exactly that boundary.
+Inputs are generated once, before any timing, so every run reads the
+same bytes:
 
-The job is the end-to-end KG pipeline (pages parquet → extract → mention
-scan → link → canonicalize → co-occur → triples) over a generated corpus
-that is written to parquet ONCE before any timing, so all runs read
-identical bytes, and outputs are checked identical across parallelism.
+- ``pages``: the HTML pages corpus of ``fixtures``;
+- ``docs``: a Zipf-ish corpus (30 % of tokens from a 200-word common pool,
+  70 % from a 20 k-word pool, 60 tokens a doc; every 10th doc re-emitted
+  as a near-duplicate), in one pure-JVM projection. Background 5-gram
+  Jaccard stays near 0.1, so the dedup ops' candidate and verify stages
+  do real work instead of a verify-join explosion. Simhash and the
+  window dedup read a corpus ``SIMHASH_MULT`` times larger: their per-doc
+  cost is far below MinHash's;
+- ``edges``: a power-law edge list (endpoint = floor(u² · N) over
+  xxhash64 uniforms, so low ids are hubs).
 
-Writes BENCH.md and prints one JSON line.
+Each run: a fresh session whose file split size is the input's bytes ÷
+(cores × 8) (at least 8 task waves per core; a fixed split starves the
+larger core count), warmed Python workers, an untimed warm-up on a
+repartitioned slice (``limit`` alone collapses to one task), then one
+timed action over the op's body: its row count and its identity
+aggregate. Bodies that end in left joins carry a filter on a join-output
+column, because a row count eliminates such joins. Configs alternate
+per rep (ABAB) and the min of the reps is kept: host noise only ever
+inflates a wall. The identity aggregate of each
+op's output must be equal at every core count, or the command exits 1.
 
-Usage: python tools/bench_scaling.py [n_pages] [low_cpus] [high_cpus] [reps]
-Internal: python tools/bench_scaling.py --timed-run <threads> <pages_path>
+``--local-cluster`` runs ``cores // low`` separate executor JVMs of
+``low`` cores each (N vs 4N executors at the defaults) instead of one
+``local[cores]`` process, each executor with an equal share of half of
+the host's memory.
+
+Usage:
+    python tools/bench_scaling.py [--ops pipeline,minhash,...] [--low N]
+        [--high M] [--reps R] [--pages N] [--docs N] [--edges N]
+        [--inputs DIR] [--local-cluster]
+
+``--inputs DIR`` keeps the generated inputs in DIR (one subdirectory per
+kind and size) and reuses them on the next invocation. Prints one JSON
+line.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import multiprocessing as mp
 import os
 import shutil
 import subprocess
 import sys
 import tempfile
 import time
+from dataclasses import dataclass
+from typing import Callable
 
-sys.path.insert(0, ".")
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from pyspark.sql import DataFrame  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 from biomedical_knowledge_graph_spark import fixtures  # noqa: E402
+from biomedical_knowledge_graph_spark.operators import dedup  # noqa: E402
+from biomedical_knowledge_graph_spark.operators.boilerplate import (  # noqa: E402
+    remove_repeated_windows,
+)
+from biomedical_knowledge_graph_spark.operators.lm import bigram_lm_scores  # noqa: E402
+from biomedical_knowledge_graph_spark.operators.sampling import (  # noqa: E402
+    budget_select,
+    stratified_topk,
+)
+from biomedical_knowledge_graph_spark.operators.triangles import (  # noqa: E402
+    triangle_counts,
+)
 from biomedical_knowledge_graph_spark.plans.pipeline import build_kg  # noqa: E402
 from biomedical_knowledge_graph_spark.session import new_session  # noqa: E402
 
+TOKENS_PER_DOC = 60
+COMMON_VOCAB = 200
+RARE_VOCAB = 20_000
+DUP_MOD = 10  # every DUP_MOD-th doc is re-emitted as a near-duplicate
+SIMHASH_MULT = 8
+N_DOMAINS = 20_000
+FILES = 32  # parquet files per generated input
+WARM_ROWS = 1000
+_UNIFORM = "(pmod(xxhash64({}), 1000000) / 1000000.0)"
 
-def warm_python_workers(spark, threads: int) -> None:
-    """Spawn + warm every Python worker (pandas/pyarrow imports) before the
-    clock starts — worker cold-start is fixed overhead a long-running job
-    amortizes, not part of steady-state throughput."""
-    import pandas as pd
+
+def _pipeline(pages: DataFrame, rows: int) -> DataFrame:
+    dim = fixtures.synthetic_entity_dict_df(pages.sparkSession, 5000, seed=42)
+    return build_kg(pages.sparkSession, pages, dim, min_cooccur=3).triples
+
+
+def _scored(docs: DataFrame) -> DataFrame:
+    """docs + a Zipf-skewed domain (floor(u² · N_DOMAINS): real head
+    strata), a score and a token count."""
+    return docs.select(
+        "doc_id",
+        F.expr(
+            f"cast(floor(pow({_UNIFORM.format('doc_id')}, 2) * {N_DOMAINS}) as long)"
+        ).alias("domain"),
+        F.expr("cast(length(text) as long)").alias("score"),
+        F.expr(
+            "cast(size(filter(split(text, ' '), t -> length(t) > 0)) as long)"
+        ).alias("toks"),
+    )
+
+
+@dataclass(frozen=True)
+class Op:
+    input: str  # key of INPUTS
+    body: Callable[[DataFrame, int], DataFrame]  # (input, input rows) → output
+    identity: str  # SQL aggregate over the output, equal at every core count
+
+
+OPS: dict[str, Op] = {
+    "pipeline": Op("pages", _pipeline, "sum(weight)"),
+    "minhash": Op(
+        "docs",
+        lambda d, _: dedup.minhash_dedup_pairs(d, threshold=0.8),
+        "min(jaccard)",
+    ),
+    "simhash": Op(
+        "docs_x8",
+        lambda d, _: dedup.simhash_near_pairs(d, max_hamming=6),
+        "sum(hamming)",
+    ),
+    "windows": Op(
+        "docs_x8",
+        lambda d, _: remove_repeated_windows(d, w=8, min_count=2).filter(
+            F.col("n_removed_tokens") >= 0
+        ),
+        "sum(n_removed_tokens)",
+    ),
+    "lm": Op(
+        "docs",
+        lambda d, _: bigram_lm_scores(d).filter(F.col("n_bigrams") >= 0),
+        "sum(n_bigrams)",
+    ),
+    "triangles": Op(
+        "edges",
+        lambda e, _: triangle_counts(e).filter(F.col("triangles") >= 0),
+        "sum(triangles)",
+    ),
+    "domain_topk": Op(
+        "docs",
+        lambda d, _: stratified_topk(
+            _scored(d), "doc_id", "score", 20, "domain"
+        ).filter(F.col("kept").cast("long") >= 0),
+        "sum(cast(kept as long))",
+    ),
+    # the budget (a third of the corpus's tokens) is a literal, so the
+    # timed body runs no extra driver action
+    "budget_select": Op(
+        "docs",
+        lambda d, rows: budget_select(
+            _scored(d), "doc_id", "score", "toks", rows * TOKENS_PER_DOC // 3
+        ).filter(F.col("selected").cast("long") >= 0),
+        "sum(cast(selected as long))",
+    ),
+}
+
+
+def generate_pages(spark, n: int, path: str) -> None:
+    aliases = [a for a, _, _ in fixtures.synthetic_alias_specs(5000, seed=42)]
+    fixtures.generate_pages_distributed(
+        spark, n, aliases, seed=42, partitions=FILES
+    ).write.mode("overwrite").parquet(path)
+
+
+def generate_docs(spark, n: int, path: str) -> None:
+    """(doc_id, text): token j of doc i hashes (i, j) into the common pool
+    ('c0'..) 30 % of the time, else into the rare pool ('w0'..). Every
+    DUP_MOD-th doc is re-emitted under a fresh id with a one-token suffix
+    (5-gram J ≈ 0.97)."""
+    tok = (
+        f"transform(sequence(1, {TOKENS_PER_DOC}), j -> "
+        "  CASE WHEN pmod(xxhash64(id, j), 10) < 3 "
+        f"       THEN concat('c', pmod(xxhash64(id, j, 1), {COMMON_VOCAB})) "
+        f"       ELSE concat('w', pmod(xxhash64(id, j, 2), {RARE_VOCAB})) END)"
+    )
+    text = F.array_join(F.expr(tok), " ")
+    rng = spark.range(n).repartition(FILES)
+    base = rng.select(
+        F.xxhash64(F.lit("b"), F.col("id")).alias("doc_id"), text.alias("text")
+    )
+    dups = rng.filter(F.pmod(F.col("id"), F.lit(DUP_MOD)) == 0).select(
+        F.xxhash64(F.lit("d"), F.col("id")).alias("doc_id"),
+        F.concat(text, F.lit(" dupmarker")).alias("text"),
+    )
+    base.unionByName(dups).write.mode("overwrite").parquet(path)
+
+
+def generate_edges(spark, n: int, path: str) -> None:
+    """(src, dst) over n // 10 nodes; endpoint = floor(u² · nodes)."""
+    nodes = max(1, n // 10)
+
+    def end(seed: str):
+        return F.expr(
+            f"cast(floor(pow({_UNIFORM.format(seed)}, 2) * {nodes}) as long)"
+        )
+
+    spark.range(n).repartition(FILES).select(
+        end("id * 2").alias("src"), end("id * 2 + 1").alias("dst")
+    ).write.mode("overwrite").parquet(path)
+
+
+# input kind → (generator, size argument, size multiplier)
+INPUTS = {
+    "pages": (generate_pages, "pages", 1),
+    "docs": (generate_docs, "docs", 1),
+    "docs_x8": (generate_docs, "docs", SIMHASH_MULT),
+    "edges": (generate_edges, "edges", 1),
+}
+
+
+def _bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+    )
+
+
+def evaluate(name: str, df: DataFrame, rows: int) -> list:
+    """[row count, identity aggregate] of op ``name``'s output on ``df``
+    (``rows`` rows), in one action."""
+    op = OPS[name]
+    return list(op.body(df, rows).agg(F.count("*"), F.expr(op.identity)).first())
+
+
+def measure(spark, name: str, path: str, cores: int) -> dict:
+    """One warmed, timed ``evaluate`` of op ``name`` on the parquet input
+    at ``path``, in the given session."""
 
     def noop(batches):
-        for b in batches:
-            yield b
+        yield from batches
 
-    df = spark.range(threads * 4).repartition(threads * 2)
-    df.mapInPandas(noop, schema="id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    assert pd is not None
+    # spawn every Python worker (pandas/pyarrow imports) before the clock
+    spark.range(cores * 4).repartition(cores * 2).mapInPandas(
+        noop, schema="id long"
+    ).write.format("noop").mode("overwrite").save()
+    df = spark.read.parquet(path)
+    rows = df.count()
+    warm = df.limit(WARM_ROWS).repartition(cores * 2).persist()
+    evaluate(name, warm, warm.count())
+    warm.unpersist()
+    t0 = time.perf_counter()
+    identity = evaluate(name, df, rows)
+    wall = time.perf_counter() - t0
+    return {"rows_in": rows, "wall_s": round(wall, 3), "identity": identity}
 
 
-def timed_run(
-    threads: int, pages_path: str, warm_reps: int = 1, master: str | None = None
-) -> dict:
-    """Fresh session → warm workers + one untimed warm-up run (JIT/codegen)
-    → one timed end-to-end pipeline run. Runs INSIDE the taskset-pinned
-    subprocess, so JVM threads and Python workers share exactly ``threads``
-    cores.
-
-    ``master``: override for local-cluster mode —
-    ``local-cluster[workers,cores,mem_mb]`` launches REAL separate executor
-    JVMs on this box (one heap per executor, cluster-style task scheduling
-    and shuffle transport): the closest honest stand-in for N vs 4N
-    executors this sandbox allows, and it sidesteps the single-heap
-    allocation plateau local[n] imposes on JVM-side aggregates
-    (VERDICT r2 item 4). ``threads`` stays the TOTAL core count."""
-    extra = {}
-    if master is None:
-        master = f"local[{threads}]"
-    else:
-        # executors are separate JVMs: size their heaps, point them at this
-        # python + this repo (module-by-reference pickling needs the import)
+def _child(name: str, cores: int, path: str, master: str | None) -> dict:
+    conf = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+        "spark.sql.files.maxPartitionBytes": str(
+            max(64 * 1024, _bytes(path) // (cores * 8))
+        ),
+        "spark.sql.files.openCostInBytes": str(16 * 1024),
+    }
+    if master is not None:
+        # separate executor JVMs import the package from this checkout;
+        # the driver only coordinates
         mem_mb = master.rstrip("]").rsplit(",", 1)[-1]
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        extra = {
-            "spark.executor.memory": f"{mem_mb}m",
-            "spark.executorEnv.PYTHONPATH": repo,
-        }
-        os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-        # the driver only coordinates in cluster mode — its default 64g
-        # local-mode heap would just crowd the executors off the box
-        os.environ.setdefault("BKG_DRIVER_MEM", "8g")
+        conf.update(
+            {
+                "spark.executor.memory": f"{mem_mb}m",
+                "spark.executorEnv.PYTHONPATH": REPO,
+                "spark.pyspark.python": sys.executable,
+                "spark.driver.memory": "2g",
+            }
+        )
     spark = new_session(
         "bkg-scaling",
-        master=master,
-        shuffle_partitions=threads * 6,
-        extra_conf={
-            **extra,
-            # default 64m advisory size lets AQE coalesce the pair shuffle
-            # to fewer partitions than threads, capping reduce parallelism
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            # the generated corpus is small on disk (~1 KB/page): with the
-            # default 128m split size + 4m per-file open cost the whole scan
-            # collapses to a handful of input tasks and the map stages
-            # (extract + mention scan) cannot use the threads at all. At
-            # 100 TB this is moot (any corpus yields thousands of splits);
-            # locally the split size must shrink with the data.
-            "spark.sql.files.maxPartitionBytes": str(1 * 1024 * 1024),
-            "spark.sql.files.openCostInBytes": str(64 * 1024),
-        },
+        master=master or f"local[{cores}]",
+        shuffle_partitions=cores * 6,
+        extra_conf=conf,
     )
-    warm_python_workers(spark, threads)
-    pages = spark.read.parquet(pages_path)
-    n_pages = pages.count()
-    dim = fixtures.synthetic_entity_dict_df(spark, 5000, seed=42)
-    for _ in range(warm_reps):
-        # small warm-up corpus run: JIT/codegen/AQE caches, not the data
-        r = build_kg(spark, pages.limit(5000), dim, min_cooccur=3)
-        r.triples.count()
-        r.links.unpersist()
-    t0 = time.time()
-    result = build_kg(spark, pages, dim, min_cooccur=3)
-    n_triples = result.triples.count()
-    n_links = result.links.count()
-    wall = time.time() - t0
-    result.links.unpersist()
-    return {
-        "wall_s": wall,
-        "pages": n_pages,
-        "links": n_links,
-        "triples": n_triples,
-    }
+    try:
+        return measure(spark, name, path, cores)
+    finally:
+        spark.stop()
 
 
-def pinned_run(threads: int, pages_path: str, master: str | None = None) -> dict:
-    """One timed run in a subprocess pinned to cores 0..threads-1 (the
-    taskset covers the whole process tree, so local-cluster executor JVMs
-    and their Python workers inherit the same core boundary).
-
-    BKG_PIN=0 disables the taskset (subprocess still isolates the session).
-    On this sandbox the vCPUs are hypervisor-shared: pinning gives exact
-    core accounting but collides with invisible host steal on those
-    specific vCPUs; unpinned runs float around stolen cores. Both modes
-    are reported in BENCH.md when used."""
-    pin = os.environ.get("BKG_PIN", "1") != "0"
-    cmd = [
-        *(["taskset", "-c", f"0-{threads - 1}"] if pin else []),
-        sys.executable,
-        os.path.abspath(__file__),
-        "--timed-run",
-        str(threads),
-        pages_path,
-        *([master] if master else []),
-    ]
-    out = subprocess.run(
-        cmd, capture_output=True, text=True, cwd=os.getcwd(), check=True
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+def host_cpus() -> list[int]:
+    return sorted(os.sched_getaffinity(0))
 
 
-def run_interleaved(
-    threads_list: list[int],
-    pages_path: str,
-    reps: int,
-    masters: dict[int, str] | None = None,
-) -> dict:
-    """Alternate configs per rep (ABAB...) so host-load drift on this shared
-    box hits both equally; keep the MIN wall per config (noisy-neighbor
-    interference only ever inflates)."""
-    walls: dict[int, list[float]] = {t: [] for t in threads_list}
-    stats: dict[int, dict] = {}
-    for _ in range(reps):
-        for t in threads_list:
-            r = pinned_run(t, pages_path, (masters or {}).get(t))
-            walls[t].append(r["wall_s"])
-            stats[t] = r
-    out = {}
-    for t in threads_list:
-        wall = min(walls[t])
-        r = stats[t]
-        out[t] = {
-            "cpus": t,
-            "pages": r["pages"],
-            "links": r["links"],
-            "triples": r["triples"],
-            "wall_s": round(wall, 2),
-            "all_walls_s": [round(w, 2) for w in walls[t]],
-            "pages_per_sec": round(r["pages"] / wall, 1),
-            "links_per_sec": round(r["links"] / wall, 1),
-        }
-    return out
+def default_cores() -> tuple[int, int]:
+    n = len(host_cpus())
+    return max(1, n // 4), n
+
+
+def check_cores(low: int, high: int) -> None:
+    n = len(host_cpus())
+    if not 1 <= low <= high <= n:
+        raise ValueError(
+            f"need 1 <= low <= high <= {n} (the CPUs this process may use), "
+            f"got low={low} high={high}"
+        )
+
+
+def pinned_run(name: str, cores: int, path: str, master: str | None) -> dict:
+    """One ``measure`` in a subprocess pinned to the first ``cores`` CPUs
+    of the affinity set (local-cluster executors and Python workers
+    inherit the pin)."""
+    cpus = ",".join(map(str, host_cpus()[:cores]))
+    cmd = ["taskset", "-c", cpus, sys.executable, os.path.abspath(__file__)]
+    cmd += ["--run", name, str(cores), path, *([master] if master else [])]
+    r = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
+    if r.returncode:
+        sys.exit(f"{name} at {cores} cores failed:\n{r.stderr[-4000:]}")
+    return json.loads(r.stdout.strip().splitlines()[-1])
 
 
 def _burn(_):
@@ -200,126 +335,124 @@ def _burn(_):
 
 
 def cpu_ceiling(low: int, high: int) -> float:
-    """Measured pure-CPU speedup low→high procs on this box RIGHT NOW
-    (fixed total work, min-of-2) — the hardware/co-tenant ceiling any
-    CPU-bound job is graded against."""
-    import multiprocessing as mp
-
-    burn = _burn
-    res = {}
+    """Pure-CPU speedup low → high processes on this host now (fixed total
+    work, min of 2): the hardware/co-tenant ceiling a CPU-bound op is
+    graded against."""
+    check_cores(low, high)
+    best = {}
     for procs in (low, high):
-        best = 1e9
+        walls = []
         for _ in range(2):
-            t0 = time.time()
-            with mp.Pool(procs) as p:
-                p.map(burn, range(64))
-            best = min(best, time.time() - t0)
-        res[procs] = best
-    return res[low] / res[high]
+            t0 = time.perf_counter()
+            with mp.Pool(procs) as pool:
+                pool.map(_burn, range(64))
+            walls.append(time.perf_counter() - t0)
+        best[procs] = min(walls)
+    return best[low] / best[high]
 
 
-def main() -> None:
-    if len(sys.argv) > 1 and sys.argv[1] == "--timed-run":
-        master = sys.argv[4] if len(sys.argv) > 4 else None
-        print(json.dumps(timed_run(int(sys.argv[2]), sys.argv[3], master=master)))
+def _parse(argv: list[str]) -> argparse.Namespace:
+    low, high = default_cores()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--ops", default=",".join(OPS))
+    ap.add_argument("--low", type=int, default=low)
+    ap.add_argument("--high", type=int, default=high)
+    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--pages", type=int, default=20_000)
+    ap.add_argument("--docs", type=int, default=40_000)
+    ap.add_argument("--edges", type=int, default=1_000_000)
+    ap.add_argument("--inputs", default=None, help="keep/reuse inputs here")
+    ap.add_argument("--local-cluster", action="store_true")
+    args = ap.parse_args(argv)
+    args.ops = args.ops.split(",")
+    unknown = sorted(set(args.ops) - set(OPS))
+    if unknown:
+        ap.error(f"unknown ops {unknown}; choose from {list(OPS)}")
+    try:
+        check_cores(args.low, args.high)
+    except ValueError as e:
+        ap.error(str(e))
+    if args.local_cluster and args.high % args.low:
+        ap.error("--local-cluster needs high to be a multiple of low")
+    return args
+
+
+def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv[:1] == ["--run"]:
+        name, cores, path, *master = argv[1:]
+        print(json.dumps(_child(name, int(cores), path, (master or [None])[0])))
         return
-
-    n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 120_000
-    low = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    high = int(sys.argv[3]) if len(sys.argv) > 3 else 16
-    reps = int(sys.argv[4]) if len(sys.argv) > 4 else 3
-    # BKG_SCALING_MODE=local-cluster: N vs 4N SEPARATE EXECUTOR JVMs
-    # (local-cluster[w,cores,mem]) instead of one fat local[n] heap —
-    # low/high stay the TOTAL core counts, split into 4-core executors
-    # like a real fleet
-    mode = os.environ.get("BKG_SCALING_MODE", "local")
-    masters: dict[int, str] | None = None
-    if mode == "local-cluster":
-        cpw = int(os.environ.get("BKG_LC_CORES_PER_WORKER", "4"))
-        mem = int(os.environ.get("BKG_LC_WORKER_MB", "8192"))
-        assert low % cpw == 0 and high % cpw == 0, "cores must split evenly"
+    args = _parse(argv)
+    low, high = args.low, args.high
+    masters: dict[int, str] = {}
+    if args.local_cluster:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+        mem_mb = max(1024, total_mb // 2 // (high // low))
         masters = {
-            t: f"local-cluster[{t // cpw},{cpw},{mem}]" for t in (low, high)
+            c: f"local-cluster[{c // low},{low},{mem_mb}]" for c in (low, high)
         }
 
-    # BKG_SCALING_INPUTS: reuse a prior invocation's generated corpus
-    # (same n_pages — caller's responsibility) and keep it on exit, so
-    # quiet-window re-runs skip the multi-minute page generation
-    reuse = os.environ.get("BKG_SCALING_INPUTS")
-    tmp = reuse or tempfile.mkdtemp(prefix="bkg_scaling_")
-    pages_path = os.path.join(tmp, "pages")
+    root = args.inputs or tempfile.mkdtemp(prefix="bkg_scaling_")
     try:
-        if not (reuse and os.path.isdir(pages_path)):
-            spark = new_session("bkg-gen", master=f"local[{high}]")
-            aliases = [
-                a for a, _, _ in fixtures.synthetic_alias_specs(5000, seed=42)
-            ]
-            fixtures.generate_pages_distributed(
-                spark, n_pages, aliases, seed=42, partitions=high * 8
-            ).write.mode("overwrite").parquet(pages_path)
+        paths, spark = {}, None
+        for kind in dict.fromkeys(OPS[name].input for name in args.ops):
+            gen, size_arg, mult = INPUTS[kind]
+            n = getattr(args, size_arg) * mult
+            paths[kind] = os.path.join(root, f"{size_arg}_{n}")
+            if not os.path.exists(os.path.join(paths[kind], "_SUCCESS")):
+                spark = spark or new_session("bkg-gen", master=f"local[{high}]")
+                gen(spark, n, paths[kind])
+        if spark is not None:
             spark.stop()
 
         ceiling = cpu_ceiling(low, high)
-        results = run_interleaved(
-            [low, high], pages_path, reps=reps, masters=masters
-        )
-        r_low, r_high = results[low], results[high]
-
-        speedup = r_high["pages_per_sec"] / r_low["pages_per_sec"]
-        efficiency = speedup / (high / low)
-        out = {
-            "n_pages": n_pages,
-            "mode": mode,
-            "masters": masters,
-            "low": r_low,
-            "high": r_high,
-            "speedup": round(speedup, 3),
-            "scale_factor": high / low,
-            "scaling_efficiency": round(efficiency, 3),
-            "cpu_ceiling_speedup": round(ceiling, 2),
-            "efficiency_vs_ceiling": round(speedup / ceiling, 3),
+        runs: dict[str, dict[int, list[dict]]] = {
+            name: {low: [], high: []} for name in args.ops
         }
-        print(json.dumps(out))
+        for _ in range(args.reps):
+            for name in args.ops:
+                for cores in (low, high):  # interleaved ABAB
+                    r = pinned_run(
+                        name, cores, paths[OPS[name].input], masters.get(cores)
+                    )
+                    runs[name][cores].append(r)
+                    print(json.dumps({"op": name, "cores": cores, **r}),
+                          file=sys.stderr)
 
-        # BENCH.md is an authored document (results + analysis + appendices);
-        # only clobber it when explicitly asked — default emits JSON only
-        if os.environ.get("BKG_WRITE_BENCH", "0") != "1":
-            return
-        with open("BENCH.md", "w") as f:
-            f.write(
-                f"""# BENCH — scaling-efficiency evidence (north_rule)
-
-Same job, same input: end-to-end KG pipeline (extract → mention scan →
-link → canonicalize → co-occurrence triples) over {n_pages:,} generated
-pages (seed=42) written to parquet once and read by every run.
-No real cluster exists in this sandbox, so N vs 4N executors is evidenced
-as **CPU-pinned** runs: `taskset -c 0-{low - 1} local[{low}]` vs
-`taskset -c 0-{high - 1} local[{high}]`. Pinning matters: Arrow/pandas-UDF
-Python workers are separate processes outside Spark's task-thread
-accounting, so an UNPINNED local[{low}] quietly consumes ~{2 * low} cores
-and the baseline gets extra hardware; a real executor is cgroup-bounded to
-its cores, Python workers included — taskset reproduces that boundary.
-
-| config | wall (s) | pages/s | links/s | triples |
-|---|---|---|---|---|
-| {low} cpus (N) | {r_low["wall_s"]} | {r_low["pages_per_sec"]} | {r_low["links_per_sec"]} | {r_low["triples"]} |
-| {high} cpus (4N) | {r_high["wall_s"]} | {r_high["pages_per_sec"]} | {r_high["links_per_sec"]} | {r_high["triples"]} |
-
-- speedup {low}→{high} cpus: **{speedup:.2f}×** (ideal {high / low:.0f}×)
-- scaling efficiency: **{efficiency:.3f}** (target ≥ 0.8)
-- measured pure-CPU ceiling on this shared box at run time
-  ({low}→{high} procs, fixed total work): **{ceiling:.2f}×** —
-  job efficiency vs that ceiling: **{speedup / ceiling:.3f}**
-- outputs identical at all parallelism levels: {r_low["triples"] == r_high["triples"] and r_low["links"] == r_high["links"]}
-- per-rep walls (min taken; shared noisy host): N {r_low["all_walls_s"]},
-  4N {r_high["all_walls_s"]}
-
-Reproduce: `python tools/bench_scaling.py {n_pages} {low} {high} {reps}`
-"""
+        ops, broken = {}, []
+        for name, per in runs.items():
+            idents = {tuple(r["identity"]) for rs in per.values() for r in rs}
+            if len(idents) != 1:
+                broken.append(name)
+            w_low, w_high = (min(r["wall_s"] for r in per[c]) for c in (low, high))
+            speedup = w_low / w_high
+            ops[name] = {
+                "rows_in": per[low][0]["rows_in"],
+                "identity": sorted(idents),
+                "walls_low_s": [r["wall_s"] for r in per[low]],
+                "walls_high_s": [r["wall_s"] for r in per[high]],
+                "speedup": round(speedup, 3),
+                "scaling_efficiency": round(speedup / (high / low), 3),
+                "efficiency_vs_ceiling": round(speedup / ceiling, 3),
+            }
+        print(
+            json.dumps(
+                {
+                    "low": low,
+                    "high": high,
+                    "reps": args.reps,
+                    "masters": masters or None,
+                    "cpu_ceiling_speedup": round(ceiling, 3),
+                    "ops": ops,
+                }
             )
+        )
+        if broken:
+            sys.exit(f"identity differs across core counts: {broken}")
     finally:
-        if not reuse:
-            shutil.rmtree(tmp, ignore_errors=True)
+        if not args.inputs:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 if __name__ == "__main__":
