@@ -5,7 +5,10 @@ query can be timed with the noop sink, its physical plan captured, and
 its job, stage and task counts read from the status tracker under a
 per-query job group (the status store works with the UI off) — the
 evidence trail for OPTIMIZATION_r08.md and the round-8 plans (plans/r08/*.txt,
-deleted after commit 6ee73c4; read them with git show).
+deleted after commit 6ee73c4; read them with git show). The stage and
+task counts cover only stages that ran: a skipped stage (its shuffle
+output reused) counts nothing, so they can be lower than the counts in
+OPTIMIZATION_r08.md, which summed every job's tasks and stage ids.
 
 Usage:
     python bench_extra.py <query> [<query> ...] [--reps N] [--explain DIR]

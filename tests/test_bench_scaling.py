@@ -67,16 +67,21 @@ def test_identity_mismatch_exits_nonzero(tmp_path, monkeypatch, capsys):
 
 
 def test_every_op_runs_on_tiny_inputs(spark, tmp_path):
-    sizes = {"pages": 200, "docs": 200, "edges": 2000}
+    # the smallest sizes at which every op still outputs rows (minhash
+    # needs two near-duplicate docs)
+    sizes = {"pages": 40, "docs": 20, "edges": 300}
     for kind, (gen, size_arg, mult) in B.INPUTS.items():
         gen(spark, sizes[size_arg] * mult, str(tmp_path / kind))
-    for name, op in B.OPS.items():
-        df = spark.read.parquet(str(tmp_path / op.input))
-        rows, agg = B.evaluate(name, df, df.count())
-        assert rows > 0 and agg is not None, (name, rows, agg)
-    # the warm-up and timing path once, on the cheapest op
-    r = B.measure(spark, "triangles", str(tmp_path / "edges"), 2)
-    assert r["rows_in"] == 2000 and r["wall_s"] > 0
-    assert r["identity"] == B.evaluate(
-        "triangles", spark.read.parquet(str(tmp_path / "edges")), 2000
-    )
+    try:
+        got = {}
+        for name, op in B.OPS.items():
+            df = spark.read.parquet(str(tmp_path / op.input))
+            got[name] = B.evaluate(name, df, df.count())
+            rows, agg = got[name]
+            assert rows > 0 and agg is not None, (name, rows, agg)
+        # the warm-up and timing path once, on the cheapest op
+        r = B.measure(spark, "triangles", str(tmp_path / "edges"), 2)
+        assert r["rows_in"] == 300 and r["wall_s"] > 0
+        assert r["identity"] == got["triangles"]
+    finally:
+        spark.catalog.clearCache()

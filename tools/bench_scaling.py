@@ -55,6 +55,7 @@ line.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import multiprocessing as mp
 import os
@@ -99,9 +100,17 @@ WARM_ROWS = 1000
 _UNIFORM = "(pmod(xxhash64({}), 1000000) / 1000000.0)"
 
 
+@functools.lru_cache(maxsize=1)
+def _alias_dim(spark) -> DataFrame:
+    """The 5 000-entity alias dim, built once per session: the warm-up
+    pass pays its driver-side ``createDataFrame``, the timed pass reuses
+    it."""
+    return fixtures.synthetic_entity_dict_df(spark, 5000, seed=42)
+
+
 def _pipeline(pages: DataFrame, rows: int) -> DataFrame:
-    dim = fixtures.synthetic_entity_dict_df(pages.sparkSession, 5000, seed=42)
-    return build_kg(pages.sparkSession, pages, dim, min_cooccur=3).triples
+    spark = pages.sparkSession
+    return build_kg(spark, pages, _alias_dim(spark), min_cooccur=3).triples
 
 
 def _scored(docs: DataFrame) -> DataFrame:
@@ -174,10 +183,16 @@ OPS: dict[str, Op] = {
 }
 
 
+def _files(n: int) -> int:
+    """FILES parquet files an input, but at least 50 rows a file: a tiny
+    input spread over FILES files costs a scan task per file."""
+    return max(1, min(FILES, n // 50))
+
+
 def generate_pages(spark, n: int, path: str) -> None:
     aliases = [a for a, _, _ in fixtures.synthetic_alias_specs(5000, seed=42)]
     fixtures.generate_pages_distributed(
-        spark, n, aliases, seed=42, partitions=FILES
+        spark, n, aliases, seed=42, partitions=_files(n)
     ).write.mode("overwrite").parquet(path)
 
 
@@ -193,7 +208,7 @@ def generate_docs(spark, n: int, path: str) -> None:
         f"       ELSE concat('w', pmod(xxhash64(id, j, 2), {RARE_VOCAB})) END)"
     )
     text = F.array_join(F.expr(tok), " ")
-    rng = spark.range(n).repartition(FILES)
+    rng = spark.range(n).repartition(_files(n))
     base = rng.select(
         F.xxhash64(F.lit("b"), F.col("id")).alias("doc_id"), text.alias("text")
     )
@@ -213,7 +228,7 @@ def generate_edges(spark, n: int, path: str) -> None:
             f"cast(floor(pow({_UNIFORM.format(seed)}, 2) * {nodes}) as long)"
         )
 
-    spark.range(n).repartition(FILES).select(
+    spark.range(n).repartition(_files(n)).select(
         end("id * 2").alias("src"), end("id * 2 + 1").alias("dst")
     ).write.mode("overwrite").parquet(path)
 
@@ -257,7 +272,8 @@ def measure(spark, name: str, path: str, cores: int) -> dict:
     rows = df.count()
     warm = df.limit(WARM_ROWS).repartition(cores * 2).persist()
     evaluate(name, warm, warm.count())
-    warm.unpersist()
+    # drops the slice and whatever the op persisted (build_kg's links)
+    spark.catalog.clearCache()
     t0 = time.perf_counter()
     identity = evaluate(name, df, rows)
     wall = time.perf_counter() - t0
@@ -274,14 +290,15 @@ def _child(name: str, cores: int, path: str, master: str | None) -> dict:
     }
     if master is not None:
         # separate executor JVMs import the package from this checkout;
-        # the driver only coordinates
+        # the driver only coordinates, so it gets a fixed 8g heap, not
+        # local mode's half of the host
         mem_mb = master.rstrip("]").rsplit(",", 1)[-1]
         conf.update(
             {
                 "spark.executor.memory": f"{mem_mb}m",
                 "spark.executorEnv.PYTHONPATH": REPO,
                 "spark.pyspark.python": sys.executable,
-                "spark.driver.memory": "2g",
+                "spark.driver.memory": "8g",
             }
         )
     spark = new_session(
@@ -357,10 +374,10 @@ def _parse(argv: list[str]) -> argparse.Namespace:
     ap.add_argument("--ops", default=",".join(OPS))
     ap.add_argument("--low", type=int, default=low)
     ap.add_argument("--high", type=int, default=high)
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--pages", type=int, default=20_000)
-    ap.add_argument("--docs", type=int, default=40_000)
-    ap.add_argument("--edges", type=int, default=1_000_000)
+    ap.add_argument("--reps", type=int, default=2)
+    ap.add_argument("--pages", type=int, default=2000)
+    ap.add_argument("--docs", type=int, default=4000)
+    ap.add_argument("--edges", type=int, default=100_000)
     ap.add_argument("--inputs", default=None, help="keep/reuse inputs here")
     ap.add_argument("--local-cluster", action="store_true")
     args = ap.parse_args(argv)
