@@ -140,38 +140,3 @@ def connected_components(
         .agg(F.min("component").alias("component"))
     )
 
-
-def resolve_entities(
-    nodes: DataFrame,
-    linkage_keys: list[str],
-    id_col: str = "canonical_id",
-) -> DataFrame:
-    """J5 entity resolution: nodes sharing any non-null linkage-key value
-    (symbol / uniprot / entrez analogues) are merged into one entity.
-
-    Returns (id_col, resolved_id). Implementation: for each linkage key,
-    emit (id, min id sharing that key-value) edges — linking through the
-    per-key minimum keeps hub keys linear (k rows per shared value, not
-    k² pairs) — then connected components over the union."""
-    edge_parts = []
-    for k in linkage_keys:
-        vals = nodes.select(id_col, k).filter(
-            F.col(k).isNotNull() & (F.col(k).cast("string") != "")
-        )
-        anchor = vals.groupBy(k).agg(F.min(id_col).alias("dst"))
-        edge_parts.append(
-            vals.join(anchor, k).select(F.col(id_col).alias("src"), "dst")
-        )
-    edges = edge_parts[0]
-    for e in edge_parts[1:]:
-        edges = edges.unionByName(e)
-    cc = connected_components(edges)
-    return (
-        nodes.select(id_col)
-        .distinct()
-        .join(cc, F.col(id_col) == F.col("node"), "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("component"), F.col(id_col)).alias("resolved_id"),
-        )
-    )

@@ -168,7 +168,6 @@ def scan_mentions(
     aliases: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
-    word_boundary: bool = True,
 ) -> DataFrame:
     """docs(id, text, ...) → mentions(id, surface, begin, end).
 
@@ -207,8 +206,8 @@ def scan_mentions(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
         scanner = _cached_scanner(
-            (word_boundary, len(v), dict_digest),
-            lambda: RegexTrieScanner(v, word_boundary=word_boundary),
+            (len(v), dict_digest),
+            lambda: RegexTrieScanner(v),
         )
         for pdf in batches:
             ids: list = []
@@ -237,7 +236,6 @@ def scan_mentions_linked(
     link_map: dict[str, list[tuple[str, str]]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    word_boundary: bool = True,
 ) -> DataFrame:
     """FUSED scan + link + per-doc distinct (round 4): docs(id, text) →
     distinct (id, entity_id, entity_type) rows, one worker pass.
@@ -283,11 +281,8 @@ def scan_mentions_linked(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
         scanner, amap = _cached_scanner(
-            ("linked", word_boundary, len(v), dict_digest),
-            lambda: (
-                RegexTrieScanner([a for a, _ in v], word_boundary=word_boundary),
-                dict(v),
-            ),
+            ("linked", len(v), dict_digest),
+            lambda: (RegexTrieScanner([a for a, _ in v]), dict(v)),
         )
         for pdf in batches:
             ids: list = []

@@ -116,17 +116,6 @@ def image_dimensions(payload: bytes | None) -> tuple[int, int] | None:
     return None
 
 
-def fake_thumbnail_features(payload: bytes, n_buckets: int = 8) -> list[int]:
-    """Deterministic stand-in for decode→resize→featurize: a byte-value
-    histogram over ``n_buckets`` buckets. Exercises the exact batch shape a
-    real feature extractor would have (binary in, fixed-length vector out)."""
-    hist = [0] * n_buckets
-    if payload:
-        for byte in payload:
-            hist[byte * n_buckets // 256] += 1
-    return hist
-
-
 def sample_frames(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -181,9 +170,8 @@ def binary_metadata(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    with_features: bool = False,
 ) -> DataFrame:
-    """(id, n_bytes, content_hash, format, width, height[, features]) via
+    """(id, n_bytes, content_hash, format, width, height) via
     mapInPandas — the canonical binary-column feature-extraction plan:
     prune to (id, payload), Arrow batches through Python once, payload
     dropped on output. width/height come from the pure-Python
@@ -194,8 +182,6 @@ def binary_metadata(
         f"{id_col} {id_type}, n_bytes long, content_hash string, "
         "format string, width int, height int"
     )
-    if with_features:
-        schema += ", features array<int>"
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -213,10 +199,6 @@ def binary_metadata(
                 "width": [d[0] if d else None for d in dims],
                 "height": [d[1] if d else None for d in dims],
             }
-            if with_features:
-                out["features"] = [
-                    fake_thumbnail_features(p) for p in pdf[payload_col]
-                ]
             yield pd.DataFrame(out)
 
     return df.select(id_col, payload_col).mapInPandas(extract, schema=schema)

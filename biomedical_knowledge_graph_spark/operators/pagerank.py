@@ -27,13 +27,17 @@ truncate divergence doesn't arise: every operand is non-negative.
 
 Scale: each iteration is two shuffles (join ranks to edges on src, then
 re-aggregate on dst) over the edge list — the same shape as one round of
-star-contraction in components.py. Lineage is truncated with
-``localCheckpoint`` per iteration so the plan stays O(1) deep; the edge
-list is symmetrized once up front (an undirected KG edge feeds both
-endpoints), which also removes dangling nodes — every node with an edge
-has out-degree ≥ 1, so no rank mass leaks. Overflow headroom: total rank
-mass ≈ SCALE (2**40) and per-edge ``rank * w`` stays below 2**63 for
-weights up to ~2**22.
+star-contraction in components.py. The iterations chain lazily into
+one plan and the result is eager-checkpointed once (each rank frame is
+read exactly once, by the next iteration's join, so per-iteration
+checkpoints only add jobs: measured 4.5 s -> 3.7 s at sf0.1 for 5
+iterations, bit-identical by integer-sum associativity); the plan grows
+with the iteration count, which suits the small fixed counts callers
+pass. The edge list is symmetrized once up front (an undirected KG edge
+feeds both endpoints), which also removes dangling nodes — every node
+with an edge has out-degree ≥ 1, so no rank mass leaks. Overflow
+headroom: total rank mass ≈ SCALE (2**40) and per-edge ``rank * w``
+stays below 2**63 for weights up to ~2**22.
 """
 
 from __future__ import annotations
@@ -50,23 +54,11 @@ def pagerank_fixed_point(
     dst: str = "dst",
     weight: str = "weight",
     iterations: int = 5,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """edges(src, dst, weight) — undirected, one row per edge — →
     (node, rank_scaled BIGINT, rank DOUBLE). ``rank = rank_scaled /
     2**40`` is exact (numerator < 2**53, power-of-two divisor), so both
-    columns are engine-portable.
-
-    ``checkpoint_every`` (round 8): per-iteration eager checkpoints are
-    a LINEAGE lever, not a correctness one — each rank frame is read
-    exactly once (by the next iteration's join), so for small fixed
-    iteration counts the whole loop can chain LAZILY into one job
-    (``checkpoint_every=0``: the final result is eager-checkpointed
-    inside this call so the edge cache can still be released, and the
-    driver pays ~1 job instead of iterations+2; measured 4.5 s → 3.7 s
-    at sf0.1 for 5 iterations, bit-identical output by integer-sum
-    associativity). Keep the default cadence 1 for long/unknown
-    iteration counts, where an unbounded plan is the real risk."""
+    columns are engine-portable."""
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
@@ -106,7 +98,7 @@ def pagerank_fixed_point(
     # cached for the whole loop doubles edge storage for nothing.
     ew = e.join(out_w, "src").persist()
     ew.count()
-    # the init checkpoint stays EAGER in every mode: `nodes` derives
+    # the init checkpoint stays EAGER: `nodes` derives
     # from `e`, which is unpersisted next — a lazy init would silently
     # recompute the whole edge prep inside the first downstream job
     # (measured +3 s at sf0.1 when this was made conditional)
@@ -115,7 +107,7 @@ def pagerank_fixed_point(
     ).localCheckpoint(eager=True)
     # ranks is checkpointed and ew materialized — nothing reads e anymore
     e.unpersist()
-    for i in range(iterations):
+    for _ in range(iterations):
         contribs = ew.join(
             ranks, ew["src"] == ranks["node"]
         ).select(
@@ -128,19 +120,14 @@ def pagerank_fixed_point(
                 + F.expr("17 * sum(c) div 20")
             ).alias("rank_scaled")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+    # one job runs the lazy chain; eager-checkpointing the node-sized
+    # result lets ew be released before returning (a lazy result
+    # referencing an unpersisted ew would silently recompute the whole
+    # edge prep per downstream action)
     result = ranks.select(
         "node",
         "rank_scaled",
         (F.col("rank_scaled") / F.lit(float(SCALE))).alias("rank"),
-    )
-    if not checkpoint_every or iterations % checkpoint_every != 0:
-        # the tail of the loop is lazy (no cadence point landed on the
-        # last iteration): one job runs the remaining chain, and eager-
-        # checkpointing the node-sized result lets ew be released before
-        # returning (a lazy result referencing an unpersisted ew would
-        # silently recompute the whole edge prep per downstream action)
-        result = result.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     ew.unpersist()
     return result

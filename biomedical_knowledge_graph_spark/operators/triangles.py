@@ -28,7 +28,7 @@ subtree per branch (judge-measured: 12 corpus FileScans, 60 Exchanges,
 0 ReusedExchange when fed an unpersisted co-occurrence frame). Each is
 therefore lazily ``localCheckpoint``-ed: the subtree materializes once
 on first use and every consumer reads the stored edge/node-sized RDD —
-same idiom as pagerank.py's per-iteration checkpoint. Degrees come from
+same idiom as components.py's per-iteration checkpoint. Degrees come from
 one ``explode(array(a, b))`` over ``und`` rather than a self-union —
 half the scans, and a self-union of a checkpointed frame can crash
 Catalyst's Union.rewriteConstraints (see components.py).

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biomedical_knowledge_graph_spark.operators.cooccurrence import (
+    confidence_tier,
     cooccurrence_edges,
 )
 from biomedical_knowledge_graph_spark.operators.extraction import extract_pages
@@ -243,7 +244,7 @@ def build_kg_increment(
     ``{"run_id", "rows_added": 0, "replayed": True}`` and runs no Spark job.
 
     Returns the commit's lineage row. Publication:
-    ``published_triples(spark, counts_table, min_cooccur, tiers)``.
+    ``published_triples(spark, counts_table, min_cooccur)``.
     """
     if run_id in counts_table.committed_run_ids():
         return {"run_id": run_id, "rows_added": 0, "replayed": True}
@@ -265,18 +266,12 @@ def published_triples(
     spark: SparkSession,
     counts_table,
     min_cooccur: int = 3,
-    tiers=None,
 ) -> DataFrame:
     """The published KG edge view over an incrementally-built counter
     table: merge all deltas (one groupBy over one FileScan), then apply
-    the publication threshold and confidence tiers to the TOTals —
-    identical rows to a from-scratch ``build_kg`` over the union of every
-    increment's pages (pinned by test_incremental)."""
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        DEFAULT_TIERS,
-        confidence_tier,
-    )
-
+    the publication threshold and the default confidence tiers to the
+    TOTals — identical rows to a from-scratch ``build_kg`` over the union
+    of every increment's pages (pinned by test_incremental)."""
     merged = counts_table.read_merged(spark)
     if merged is None:
         raise ValueError(f"no committed increments in {counts_table.root}")
@@ -287,8 +282,6 @@ def published_triples(
             F.lit("CO_OCCURS_WITH").alias("pred"),
             "obj",
             "weight",
-            confidence_tier(
-                F.col("weight"), tiers or DEFAULT_TIERS
-            ).alias("confidence"),
+            confidence_tier(F.col("weight")).alias("confidence"),
         )
     )

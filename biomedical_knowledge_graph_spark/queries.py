@@ -218,10 +218,7 @@ def kg_golden_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_count=20,
         tiers=((300, "high"), (150, "medium"), (50, "low"), (20, "weak")),
         input_distinct=True,  # fused scan emits per-doc-distinct links
-        # bounded per-doc fan-out: pair output ~ input, so the
-        # explosive-stage repartition is pure overhead (round-8
-        # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
-        # AQE sizes this stage correctly from bytes at any scale)
+        # bounded per-doc fan-out: see cooccurrence_edges' docstring
         pair_parallelism=None,
     ).localCheckpoint(eager=True)
     nodes = links.select("entity_id").distinct()
@@ -261,10 +258,7 @@ def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ent_col="entity_id",
         min_count=20,
         tiers=((300, "high"), (150, "medium"), (50, "low"), (20, "weak")),
-        # bounded per-doc fan-out: pair output ~ input, so the
-        # explosive-stage repartition is pure overhead (round-8
-        # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
-        # AQE sizes this stage correctly from bytes at any scale)
+        # bounded per-doc fan-out: see cooccurrence_edges' docstring
         pair_parallelism=None,
     )
 
@@ -329,10 +323,7 @@ def kg_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             doc_col="l_orderkey",
             ent_col="l_partkey",
             min_count=3,
-            # bounded per-doc fan-out: pair output ~ input, so the
-            # explosive-stage repartition is pure overhead (round-8
-            # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
-            # AQE sizes this stage correctly from bytes at any scale)
+            # bounded per-doc fan-out: see cooccurrence_edges' docstring
             pair_parallelism=None,
         )
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
@@ -2537,10 +2528,7 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=20,
-        # bounded per-doc fan-out: pair output ~ input, so the
-        # explosive-stage repartition is pure overhead (round-8
-        # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
-        # AQE sizes this stage correctly from bytes at any scale)
+        # bounded per-doc fan-out: see cooccurrence_edges' docstring
         pair_parallelism=None,
     )
     return pagerank_fixed_point(
@@ -2549,10 +2537,6 @@ def kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst="obj",
         weight="shared_docs",
         iterations=5,
-        # fixed small iteration count: chain the loop lazily into one
-        # job (round 8; 4.5->3.7s, bit-identical by integer-sum
-        # associativity)
-        checkpoint_every=0,
     )
 
 
@@ -3970,10 +3954,7 @@ def kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=20,
-        # bounded per-doc fan-out: pair output ~ input, so the
-        # explosive-stage repartition is pure overhead (round-8
-        # paired A/B: kg_cc 4.55->3.14 s, kg_triples 1.85->0.89 s;
-        # AQE sizes this stage correctly from bytes at any scale)
+        # bounded per-doc fan-out: see cooccurrence_edges' docstring
         pair_parallelism=None,
     )
     return triangle_counts(edges, src="subj", dst="obj")

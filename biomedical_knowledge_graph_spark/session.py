@@ -16,8 +16,9 @@ Settings rationale (scale-first, per SURVEY.md §4):
   JVM boundary in columnar batches, never per row.
 - UTC session timezone: DuckDB-oracle parity (duckdb timestamps are
   UTC-naive).
-- shuffle partitions sized to cores for local mode; on a real cluster this
-  is left to AQE's coalescing from a higher initial value.
+- shuffle partitions: a fixed ``DEFAULT_SHUFFLE_PARTITIONS`` (32) on every
+  master unless the caller passes ``shuffle_partitions``; AQE's coalescing
+  shrinks small stages below it at run time.
 """
 
 from __future__ import annotations

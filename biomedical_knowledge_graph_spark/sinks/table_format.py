@@ -188,8 +188,8 @@ class SnapshotTable:
         ``basePath`` makes ``_snap`` (and ``_bucket``/partition cols) hive
         partition columns of a SINGLE FileScan — plan depth no longer grows
         with commit count, and ``_bucket`` filters become PartitionFilters.
-        Falls back to a per-root union chain only if the merged read is
-        impossible (conflicting data types across commits).
+        Commits that wrote one column with conflicting data types make the
+        merged read raise.
 
         ``as_of``: time travel — read the table as of snapshot number
         ``as_of`` (every commit's manifest is retained, so any historical
@@ -217,21 +217,12 @@ class SnapshotTable:
                 )
         if not files:
             return None
-        try:
-            df = (
-                spark.read.option("basePath", self._data_dir())
-                .option("mergeSchema", "true")
-                .parquet(*files)
-            )
-            return df.drop("_snap")
-        except Exception:  # pragma: no cover - type-conflict fallback
-            out = None
-            for f in files:
-                df = spark.read.parquet(f).drop("_snap")
-                out = df if out is None else out.unionByName(
-                    df, allowMissingColumns=True
-                )
-            return out
+        df = (
+            spark.read.option("basePath", self._data_dir())
+            .option("mergeSchema", "true")
+            .parquet(*files)
+        )
+        return df.drop("_snap")
 
     # -- write -------------------------------------------------------------------
     def _existing_for_merge(
@@ -555,12 +546,7 @@ class AggregatingSnapshotTable(SnapshotTable):
             for col, fn in self.agg_spec.items()
         ]
 
-    def delta_append(
-        self,
-        df: DataFrame,
-        run_id: str,
-        extra_lineage: dict | None = None,
-    ) -> dict:
+    def delta_append(self, df: DataFrame, run_id: str) -> dict:
         """Commit one increment's partial aggregates. Idempotent per
         run_id (replays are no-ops). The staged frame must carry exactly
         key_cols + agg columns."""
@@ -589,7 +575,6 @@ class AggregatingSnapshotTable(SnapshotTable):
         snap = self._head() + 1
         added, _ = self._write_snapshot(staged, snap, part_cols)
         lineage = {
-            **(extra_lineage or {}),
             "snapshot": snap,
             "run_id": run_id,
             "rows_added": added,

@@ -1,11 +1,11 @@
-"""Streaming operators over an events/pages stream.
+"""Streaming operators over an events stream.
 
-Batch transforms in this engine are stream-safe by construction (projection,
-filter, pandas UDF, broadcast join all work under readStream). This module
-packages the stateful pieces: watermarked windowed aggregation and
-incremental triple counting via foreachBatch MERGE into the snapshot sink —
-the streaming equivalent of the batch resume contract (exactly-once by key,
-not by offset).
+Sessionization — the batch lag/cumsum ``sessionize`` and the streaming-
+native ``sessionize_stream`` that the ``event_sessions`` registry query
+runs — and the two foreachBatch sinks into the snapshot tables: MERGE
+(``stream_merge_to_table``) and delta-append (``stream_delta_to_table``),
+the streaming equivalent of the batch resume contract (exactly-once by
+key or by run_id, not by offset).
 """
 
 from __future__ import annotations
@@ -14,62 +14,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from biomedical_knowledge_graph_spark.sinks.table_format import SnapshotTable
-
-
-def windowed_event_counts(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "5 minutes",
-    slide: str | None = None,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked tumbling/sliding window counts — the canonical late-data
-    aggregation. Works on both stream and batch frames (batch ignores the
-    watermark), which is how the tests pin semantics against a batch oracle.
-    """
-    win = (
-        F.window(ts_col, window, slide) if slide else F.window(ts_col, window)
-    )
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(win.alias("win"), F.col(key_col))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            key_col,
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_dedup_exact(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup — the continuous-ingest counterpart of
-    dedup.exact_duplicate_groups for a training-data firehose.
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on ``key_cols``
-    (e.g. a content hash) and EVICTS state older than the watermark, so
-    state is bounded by the dedup horizon instead of growing with the
-    stream — the only shape that survives an unbounded corpus. Duplicates
-    farther apart than the watermark are not caught here; the batch
-    MERGE sink (key-based anti-join) is the second, exact line of defense.
-    Works on batch frames too (falls back to plain dropDuplicates
-    semantics), which is how the test pins stream ≡ batch.
-    """
-    with_wm = stream.withWatermark(ts_col, watermark)
-    if stream.isStreaming:
-        return with_wm.dropDuplicatesWithinWatermark(key_cols)
-    return with_wm.dropDuplicates(key_cols)
 
 
 def sessionize(
@@ -188,9 +132,9 @@ def stream_delta_to_table(stream: DataFrame, table, checkpoint_dir: str):
     update mode re-emits each key's CUMULATIVE total every epoch, and
     ``delta_append`` would add those totals together (epoch 1: (A,3),
     epoch 2: (A,5) → merged 8, not 5), silently and monotonically
-    over-counting. For running aggregates use
-    ``stateful_running_counts`` / ``sessionize_stream`` with
-    ``stream_merge_to_table`` (upsert semantics) instead.
+    over-counting. For running aggregates use ``sessionize_stream`` (or
+    any other streaming aggregation) with ``stream_merge_to_table``
+    (upsert semantics) instead.
 
     The replay key is NAMESPACED by the checkpoint location: epoch ids
     are only unique within one query lineage, so a bare ``epoch-N`` key
@@ -213,29 +157,3 @@ def stream_delta_to_table(stream: DataFrame, table, checkpoint_dir: str):
         .start()
     )
 
-
-def stateful_running_counts(
-    stream: DataFrame, key_col: str = "event_type"
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-key
-    running totals maintained across micro-batches (the canonical shape for
-    incremental per-entity counters over a continuously-crawled corpus —
-    state lives in the state store, survives restarts via checkpoint).
-
-    Emits one (key, total) row per key per micro-batch (update mode)."""
-    import pandas as pd
-
-    def update(key, pdfs, state):
-        total = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            total += len(pdf)
-        state.update((total,))
-        yield pd.DataFrame({key_col: [key[0]], "total": [total]})
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{key_col} string, total long",
-        stateStructType="total long",
-        outputMode="update",
-        timeoutConf="NoTimeout",
-    )

@@ -7,7 +7,6 @@ import random
 
 from biomedical_knowledge_graph_spark.operators.components import (
     connected_components,
-    resolve_entities,
 )
 
 
@@ -59,24 +58,6 @@ def test_random_graphs(spark):
         ]
         edges = [(a, b) for a, b in edges if a != b]
         assert run_cc(spark, edges) == uf_components(edges), f"trial {trial}"
-
-
-def test_resolve_entities_shared_keys(spark):
-    nodes = spark.createDataFrame(
-        [
-            ("E1", "symA", "u1"),
-            ("E2", "symA", "u2"),   # shares symbol with E1
-            ("E3", "symB", "u2"),   # shares uniprot with E2 → chain E1-E2-E3
-            ("E4", "symC", None),   # isolated
-            ("E5", None, ""),       # empty keys never link
-        ],
-        "canonical_id string, symbol string, uniprot string",
-    )
-    got = {
-        r.canonical_id: r.resolved_id
-        for r in resolve_entities(nodes, ["symbol", "uniprot"]).collect()
-    }
-    assert got == {"E1": "E1", "E2": "E1", "E3": "E1", "E4": "E4", "E5": "E5"}
 
 
 # -- fixed-point PageRank (round 5) -------------------------------------------
@@ -146,33 +127,31 @@ def test_pagerank_zero_weight_edges_dropped(spark):
 
 
 def test_pagerank_lazy_chain_matches_checkpointed(spark):
-    # round-8 optimization: checkpoint_every=0 chains all iterations
-    # into one lazy plan — integer fixed-point sums are associative, so
-    # the ranks must be BIT-identical to the per-iteration-checkpoint
-    # mode
+    """The lazily chained loop (one eager checkpoint of the result) must
+    give BIT-identical ranks to a pure-Python integer fixed point of the
+    same recurrence."""
     from biomedical_knowledge_graph_spark.operators.pagerank import (
+        SCALE,
         pagerank_fixed_point,
     )
 
-    edges = spark.createDataFrame(
-        [("a", "b", 3), ("b", "c", 1), ("c", "a", 2), ("c", "d", 5)],
-        "src string, dst string, weight long",
-    )
-    ck = {
+    rows = [("a", "b", 3), ("b", "c", 1), ("c", "a", 2), ("c", "d", 5)]
+    edges = spark.createDataFrame(rows, "src string, dst string, weight long")
+    got = {
         r["node"]: r["rank_scaled"]
         for r in pagerank_fixed_point(edges, iterations=4).collect()
     }
-    lazy = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank_fixed_point(
-            edges, iterations=4, checkpoint_every=0
-        ).collect()
-    }
-    cadence = {
-        r["node"]: r["rank_scaled"]
-        for r in pagerank_fixed_point(
-            edges, iterations=4, checkpoint_every=3
-        ).collect()
-    }
-    assert lazy == ck
-    assert cadence == ck
+
+    sym = rows + [(d, s, w) for s, d, w in rows]
+    out_w: dict[str, int] = {}
+    for s, _, w in sym:
+        out_w[s] = out_w.get(s, 0) + w
+    n = len(out_w)
+    base = (3 * SCALE) // (20 * n)
+    ranks = {v: SCALE // n for v in out_w}
+    for _ in range(4):
+        contrib = {v: 0 for v in out_w}
+        for s, d, w in sym:
+            contrib[d] += ranks[s] * w // out_w[s]
+        ranks = {v: base + 17 * c // 20 for v, c in contrib.items()}
+    assert got == ranks

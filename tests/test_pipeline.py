@@ -85,23 +85,6 @@ def test_triples_invariant_under_partitioning(spark):
     assert out[0], "empty triple set makes this test vacuous"
 
 
-def test_cooccurrence_fanout_cap(spark):
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        cooccurrence_edges,
-    )
-
-    links = spark.createDataFrame(
-        [("d1", f"E{i:02d}") for i in range(10)] + [("d2", "E00"), ("d2", "E01")],
-        "doc_id string, canonical_id string",
-    )
-    full = cooccurrence_edges(links, min_count=1)
-    capped = cooccurrence_edges(links, min_count=1, max_entities_per_doc=3)
-    assert full.count() == 45 + 0  # d1 contributes C(10,2); d2's pair dupes E00-E01
-    # capped: d1 keeps E00,E01,E02 -> 3 pairs; d2 pair E00-E01 merges with d1's
-    got = {(r.subj, r.obj): r.shared_docs for r in capped.collect()}
-    assert got == {("E00", "E01"): 2, ("E00", "E02"): 1, ("E01", "E02"): 1}
-
-
 def test_fused_ac_links_equal_unfused_chain(spark):
     """build_kg's fused scan+link+canonicalize+dedup must produce EXACTLY
     the unfused chain's links and triples — including obsolete remaps,
@@ -277,17 +260,6 @@ def test_prune_rare_auto_mode(spark):
     )
     assert got_dense == want_dense and len(got_dense) == 3
     assert log2["prune_rare"] is False and log2["rare_row_frac"] == 0.0
-
-    # auto under the fan-out cap: prune ineligible, logged as such
-    log3: dict = {}
-    cooccurrence_edges(
-        dense,
-        min_count=3,
-        prune_rare="auto",
-        max_entities_per_doc=2,
-        decision_log=log3,
-    ).collect()
-    assert log3["prune_rare"] is False and log3["rare_row_frac"] is None
 
 
 def test_auto_probes_skip_unpersisted_input(spark):

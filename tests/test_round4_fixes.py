@@ -164,3 +164,13 @@ def test_minhash_lsh_registry_query_matches_oracle(spark):
     oracle_pdf = con.sql(q.oracle).df()
     assert compare("dedup_minhash_lsh", spark_pdf, oracle_pdf) == "OK"
     assert len(spark_pdf) > 0
+
+
+def test_kg_pagerank_sql_executions(spark, sql_executions):
+    """``kg_pagerank`` builds with four eager actions (the node count, the
+    edge-cache fill, the initial and the final rank checkpoints: the loop
+    between them chains lazily) and is forced by one more."""
+    out = []
+    assert sql_executions(lambda: out.append(REGISTRY["kg_pagerank"].fn(spark, SF_DIR))) == 4
+    assert sql_executions(out[0].collect) == 1
+    assert out[0].count() > 0

@@ -129,6 +129,21 @@ def test_read_is_single_relation_across_many_commits(spark, tmp_path):
     assert "InMemoryFileIndex(6 paths)" in plan
 
 
+def test_read_raises_on_type_conflict_across_commits(spark, tmp_path):
+    """Two commits that wrote one column with different types make the
+    merged read fail, rather than return a coerced union."""
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "conflict"), key_cols=["subj", "obj"])
+    t.merge_append(_df(spark, [("a", "b", 1)]), run_id="r1")
+    t.merge_append(
+        spark.createDataFrame([("c", "d", "x")], "subj string, obj string, w string"),
+        run_id="r2",
+    )
+    with pytest.raises(Exception, match="(?i)merge|incompatible"):
+        t.read(spark)
+
+
 def test_compaction_bounds_snapshot_count(spark, tmp_path):
     t = SnapshotTable(
         str(tmp_path / "cmp"),

@@ -29,28 +29,6 @@ def _events(spark, path):
     return df
 
 
-def test_windowed_counts_stream_equals_batch(spark, tmp_path):
-    path = str(tmp_path / "ev")
-    batch_df = _events(spark, path)
-    batch = streaming.windowed_event_counts(batch_df).collect()
-
-    stream = spark.readStream.schema(batch_df.schema).parquet(path)
-    agg = streaming.windowed_event_counts(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql("SELECT * FROM win_out").collect()
-    finally:
-        q.stop()
-    assert sorted(map(tuple, streamed)) == sorted(map(tuple, batch))
-    assert len(batch) > 0
-
-
 def test_sessionize(spark, tmp_path):
     df = _events(spark, str(tmp_path / "ev2"))
     sess = streaming.sessionize(df, gap_minutes=30)
@@ -188,93 +166,6 @@ def test_format_report_human_readable():
     assert "KNOWLEDGE GRAPH BUILD REPORT" in text
     assert "gene" in text and "CO_OCCURS_WITH" in text
     assert "confidence=high" in text
-
-
-def test_stateful_running_counts_across_microbatches(spark, tmp_path):
-    """State accumulates across micro-batches: totals after batch 2 include
-    batch 1's rows."""
-    import pandas as pd  # noqa: F401
-
-    path = str(tmp_path / "stream_in")
-    ckpt = str(tmp_path / "ckpt2")
-    df1 = spark.createDataFrame(
-        [(1, "click"), (2, "click"), (3, "view")],
-        "event_id long, event_type string",
-    )
-    df1.coalesce(1).write.mode("append").parquet(path)
-
-    stream = spark.readStream.schema(df1.schema).parquet(path)
-    out = streaming.stateful_running_counts(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("running_counts")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = {
-            r.event_type: r.total
-            for r in spark.sql(
-                "SELECT * FROM running_counts"
-            ).collect()
-        }
-        assert first == {"click": 2, "view": 1}
-        # second micro-batch arrives
-        spark.createDataFrame(
-            [(4, "click"), (5, "error")], "event_id long, event_type string"
-        ).coalesce(1).write.mode("append").parquet(path)
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM running_counts").collect()
-        latest: dict[str, int] = {}
-        for r in rows:  # memory sink appends updates; take the max per key
-            latest[r.event_type] = max(latest.get(r.event_type, 0), r.total)
-        assert latest == {"click": 3, "view": 1, "error": 1}
-    finally:
-        q.stop()
-
-
-def test_stream_dedup_exact(spark, tmp_path):
-    """Streaming dedup drops same-key duplicates within the watermark and
-    agrees with the batch form on the same data."""
-    import datetime as dt2
-
-    base = dt2.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        (1, base, "hash_a", 1.0),
-        (2, base + dt2.timedelta(minutes=1), "hash_a", 2.0),  # dup of a
-        (3, base + dt2.timedelta(minutes=2), "hash_b", 3.0),
-        (4, base + dt2.timedelta(minutes=3), "hash_b", 4.0),  # dup of b
-        (5, base + dt2.timedelta(minutes=4), "hash_c", 5.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, content_hash string, value double"
-    )
-    path = str(tmp_path / "dedup_ev")
-    df.write.mode("overwrite").parquet(path)
-
-    batch_keys = {
-        r.content_hash
-        for r in streaming.stream_dedup_exact(df, ["content_hash"]).collect()
-    }
-    assert batch_keys == {"hash_a", "hash_b", "hash_c"}
-
-    stream = spark.readStream.schema(df.schema).parquet(path)
-    q = (
-        streaming.stream_dedup_exact(stream, ["content_hash"])
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        streamed = spark.sql("SELECT * FROM dedup_out").collect()
-    finally:
-        q.stop()
-    assert len(streamed) == 3
-    assert {r.content_hash for r in streamed} == {"hash_a", "hash_b", "hash_c"}
 
 
 def test_sink_partition_counts_lineage(spark, tmp_path):

@@ -138,16 +138,6 @@ def test_binary_metadata_plumbing(spark):
     assert rows[5].content_hash == hashlib.md5(b"plain bytes").hexdigest()
 
 
-def test_binary_features_shape(spark):
-    df = spark.createDataFrame(
-        [(1, bytes(range(256)))], "doc_id long, payload binary"
-    )
-    row = multimodal.binary_metadata(df, with_features=True).collect()[0]
-    assert len(row.features) == 8
-    assert sum(row.features) == 256
-    assert row.features == [32] * 8
-
-
 def test_decode_image_is_stubbed():
     import pytest
 
