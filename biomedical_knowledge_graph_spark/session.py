@@ -19,11 +19,25 @@ Settings rationale (scale-first, per SURVEY.md §4):
 - shuffle partitions: a fixed ``DEFAULT_SHUFFLE_PARTITIONS`` (32) on every
   master unless the caller passes ``shuffle_partitions``; AQE's coalescing
   shrinks small stages below it at run time.
+- JIT pool: one cold ``full_build_job`` pass at local[4] (JVM start
+  included) spent ~35 of ~62 CPU-s in HotSpot's compiler threads (C1 5.8 s,
+  C2 20.0 s, and 9.4 s in compiler threads HotSpot started and retired),
+  against 7.5 s in executor task threads; almost all of its ~6 500
+  compiles are Spark, Scala and JDK internals. On a local master with at
+  most 4 task threads the driver JVM gets ``-XX:CICompilerCount=2``
+  (HotSpot's own choice is 3 at 4-7 cores and 2 below 4), through
+  ``spark.driver.defaultJavaOptions`` so that a caller's
+  ``extraJavaOptions`` does not replace it: ~28 CPU-s of compiles, and a
+  pass's CPU drops ~19 % with the same plans.
+- Python workers: the same pass spent ~3 CPU-s in them. They stay forked
+  from the stock ``pyspark.daemon``: a daemon that imported pandas, pyarrow
+  and the UDF modules before forking did not lower the pass's CPU.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +61,15 @@ def _default_driver_memory() -> str:
     except (OSError, ValueError):
         pass
     return "4g"
+
+
+def _local_threads(master: str) -> int | None:
+    """Task threads of a ``local[N]`` or ``local[*]`` master (``*`` is the
+    affinity set), ``None`` for any other master."""
+    m = re.fullmatch(r"local\[(\*|\d+)\]", master)
+    if m is None:
+        return None
+    return len(os.sched_getaffinity(0)) if m.group(1) == "*" else int(m.group(1))
 
 
 def _builder(
@@ -93,6 +116,10 @@ def _builder(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    # the JIT pool (see the module docstring)
+    threads = _local_threads(master)
+    if threads is not None and threads <= 4:
+        b = b.config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b
@@ -117,7 +144,12 @@ def new_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Stop any active session and build a fresh one (for scaling benches
-    that need a different ``master``)."""
+    that need a different ``master``).
+
+    JVM options are fixed when the gateway JVM first launches: the new
+    session runs in the same JVM, so it keeps that JVM's heap and JIT
+    compiler pool whatever its ``master``. ``tools/bench_scaling.py`` is
+    unaffected: it starts one subprocess, and so one JVM, per core count."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
