@@ -16,7 +16,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "biomedical_knowledge_graph_spark"
 
-KNOBS = {"SPARK_GRAFT_CPUS", "BKG_DRIVER_MEM"}
+KNOBS = {"SPARK_GRAFT_CPUS", "BKG_DRIVER_MEM", "SPARK_CONF_DIR", "JAVA_HOME"}
 
 
 def _is_environ(node: ast.AST) -> bool:

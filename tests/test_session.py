@@ -1,11 +1,23 @@
-"""The session's runtime sizing: the driver JVM's JIT compiler pool
-(``session._builder``)."""
+"""The session's runtime sizing: the driver JVM's JIT compiler pool and
+its class-data-sharing archive (``session._builder``, ``session._cds``)."""
 
 from __future__ import annotations
 
 import os
+from types import SimpleNamespace
 
-from biomedical_knowledge_graph_spark.session import _builder, _local_threads
+import pytest
+from pyspark.errors import PySparkRuntimeError
+from pyspark.sql import SparkSession
+
+from biomedical_knowledge_graph_spark.session import (
+    _builder,
+    _cds,
+    _local_threads,
+    get_spark,
+)
+
+JAVA_OPTIONS = "spark.driver.defaultJavaOptions"
 
 
 def _jvm_flag(spark, name: str) -> str:
@@ -14,6 +26,33 @@ def _jvm_flag(spark, name: str) -> str:
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     return bean.getVMOption(name).getValue()
+
+
+@pytest.fixture
+def fake_spark(tmp_path, monkeypatch):
+    """A Spark home (two jars, a template-only conf dir), a ``java`` binary
+    and a home dir under ``tmp_path``; returns the home dir."""
+    spark_home = tmp_path / "spark"
+    (spark_home / "jars").mkdir(parents=True)
+    (spark_home / "conf").mkdir()
+    (spark_home / "conf" / "spark-defaults.conf.template").write_text("")
+    for jar in ("a.jar", "b.jar"):
+        (spark_home / "jars" / jar).write_bytes(b"jar")
+    java_home = tmp_path / "jdk"
+    (java_home / "bin").mkdir(parents=True)
+    (java_home / "bin" / "java").write_bytes(b"java")
+    (java_home / "bin" / "java").chmod(0o755)
+    home = tmp_path / "home"
+    home.mkdir()
+    monkeypatch.setenv("SPARK_HOME", str(spark_home))
+    monkeypatch.setenv("JAVA_HOME", str(java_home))
+    monkeypatch.setenv("HOME", str(home))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    return home
+
+
+def _options(master: str = "local[4]", extra_conf=None) -> dict[str, str]:
+    return _builder("t", master, None, extra_conf)[0]._options
 
 
 def test_local_threads():
@@ -34,12 +73,107 @@ def test_jit_pool_fits_the_fixture_master(spark):
         assert count >= (3 if jvm_cpus >= 4 else 2)
 
 
-def test_caller_java_options_keep_the_jit_option():
-    conf = _builder(
-        "t", "local[4]", None, {"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/x"}
-    )._options
-    assert conf["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=2"
+def test_cds_archive_fits_the_fixture_master(spark):
+    """The fixture JVM maps the archive or dumps it at exit, whichever
+    ``_cds`` would choose for its master now."""
+    if _cds(spark.sparkContext.master) is None:
+        pytest.skip("no class-data-sharing archive for this master or host")
+    used = _jvm_flag(spark, "SharedArchiveFile")
+    dumped = _jvm_flag(spark, "ArchiveClassesAtExit")
+    cache = os.path.expanduser("~/.cache/biomedical_knowledge_graph_spark")
+    assert bool(used) != bool(dumped)
+    assert os.path.dirname(used or dumped) == cache
+
+
+def test_caller_java_options_keep_the_jit_option(fake_spark):
+    (fake_spark.parent / "spark" / "conf" / "spark-defaults.conf").write_text("")
+    conf = _options(extra_conf={"spark.driver.extraJavaOptions": "-Djava.io.tmpdir=/x"})
+    assert conf[JAVA_OPTIONS] == "-XX:CICompilerCount=2"
     assert conf["spark.driver.extraJavaOptions"] == "-Djava.io.tmpdir=/x"
-    assert "spark.driver.defaultJavaOptions" not in _builder("t", "local[5]", None, None)._options
-    cluster = _builder("t", "local-cluster[1,2,2048]", None, None)._options
-    assert "spark.driver.defaultJavaOptions" not in cluster
+    assert JAVA_OPTIONS not in _options("local[5]")
+    assert JAVA_OPTIONS not in _options("local-cluster[1,2,2048]")
+
+
+def test_cds_dumps_then_maps_the_archive(fake_spark):
+    cache = fake_spark / ".cache" / "biomedical_knowledge_graph_spark"
+    jit, dump = _options()[JAVA_OPTIONS].split(" ", 1)
+    assert jit == "-XX:CICompilerCount=2"
+    assert dump.startswith(f"-XX:ArchiveClassesAtExit={cache}/spark-")
+    assert os.listdir(cache / "conf") == []
+    archive = dump.split(" ")[0].partition("=")[2]
+    open(archive, "wb").close()
+    assert _options()[JAVA_OPTIONS] == f"-XX:CICompilerCount=2 -XX:SharedArchiveFile={archive}"
+    assert _options("local[8]")[JAVA_OPTIONS] == f"-XX:SharedArchiveFile={archive}"
+
+
+def test_cds_archive_name_follows_the_jars(fake_spark):
+    jar = fake_spark.parent / "spark" / "jars" / "b.jar"
+    names = [_cds("local[4]")[0]]
+    jar.write_bytes(b"jar2")
+    names.append(_cds("local[4]")[0])
+    st = jar.stat()
+    os.utime(jar, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    names.append(_cds("local[4]")[0])
+    assert len(set(names)) == 3
+
+
+def test_cds_off(fake_spark, monkeypatch):
+    assert _cds("local-cluster[1,2,2048]") is None
+    assert _cds("spark://host:7077") is None
+    # an unwritable cache
+    (fake_spark / ".cache").write_text("")
+    assert _cds("local[4]") is None
+    assert JAVA_OPTIONS not in _options("local[8]")
+    # a conf dir holding more than templates, Spark's or the caller's
+    (fake_spark / ".cache").unlink()
+    assert _cds("local[4]") is not None
+    conf = fake_spark / "conf"
+    conf.mkdir()
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    assert _cds("local[4]") is not None
+    (conf / "log4j2.properties").write_text("")
+    assert _cds("local[4]") is None
+
+
+def _fake_launch(monkeypatch, fail: int = 0) -> list:
+    """Replace the JVM launch: each call records its ``SPARK_CONF_DIR`` and
+    JVM options, and the first ``fail`` calls raise as a JVM that died."""
+    calls = []
+
+    def get_or_create(builder):
+        calls.append((os.environ.get("SPARK_CONF_DIR"), builder._options.get(JAVA_OPTIONS)))
+        if len(calls) <= fail:
+            raise PySparkRuntimeError(errorClass="JAVA_GATEWAY_EXITED", messageParameters={})
+        return SimpleNamespace(sparkContext=SimpleNamespace(setLogLevel=lambda level: None))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", get_or_create)
+    return calls
+
+
+def test_get_spark_sets_the_conf_dir_only_around_the_launch(fake_spark, monkeypatch):
+    calls = _fake_launch(monkeypatch)
+    get_spark(master="local[4]")
+    assert calls[-1][0] == str(fake_spark / ".cache" / "biomedical_knowledge_graph_spark" / "conf")
+    assert "SPARK_CONF_DIR" not in os.environ
+    conf = fake_spark / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("")
+    monkeypatch.setenv("SPARK_CONF_DIR", str(conf))
+    get_spark(master="local[4]")
+    assert calls[-1] == (str(conf), "-XX:CICompilerCount=2")
+    assert os.environ["SPARK_CONF_DIR"] == str(conf)
+
+
+def test_get_spark_drops_an_archive_the_jvm_died_on(fake_spark, monkeypatch):
+    archive = _cds("local[4]")[0].split(" ")[0].partition("=")[2]
+    open(archive, "wb").close()
+    calls = _fake_launch(monkeypatch, fail=1)
+    get_spark(master="local[4]")
+    assert calls[0][1].endswith(f"-XX:SharedArchiveFile={archive}")
+    assert f"-XX:ArchiveClassesAtExit={archive}" in calls[1][1]
+    assert not os.path.exists(archive)
+    # a JVM that dies without an archive to blame fails the start
+    calls = _fake_launch(monkeypatch, fail=1)
+    with pytest.raises(PySparkRuntimeError):
+        get_spark(master="local[4]")
+    assert len(calls) == 1
