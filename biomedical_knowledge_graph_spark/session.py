@@ -29,20 +29,22 @@ Settings rationale (scale-first, per SURVEY.md §4):
   ``spark.driver.defaultJavaOptions`` so that a caller's
   ``extraJavaOptions`` does not replace it: ~28 CPU-s of compiles, and a
   pass's CPU drops ~19 % with the same plans.
-- Class-data sharing: the same cold pass loaded 9 350 classes in ~4 s of
-  class-loading time during session start and ~14 000 more in ~4.9 s
+- Class-data sharing: the same cold pass loaded 9 350 classes in 3.9-4.7 s
+  of class-loading time during session start and ~14 070 more in 4.8-7.0 s
   during the pass. A local master's driver JVM maps a dynamic CDS archive
-  of the classes an earlier run of the same JDK and Spark jars loaded
-  (``_cds``; ``~/.cache/biomedical_knowledge_graph_spark/``), which
-  halves session start (perfbench ``ontology_build`` ``setup_s`` 5.8 ->
-  2.9 s) and trims the cold pass (``wall_s`` -15 %, ``cpu_s`` -12 %).
-  HotSpot archives no classpath holding a non-empty directory, and
-  Spark's conf dir comes first on it, so the archive is used only when
-  that dir holds nothing but ``*.template`` files; the JVM then launches
-  with an empty ``SPARK_CONF_DIR``. The first JVM without an archive
-  writes it at exit: its start is ~3 s slower, its exit takes 9-13 s,
-  and the archive is ~140-180 MB. Delete the cache dir to force a fresh
-  dump.
+  of the classes a representative build loaded (``_cds``): perfbench
+  ``ontology_build`` ``setup_s`` 5.25 -> 2.60 s, ``wall_s`` -15 %,
+  ``cpu_s`` -13 % (medians of 10 pairs). The archive is built once per
+  user, JDK and Spark install by ``build_cds_archive``
+  (``tools/build_cds_archive.py``) into
+  ``~/.cache/biomedical_knowledge_graph_spark/``; without it the JVM
+  starts exactly as Spark would. A JVM that dumps the archive at exit
+  starts ~3 s slower, runs a cold pass ~30 % slower and takes 9-13 s to
+  exit, so no session ever dumps one as a side effect. HotSpot archives
+  no classpath holding a non-empty directory, and Spark's conf dir comes
+  first on it, so the archive is used only when that dir holds nothing
+  but ``*.template`` files; the JVM then launches with an empty
+  ``SPARK_CONF_DIR``.
 - Python workers: the same pass spent ~3 CPU-s in them. They stay forked
   from the stock ``pyspark.daemon``: a daemon that imported pandas, pyarrow
   and the UDF modules before forking did not lower the pass's CPU.
@@ -51,11 +53,14 @@ Settings rationale (scale-first, per SURVEY.md §4):
 from __future__ import annotations
 
 import contextlib
+import glob
 import hashlib
 import os
 import re
 import shutil
+from collections.abc import Callable
 
+from pyspark import SparkContext
 from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -64,6 +69,8 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 
 # the driver JVM's class-data-sharing archives (see the module docstring)
 CDS_CACHE = "~/.cache/biomedical_knowledge_graph_spark"
+# the first four bytes of a HotSpot dynamic archive (CDS_DYNAMIC_ARCHIVE_MAGIC)
+CDS_MAGIC = (0xF00BABA8).to_bytes(4, "little")
 
 
 def _default_driver_memory() -> str:
@@ -94,19 +101,14 @@ def _local_threads(master: str) -> int | None:
     return len(os.sched_getaffinity(0)) if m.group(1) == "*" else int(m.group(1))
 
 
-def _cds(master: str) -> tuple[str, str] | None:
-    """The driver JVM's class-data-sharing option and the empty conf dir to
-    launch it with, or ``None`` to launch it as Spark would: not a local
-    master, a Spark conf dir holding more than ``*.template`` files, or an
-    ``OSError`` on the way (an unwritable cache, say).
+def _cds_paths() -> tuple[str, str] | None:
+    """The class-data-sharing archive's path and the empty conf dir to
+    launch its JVM with, or ``None`` where no archive can be used: a Spark
+    conf dir holding more than ``*.template`` files, no ``java`` binary, or
+    an ``OSError`` on the way.
 
     The archive is named by the ``java`` binary and Spark's ``jars/``
-    listing, so a JDK or Spark upgrade dumps a fresh one. Present, the JVM
-    maps it (``SharedArchiveFile``; HotSpot skips one whose header does not
-    validate, and ``get_spark`` drops one the JVM died mapping); absent, the
-    JVM writes it when it exits (``ArchiveClassesAtExit``)."""
-    if _local_threads(master) is None:
-        return None
+    listing, so a JDK or Spark upgrade needs a fresh one."""
     try:
         home = _find_spark_home()
         conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
@@ -124,32 +126,57 @@ def _cds(master: str) -> tuple[str, str] | None:
         for e in sorted(os.scandir(os.path.join(home, "jars")), key=lambda e: e.name):
             st = e.stat()
             h.update(f"{e.name} {st.st_size} {st.st_mtime_ns}\n".encode())
-        cache = os.path.expanduser(CDS_CACHE)
-        empty = os.path.join(cache, "conf")
-        os.makedirs(empty, exist_ok=True)
-        if os.listdir(empty) or not os.access(cache, os.W_OK):
-            return None
     except OSError:
         return None
+    cache = os.path.expanduser(CDS_CACHE)
     archive = os.path.join(cache, f"spark-{h.hexdigest()[:16]}.jsa")
     if re.search(r"[\s\"'\\]", archive):
         return None  # Spark's launcher would split or unquote the option
-    if os.path.isfile(archive):
-        return f"-XX:SharedArchiveFile={archive}", empty
-    # the dump warns once per class it cannot archive (~600 lines)
-    return f"-XX:ArchiveClassesAtExit={archive} -Xlog:cds=error", empty
+    return archive, os.path.join(cache, "conf")
+
+
+def _cds(master: str) -> tuple[str, str] | None:
+    """The driver JVM's ``-XX:SharedArchiveFile`` option and the empty conf
+    dir to launch it with, or ``None`` to launch it as Spark would: not a
+    local master, no usable archive (``_cds_paths``), none built yet, or a
+    conf dir that is not empty.
+
+    A file whose header is not a dynamic archive's (an interrupted copy;
+    HotSpot would skip it without a word) is deleted."""
+    if _local_threads(master) is None:
+        return None
+    paths = _cds_paths()
+    if paths is None:
+        return None
+    archive, empty = paths
+    try:
+        with open(archive, "rb") as f:
+            magic = f.read(4)
+        if magic != CDS_MAGIC:
+            os.remove(archive)
+            return None
+        os.makedirs(empty, exist_ok=True)
+        if os.listdir(empty):
+            return None
+    except OSError:
+        return None
+    return f"-XX:SharedArchiveFile={archive}", empty
+
+
+def _master(master: str | None) -> str:
+    """``master``, or ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` when unset)."""
+    return master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
 
 
 def _builder(
     app_name: str,
-    master: str | None,
+    master: str,
     shuffle_partitions: int | None,
     extra_conf: dict[str, str] | None,
-) -> tuple[SparkSession.Builder, tuple[str, str] | None]:
-    """The session's builder, and its JVM's ``_cds`` option and conf dir."""
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
+    cds_option: str | None = None,
+) -> SparkSession.Builder:
+    """The session's builder; ``cds_option`` is the driver JVM's
+    class-data-sharing option, if any (see ``_cds``)."""
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -191,23 +218,26 @@ def _builder(
     threads = _local_threads(master)
     if threads is not None and threads <= 4:
         java_options.append("-XX:CICompilerCount=2")
-    cds = _cds(master)
-    if cds is not None:
-        java_options.append(cds[0])
+    if cds_option is not None:
+        java_options.append(cds_option)
     if java_options:
         b = b.config("spark.driver.defaultJavaOptions", " ".join(java_options))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b, cds
+    return b
 
 
-def _launch(b: SparkSession.Builder, cds: tuple[str, str] | None) -> SparkSession:
-    if cds is None:
+def _launch(b: SparkSession.Builder, conf_dir: str | None) -> SparkSession:
+    """``b.getOrCreate()``, launching a new JVM with ``SPARK_CONF_DIR`` at
+    ``conf_dir``. HotSpot archives no classpath holding a non-empty
+    directory, and Spark puts its conf dir first on the driver's classpath.
+    The variable is swapped in the process's environment around the launch,
+    so a thread that starts a subprocess meanwhile inherits it: not
+    thread-safe (pyspark's launcher takes no environment of its own)."""
+    if conf_dir is None or SparkContext._gateway is not None:
         return b.getOrCreate()
-    # HotSpot archives no classpath holding a non-empty directory, and Spark
-    # puts its conf dir first on the driver's classpath
     saved = os.environ.get("SPARK_CONF_DIR")
-    os.environ["SPARK_CONF_DIR"] = cds[1]
+    os.environ["SPARK_CONF_DIR"] = conf_dir
     try:
         return b.getOrCreate()
     finally:
@@ -224,17 +254,23 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Get-or-create a session (reuses an existing one if compatible)."""
-    b, cds = _builder(app_name, master, shuffle_partitions, extra_conf)
+    master = _master(master)
+    cds = _cds(master)
     try:
-        spark = _launch(b, cds)
+        spark = _launch(
+            _builder(app_name, master, shuffle_partitions, extra_conf, cds and cds[0]),
+            cds and cds[1],
+        )
     except PySparkRuntimeError:
-        if cds is None or not cds[0].startswith("-XX:SharedArchiveFile="):
+        if cds is None:
             raise
         # HotSpot validates an archive's header but dies of SIGBUS mapping
-        # one cut short after it was written: drop it and dump a fresh one
+        # one cut short after it was written. Launch as Spark would: if
+        # that JVM starts, the archive was at fault and goes; if it dies
+        # too, the cause lies elsewhere and the archive stays.
+        spark = _launch(_builder(app_name, master, shuffle_partitions, extra_conf), None)
         with contextlib.suppress(OSError):
             os.remove(cds[0].partition("=")[2])
-        spark = _launch(*_builder(app_name, master, shuffle_partitions, extra_conf))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -250,10 +286,56 @@ def new_session(
 
     JVM options are fixed when the gateway JVM first launches: the new
     session runs in the same JVM, so it keeps that JVM's heap, JIT
-    compiler pool and class-data-sharing archive (mapped, dumped at exit
-    or none) whatever its ``master``. ``tools/bench_scaling.py`` is
-    unaffected: it starts one subprocess, and so one JVM, per core count."""
+    compiler pool and class-data-sharing archive (mapped or none) whatever
+    its ``master``. ``tools/bench_scaling.py`` is unaffected: it starts
+    one subprocess, and so one JVM, per core count."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
     return get_spark(app_name, master, shuffle_partitions, extra_conf)
+
+
+def build_cds_archive(
+    workload: Callable[[SparkSession], object], master: str = "local[2]"
+) -> str:
+    """Build the class-data-sharing archive that local-master driver JVMs
+    map from then on (``_cds``) and return its path: launch a JVM that
+    archives every class it loaded when it exits (``ArchiveClassesAtExit``),
+    run ``workload`` in it, stop it and wait for it to exit. The archive is
+    written under a temporary name and renamed once its header checks, so
+    no session maps a part-written one; the cache's other archives (of
+    another JDK or Spark install) are deleted. It must run in a process
+    with no JVM yet; ``RuntimeError`` where no archive can be used, and
+    ``OSError`` where the cache cannot be written."""
+    paths = _cds_paths() if _local_threads(master) is not None else None
+    if paths is None or SparkContext._gateway is not None:
+        raise RuntimeError("no class-data-sharing archive for this process or host")
+    archive, empty = paths
+    os.makedirs(empty, exist_ok=True)
+    if os.listdir(empty):
+        raise RuntimeError(f"{empty} must be empty")
+    tmp = f"{archive}.{os.getpid()}.tmp"
+    # the dump warns once per class it cannot archive (~600 lines)
+    option = f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=error"
+    spark = _launch(_builder("bkg-cds-archive", master, None, None, option), empty)
+    try:
+        try:
+            workload(spark)
+        finally:
+            proc = SparkContext._gateway.proc
+            spark.stop()
+            SparkContext._gateway.shutdown()
+            proc.stdin.close()  # the JVM exits on EOF, writing the archive
+            proc.wait(timeout=300)
+        with open(tmp, "rb") as f:
+            if f.read(4) != CDS_MAGIC:
+                raise RuntimeError(f"the JVM wrote no archive to {tmp}")
+        # other installs' archives and the leftovers of killed builds
+        for old in glob.glob(os.path.join(os.path.dirname(archive), "spark-*")):
+            if old not in (archive, tmp):
+                os.remove(old)
+        os.replace(tmp, archive)
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(tmp)
+    return archive
