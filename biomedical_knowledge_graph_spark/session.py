@@ -163,11 +163,6 @@ def _cds(master: str) -> tuple[str, str] | None:
     return f"-XX:SharedArchiveFile={archive}", empty
 
 
-def _master(master: str | None) -> str:
-    """``master``, or ``local[$SPARK_GRAFT_CPUS]`` (``local[*]`` when unset)."""
-    return master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-
-
 def _builder(
     app_name: str,
     master: str,
@@ -254,7 +249,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Get-or-create a session (reuses an existing one if compatible)."""
-    master = _master(master)
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     cds = _cds(master)
     try:
         spark = _launch(
@@ -295,9 +290,7 @@ def new_session(
     return get_spark(app_name, master, shuffle_partitions, extra_conf)
 
 
-def build_cds_archive(
-    workload: Callable[[SparkSession], object], master: str = "local[2]"
-) -> str:
+def build_cds_archive(workload: Callable[[SparkSession], object]) -> str:
     """Build the class-data-sharing archive that local-master driver JVMs
     map from then on (``_cds``) and return its path: launch a JVM that
     archives every class it loaded when it exits (``ArchiveClassesAtExit``),
@@ -307,7 +300,7 @@ def build_cds_archive(
     another JDK or Spark install) are deleted. It must run in a process
     with no JVM yet; ``RuntimeError`` where no archive can be used, and
     ``OSError`` where the cache cannot be written."""
-    paths = _cds_paths() if _local_threads(master) is not None else None
+    paths = _cds_paths()
     if paths is None or SparkContext._gateway is not None:
         raise RuntimeError("no class-data-sharing archive for this process or host")
     archive, empty = paths
@@ -317,7 +310,7 @@ def build_cds_archive(
     tmp = f"{archive}.{os.getpid()}.tmp"
     # the dump warns once per class it cannot archive (~600 lines)
     option = f"-XX:ArchiveClassesAtExit={tmp} -Xlog:cds=error"
-    spark = _launch(_builder("bkg-cds-archive", master, None, None, option), empty)
+    spark = _launch(_builder("bkg-cds-archive", "local[2]", None, None, option), empty)
     try:
         try:
             workload(spark)
