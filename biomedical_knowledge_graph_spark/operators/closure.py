@@ -17,8 +17,10 @@ log2(diameter) shuffle rounds instead of diameter rounds — for an
 ontology ~15 levels deep that is 4 joins, not 15. Each round's frame is
 lazily localCheckpoint-ed (same idiom as components.py / pagerank.py)
 so the next round joins a stored edge-list-sized RDD, never re-executes
-the growing lineage, and the convergence probe (row count unchanged) is
-the round's only action.
+the growing lineage. Without a depth bound each round runs one action,
+the convergence probe (row count unchanged); with ``max_depth`` (what
+``kg_ancestor_closure`` runs) the round count is fixed and each round
+but the last is an eager checkpoint, with no probe.
 
 Scale contract: output size is Σ|ancestors(v)| = rows × depth for
 DAG-shaped hierarchies (bounded depth — the ontology case). For general

@@ -146,11 +146,10 @@ def minhash_signatures_jvm(
     num_hashes: int = 125,
     seed: int = 7,
     shingles: DataFrame | None = None,
-    with_size: bool = False,
 ) -> DataFrame:
-    """(id, signature array<long>) computed entirely JVM-side: shingle →
-    xxhash64 masked to 31 bits → ``num_hashes`` universal-hash minima as
-    plain MIN aggregates.
+    """(id, signature array<long>, sz) computed entirely JVM-side:
+    shingle → xxhash64 masked to 31 bits → ``num_hashes`` universal-hash
+    minima as plain MIN aggregates. ``sz`` is the doc's shingle-set size.
 
     Scale shape: no ``collect_list`` — the shuffle carries ONE partial
     row of ``num_hashes`` longs per (doc, map-partition) thanks to
@@ -170,22 +169,17 @@ def minhash_signatures_jvm(
         F.min((F.col("h") * int(a[i]) + int(b[i])) % _M31).alias(f"_m{i}")
         for i in range(num_hashes)
     ]
-    if with_size:
-        # shingle rows are already distinct per doc, so count(*) IS the
-        # shingle-set size — the 126th aggregate of the SAME hash
-        # aggregate, free vs the separate sh.groupBy(id).count() pass
-        # the verifier used to run (twice: once per join side)
-        aggs.append(F.count("*").alias("sz"))
-    grouped = sh.groupBy(id_col).agg(*aggs)
-    out_cols = [
+    # shingle rows are already distinct per doc, so count(*) IS the
+    # shingle-set size — one more aggregate of the SAME hash aggregate,
+    # free vs a separate sh.groupBy(id).count() pass per verify join side
+    aggs.append(F.count("*").alias("sz"))
+    return sh.groupBy(id_col).agg(*aggs).select(
         F.col(id_col),
         F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias(
             "signature"
         ),
-    ]
-    if with_size:
-        out_cols.append(F.col("sz"))
-    return grouped.select(*out_cols)
+        F.col("sz"),
+    )
 
 
 def banded_memberships(
@@ -242,10 +236,12 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     bands: int = 25,
     rows_per_band: int = 5,
-    size_ratio_at_least: float | None = None,
+    *,
+    size_ratio_at_least: float,
 ) -> DataFrame:
-    """Banded LSH: (id_a, id_b) candidate pairs, id_a < id_b. One shuffle on
-    (band, band-slice hash); pairs emerge only inside buckets.
+    """Banded LSH: (id_a, id_b, sz_a, sz_b) candidate pairs, id_a < id_b.
+    One shuffle on (band, band-slice hash); pairs emerge only inside
+    buckets.
 
     Buckets hash the band slice DIRECTLY (``xxhash64`` over the sliced
     array): buckets are only ever compared for equality, so any
@@ -266,38 +262,13 @@ def minhash_lsh_candidates(
     join, and a degenerate exact-dup mega-cell should be collapsed by
     exact dedup upstream under either shape.
 
-    ``size_ratio_at_least`` (round 8): when the signature frame carries
-    a per-doc ``sz`` column (``with_size=True`` in the signature pass —
-    a free extra aggregate), the sizes ride the cell arrays and the
-    size-ratio prefilter (J >= t ⇒ min(sz)/max(sz) >= t, exact) runs
-    INSIDE the pair generator, BEFORE the candidate-dedup exchange —
-    the same filter-before-distinct move simhash_near_pairs uses for
-    hamming. The verifier then reads sz_a/sz_b off the candidate rows
-    instead of re-aggregating the postings once per join side (two full
-    postings passes removed). Output columns become
-    (id_a, id_b, sz_a, sz_b); None keeps the classic (id_a, id_b)."""
-    if size_ratio_at_least is None:
-        sliced = banded_memberships(signatures, id_col, bands, rows_per_band)
-        cells = (
-            sliced.groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
-            .filter(F.size("_ids") >= 2)
-        )
-        return (
-            cells.select("_ids", F.posexplode("_ids").alias("_i", "_x"))
-            .select(
-                F.col("_x").alias("id_a"),
-                F.explode(
-                    F.expr("slice(_ids, _i + 2, size(_ids))")
-                ).alias("id_b"),
-            )
-            # a duplicated input id landing twice in one cell would emit
-            # an (x, x) self-pair under positional slicing (the old
-            # self-join's strict id_a < id_b excluded it); keep the old
-            # semantics
-            .filter(F.col("id_a") != F.col("id_b"))
-            .distinct()
-        )
+    ``size_ratio_at_least``: the per-doc ``sz`` column of the signature
+    frame rides the cell arrays and the size-ratio prefilter
+    (J >= t ⇒ min(sz)/max(sz) >= t, exact) runs INSIDE the pair
+    generator, BEFORE the candidate-dedup exchange — the same
+    filter-before-distinct move simhash_near_pairs uses for hamming. The
+    verifier then reads sz_a/sz_b off the candidate rows instead of
+    re-aggregating the postings once per join side."""
     sliced = banded_memberships(
         signatures, id_col, bands, rows_per_band, carry=("sz",)
     )
@@ -323,6 +294,8 @@ def minhash_lsh_candidates(
             F.col("_y.i").alias("id_b"),
             F.col("_y.sz").alias("sz_b"),
         )
+        # a duplicated input id landing twice in one cell would emit an
+        # (x, x) self-pair under positional slicing; drop it
         .filter(F.col("id_a") != F.col("id_b"))
         # exact-preserving prefilter BEFORE the dedup exchange: far-sized
         # pairs never reach the shuffle
@@ -366,8 +339,7 @@ def minhash_dedup_pairs(
         # postings for sizes
         cands = minhash_lsh_candidates(
             minhash_signatures_jvm(
-                df, id_col, text_col, n, num_hashes, seed, shingles=sh,
-                with_size=True,
+                df, id_col, text_col, n, num_hashes, seed, shingles=sh
             ),
             id_col,
             bands,
@@ -391,23 +363,18 @@ def verify_pairs(
     threshold: float = 0.8,
     sizes: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact-Jaccard verification of (id_a, id_b) candidate pairs against
-    a shingle-postings frame ``sh`` (id, shingle): size-ratio prefilter,
-    then the postings-restricted intersection count. Returns
-    (id_a, id_b, jaccard ≥ threshold). Shared by the batch and
-    incremental MinHash paths; pass precomputed ``sizes`` (id, sz) when
-    they are already stored (the incremental index) so the prefilter
-    does not re-aggregate the postings. Candidates that already carry
-    ``sz_a``/``sz_b`` columns (round 8 — the inline size-threaded path
-    of ``minhash_lsh_candidates``) skip both sizes joins AND the ratio
-    prefilter, which was applied inside the pair generator."""
-    if "sz_a" in cands.columns and "sz_b" in cands.columns:
-        survivors = cands
-    else:
+    """Exact-Jaccard verification of candidate pairs against a
+    shingle-postings frame ``sh`` (id, shingle): the postings-restricted
+    intersection count. Returns (id_a, id_b, jaccard ≥ threshold).
+    Shared by the batch and incremental MinHash paths. Candidates either
+    carry ``sz_a``/``sz_b`` (``minhash_lsh_candidates``, which already
+    applied the size-ratio prefilter) or are bare (id_a, id_b) pairs
+    verified with the stored ``sizes`` (id, sz) of the incremental
+    index."""
+    survivors = cands
+    if sizes is not None:
         # size-ratio prefilter first (tiny sizes table; J ≥ t forces
         # min(sz)/max(sz) ≥ t) before any per-shingle work
-        if sizes is None:
-            sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
         survivors = (
             cands.join(
                 sizes.select(
@@ -521,8 +488,7 @@ def minhash_index(
     Release the cache with ``index.unpersist()``."""
     sh = shingle_sets(df, id_col, text_col, n).persist()
     sigs = minhash_signatures_jvm(
-        df, id_col, text_col, n, num_hashes, seed, shingles=sh,
-        with_size=True,
+        df, id_col, text_col, n, num_hashes, seed, shingles=sh
     ).localCheckpoint(eager=True)
     return MinHashIndex(
         bands=banded_memberships(sigs, id_col, bands, rows_per_band),
@@ -570,8 +536,7 @@ def minhash_dedup_pairs_incremental(
         # the whole batch k-MIN signature aggregate, and the verifier's
         # sizes union re-aggregated the batch postings a third time
         sigs_new = minhash_signatures_jvm(
-            new_df, id_col, text_col, n, num_hashes, seed, shingles=sh_new,
-            with_size=True,
+            new_df, id_col, text_col, n, num_hashes, seed, shingles=sh_new
         ).localCheckpoint(eager=True)
         banded_new = banded_memberships(sigs_new, id_col, bands, rows_per_band)
         # new-vs-corpus: probe the stored band table. The index side joins

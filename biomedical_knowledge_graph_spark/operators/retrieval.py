@@ -40,12 +40,13 @@ here), which is what lets the top-k be value-hash oracled. ``score`` is
 also exposed as a double via one IEEE division of the exact integer
 (correctly rounded, engine-independent).
 
-Scale: one full scan computes the two corpus scalars (count + token
-total — in production these come from corpus metadata); the scoring path
-prunes docs with a codegen'd ``array_contains`` OR-chain BEFORE the
-explode, so only candidate docs enter the generate stage, and only query
--term tokens survive into the one (doc, term) shuffle. df/idf is a ≤|Q|
--row broadcast. Final top-k is ``ORDER BY … LIMIT k`` →
+Scale: one aggregate action computes the two corpus scalars (doc count
++ token total) before scoring, so each query reads the corpus twice:
+once for the stats, once for the candidates. The scoring path prunes
+docs with a codegen'd ``array_contains`` OR-chain BEFORE the explode, so
+only candidate docs enter the generate stage, and only query-term tokens
+survive into the one (doc, term) shuffle. df/idf is a ≤|Q|-row
+broadcast. Final top-k is ``ORDER BY … LIMIT k`` →
 TakeOrderedAndProject (per-partition heaps + single driver merge of
 k·partitions rows), never a global sort.
 """
@@ -65,23 +66,13 @@ def bm25_topk(
     k: int = 15,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_stats: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Top-``k`` docs by fixed-point BM25 over whitespace tokens.
 
     Returns (id_col, matched_terms, score_scaled, score) ordered by
     score descending, ties broken by ascending id. ``score_scaled`` is
     the exact BIGINT score (scale 2**20); ``score`` = score_scaled / S.
-
-    ``corpus_stats``: optional ``(n_docs, total_tokens)``. When given,
-    the two corpus scalars come from the caller (table metadata /
-    catalog statistics a production corpus maintains anyway) and the
-    operator runs with ZERO driver actions — the 100 TB path (VERDICT
-    r5 item 3). When omitted, they are computed with one bounded
-    aggregate action over the corpus, which is fine interactively but
-    re-scans the corpus once per query. Parity between the two paths is
-    pinned in tests/test_textstats_similarity.py.
-    """
+    The corpus stats cost one aggregate action over ``docs``."""
     if not terms:
         raise ValueError("bm25_topk needs at least one query term")
     S = SCALE
@@ -90,28 +81,25 @@ def bm25_topk(
         F.split(F.col(text_col), " ").alias("toks"),
     ).select(id_col, "toks", F.size("toks").alias("dl"))
 
-    if corpus_stats is not None:
-        n_docs, total_tokens = int(corpus_stats[0]), int(corpus_stats[1])
-    else:
-        # Two corpus scalars; floor-rounded avgdl is part of the spec so
-        # the oracle can reproduce it exactly. Single bounded driver
-        # action. Round 8: the stats pass counts tokens WITHOUT
-        # materializing the split array — size(split(s, " ")) is always
-        # spaces(s) + 1 (split keeps empty tokens, incl. trailing), so
-        # length-minus-length(translate)+1 is provably identical
-        # (property-pinned) at a fraction of the allocation cost.
-        stats = docs.agg(
-            F.count("*").alias("n"),
-            F.sum(
-                # NULL text propagates to NULL — identical to
-                # size(split(NULL, ' ')) under Spark 4 semantics
-                F.length(text_col)
-                - F.length(F.translate(F.col(text_col), " ", ""))
-                + 1
-            ).alias("tot"),
-        ).first()
-        n_docs = int(stats["n"])
-        total_tokens = int(stats["tot"]) if stats["tot"] is not None else 0
+    # Two corpus scalars; floor-rounded avgdl is part of the spec so the
+    # oracle can reproduce it exactly. Single bounded driver action. The
+    # stats pass counts tokens WITHOUT materializing the split array —
+    # size(split(s, " ")) is always spaces(s) + 1 (split keeps empty
+    # tokens, incl. trailing), so length-minus-length(translate)+1 is
+    # provably identical (property-pinned) at a fraction of the
+    # allocation cost.
+    stats = docs.agg(
+        F.count("*").alias("n"),
+        F.sum(
+            # NULL text propagates to NULL — identical to
+            # size(split(NULL, ' ')) under Spark 4 semantics
+            F.length(text_col)
+            - F.length(F.translate(F.col(text_col), " ", ""))
+            + 1
+        ).alias("tot"),
+    ).first()
+    n_docs = int(stats["n"])
+    total_tokens = int(stats["tot"]) if stats["tot"] is not None else 0
     if n_docs <= 0 or total_tokens <= 0:
         raise ValueError("bm25_topk over an empty/untokenizable corpus")
     avgdl_i = max(1, total_tokens // n_docs)

@@ -50,6 +50,11 @@ _TOO_LARGE = (
 )
 
 
+def _hash_ids(col):
+    """The long key co-occurrence pairs are counted over."""
+    return F.xxhash64(col)
+
+
 @dataclass
 class KGResult:
     docs: DataFrame
@@ -99,9 +104,9 @@ def build_kg(
 
     ``links`` (doc_id, entity_id, entity_type) is distinct per (doc,
     entity) and always persisted. Co-occurrence runs uncapped over
-    hash-encoded ids with ``prune_rare="auto"``: it probes ``links`` and
-    prunes only a measured long-tailed dim (see cooccurrence_edges; the
-    decision rides in the sink's lineage row).
+    xxhash64-encoded ids whenever the hash is injective on the dim's
+    canonical ids (checked on the collected dim, no extra action), and
+    over the id strings otherwise; the triples are identical either way.
 
     The alias dim is collected to the driver and every Python worker
     builds its scanner from it, so a dim over ``_AC_MAX_ALIASES`` rows or
@@ -110,11 +115,12 @@ def build_kg(
     docs = extract_pages(pages).filter(F.length("text") > 0)
 
     # ②–⑤ one row-bounded collect feeds both size guards, the union-find
-    # components and the composed alias → (resolved id, type) map. It
-    # stops one row past the bound, so an oversized dim never reaches the
-    # driver whole. dim rows ≥ distinct aliases, so the row guard is at
-    # least as strict as a distinct-alias guard; the exact char guard runs
-    # on the collected aliases before anything big is built.
+    # components, the composed alias → (resolved id, type) map and ⑥'s
+    # id-hash check. It stops one row past the bound, so an oversized dim
+    # never reaches the driver whole. dim rows ≥ distinct aliases, so the
+    # row guard is at least as strict as a distinct-alias guard; the exact
+    # char guard runs on the collected aliases before anything big is
+    # built.
     dim_rows = (
         resolve_obsolete(entity_dim)
         .select(
@@ -125,6 +131,7 @@ def build_kg(
             "alias",
             "canonical_id",
             "entity_type",
+            _hash_ids(F.col("canonical_id")).alias("id_hash"),
         )
         .limit(_AC_MAX_ALIASES + 1)
         .collect()
@@ -171,23 +178,40 @@ def build_kg(
         F.countDistinct("doc_id").alias("doc_count"),
     )
 
-    # ⑥ co-occurrence triples — hash-encoded pair keys and the auto
-    # df-prune probe are safe to opt into here because `links` is
-    # persisted above, so each probe action costs one cached scan, not a
-    # pipeline re-run.
-    co_decision: dict = {}
+    # ⑥ co-occurrence triples. Pair explosion and count run over long
+    # keys when the hash is injective on the collected canonical ids.
+    # Every id ``links`` can carry is a union-find root, so one of those
+    # ids: the check is exact and costs no action. On a collision the
+    # same plan runs over the id strings.
+    id_hashes = {r["canonical_id"]: r["id_hash"] for r in dim_rows}
+    encode = len(set(id_hashes.values())) == len(id_hashes)
+    ent = F.col("entity_id")
     co = cooccurrence_edges(
-        links,
+        links.select("doc_id", (_hash_ids(ent) if encode else ent).alias("entity_id")),
         doc_col="doc_id",
         ent_col="entity_id",
         min_count=min_cooccur,
-        encode_ids=True,
-        prune_rare="auto",
-        decision_log=co_decision,
-        # links is distinct per (doc, entity) (per-doc dedup in the
-        # scan), so the a-priori df prune is a plain count
-        input_distinct=True,
     )
+    if encode:
+        # decode AFTER the min_count filter (smallest join input) through
+        # broadcasts of the link vocabulary, which the dim's row guard
+        # bounds; restore subj < obj in STRING order, which hash order
+        # does not follow
+        ids = links.select("entity_id").distinct()
+
+        def decode(key, name):
+            return F.broadcast(ids.select(_hash_ids(ent).alias(key), ent.alias(name)))
+
+        co = (
+            co.join(decode("subj", "_s"), "subj")
+            .join(decode("obj", "_o"), "obj")
+            .select(
+                F.least("_s", "_o").alias("subj"),
+                F.greatest("_s", "_o").alias("obj"),
+                "shared_docs",
+                "confidence",
+            )
+        )
     triples = co.select(
         F.col("subj"),
         F.lit("CO_OCCURS_WITH").alias("pred"),
@@ -196,12 +220,9 @@ def build_kg(
         F.col("confidence"),
     )
 
-    # ⑦ idempotent materialization — the co-occurrence plan decision
-    # rides along in the commit's lineage row (VERDICT r4 item 7)
+    # ⑦ idempotent materialization
     if triples_sink is not None:
-        triples_sink.merge_append(
-            triples, run_id=run_id, extra_lineage={"cooccurrence": co_decision}
-        )
+        triples_sink.merge_append(triples, run_id=run_id)
 
     return KGResult(docs=docs, links=links, nodes=nodes, triples=triples)
 
@@ -226,10 +247,9 @@ def build_kg_increment(
     document sets, so per-increment partial counts ADD exactly. Two
     consequences shape the implementation:
 
-    - the increment's pair counts run at ``min_count=1``, where the df
-      prune is ineligible (nothing is below support 1) and its probe
-      never runs: a pair below today's publication threshold may be
-      promoted by a future increment, so the counter table must keep the
+    - the increment's pair counts run at ``min_count=1``: a pair below
+      today's publication threshold may be promoted by a future
+      increment, so the counter table must keep the
       sub-threshold tail (the same tail any exact incremental counter
       keeps; thresholds/tiers are applied at READ time by
       ``published_triples``);

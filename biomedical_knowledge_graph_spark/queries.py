@@ -198,15 +198,9 @@ def kg_golden_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     links = _doc_links(spark, sf_dir).persist()
-    # round-8 action-count collapse (same output, test/oracle-pinned):
-    # the round-4 summary is TWO passes (one tagged union reading
-    # `nodes` ONCE + one tier groupBy reading `triples` twice), so the
-    # old nodes.persist() cached a frame with a single consumer, the
-    # encode_ids probe paid a driver action to hash a 13-entity
-    # vocabulary, and the rare-prune pass rescanned links to prune a
-    # dictionary where every entity is frequent (the same reasoning
-    # kg_triples documents; the prune and encoding paths stay benched in
-    # the build_kg pipeline's auto modes). `triples` is eager-
+    # the summary is TWO passes (one tagged union reading `nodes` ONCE +
+    # one tier groupBy reading `triples` twice), so `nodes` is not
+    # persisted: it has a single consumer. `triples` is eager-
     # checkpointed (it is edge-tier-sized, 78 rows at sf0.1) instead of
     # lazily persisted: the summary references it twice IN ONE JOB, and
     # a racing lazy cache fill computes the whole cooccurrence DAG once
@@ -217,7 +211,6 @@ def kg_golden_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ent_col="entity_id",
         min_count=20,
         tiers=((300, "high"), (150, "medium"), (50, "low"), (20, "weak")),
-        input_distinct=True,  # fused scan emits per-doc-distinct links
         # bounded per-doc fan-out: see cooccurrence_edges' docstring
         pair_parallelism=None,
     ).localCheckpoint(eager=True)
@@ -2309,7 +2302,6 @@ def kg_triples_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc_col="doc_id",
                 ent_col="entity_id",
                 min_count=1,  # keep the sub-threshold tail: exactness
-                input_distinct=True,
             ).select("subj", "obj", F.col("shared_docs").alias("weight"))
             table.delta_append(partial, run_id=f"crawl-{i}")
         # replay of increment 0 must be an exact no-op (exactly-once)
@@ -2413,7 +2405,6 @@ def kg_triples_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 doc_col="doc_id",
                 ent_col="entity_id",
                 min_count=1,
-                input_distinct=True,
             ).select("subj", "obj", F.col("shared_docs").alias("weight"))
             table.delta_append(partial, run_id=f"crawl-{i}")
         asof = table.read_merged(spark, as_of=1).select(
@@ -3252,10 +3243,10 @@ def doc_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(collapse_go_helper.py; go_kg_builder.py IS_A edges): every "
     "(descendant, ancestor) pair, computed by ITERATIVE DOUBLING — "
     "log2(depth) shuffle-hash self-join rounds over a localCheckpointed "
-    "path set, 4 rounds for a 15-deep ontology instead of 15 — with a "
-    "row-count fixed-point probe. Demonstrated on a synthetic binary "
-    "tree over the part table (parent = (k-1) div 2); oracle is the "
-    "same closure as a recursive CTE",
+    "path set, 4 rounds for a 15-deep ontology instead of 15 — run as "
+    "fixed rounds from the tree's depth bound. Demonstrated on a "
+    "synthetic binary tree over the part table (parent = (k-1) div 2); "
+    "oracle is the same closure as a recursive CTE",
 )
 def kg_ancestor_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math

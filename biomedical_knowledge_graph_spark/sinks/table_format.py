@@ -255,20 +255,13 @@ class SnapshotTable:
             existing = existing.filter(pred)
         return existing
 
-    def merge_append(
-        self,
-        df: DataFrame,
-        run_id: str | None = None,
-        extra_lineage: dict | None = None,
-    ) -> dict:
+    def merge_append(self, df: DataFrame, run_id: str | None = None) -> dict:
         """Append rows whose key is not yet committed (Iceberg
         ``MERGE INTO ... WHEN NOT MATCHED INSERT`` / J2 duplicate-edge
         anti-join, go_kg_builder.py:1317-1343). Returns the lineage row.
 
         Idempotent: re-running the same staged batch after a crash commits
-        zero new rows. ``extra_lineage``: caller-supplied JSON-serializable
-        fields merged into the lineage row (plan decisions, upstream
-        counters) — reserved keys win over collisions."""
+        zero new rows."""
         spark = df.sparkSession
         t0 = time.time()
         reserved = {"_snap", "_bucket"} & set(df.columns)
@@ -325,7 +318,6 @@ class SnapshotTable:
             partition_counts = [{"partitions": "10000+", "rows": added}]
 
         lineage = {
-            **(extra_lineage or {}),
             "snapshot": snap,
             "run_id": run_id or uuid.uuid4().hex,
             "rows_added": added,

@@ -178,13 +178,13 @@ def test_minhash_inline_size_path_matches_classic(spark):
     # round-8 optimization: sizes computed inside the signature aggregate
     # and threaded through the banded cells (ratio prefilter before the
     # candidate distinct, no sizes joins in verify) must yield the exact
-    # same verified pairs as the classic candidates + sizes-join path
+    # pairs of the brute-force Jaccard join (no LSH miss on these docs)
     docs = spark.createDataFrame(
         [(i, t) for i, (_, t) in enumerate(DOCS)], "doc_id long, text string"
     )
     sh = dedup.shingle_sets(docs, "doc_id", "text").persist()
     try:
-        sigs = dedup.minhash_signatures_jvm(docs, shingles=sh, with_size=True)
+        sigs = dedup.minhash_signatures_jvm(docs, shingles=sh)
         # sz column equals the per-doc distinct shingle count
         got_sz = {r.doc_id: r.sz for r in sigs.collect()}
         want_sz = {
@@ -194,17 +194,14 @@ def test_minhash_inline_size_path_matches_classic(spark):
         assert got_sz == want_sz
         inline = dedup.minhash_lsh_candidates(sigs, size_ratio_at_least=0.5)
         assert set(inline.columns) == {"id_a", "id_b", "sz_a", "sz_b"}
-        classic = dedup.minhash_lsh_candidates(
-            dedup.minhash_signatures_jvm(docs, shingles=sh)
-        )
         v_inline = {
             (r.id_a, r.id_b, r.jaccard)
             for r in dedup.verify_pairs(inline, sh, threshold=0.5).collect()
         }
-        v_classic = {
+        exact = {
             (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.verify_pairs(classic, sh, threshold=0.5).collect()
+            for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
         }
-        assert v_inline == v_classic
+        assert v_inline == exact and exact
     finally:
         sh.unpersist()

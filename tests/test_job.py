@@ -125,10 +125,10 @@ def test_full_build_job_phases_and_resume(
     ontology-derived dictionary, metrics/validation/report artifacts land,
     and a replay with the same run-id commits zero new rows.
 
-    A first run is 10 SQL executions: phase 1's two commits and its
-    terms count; build_kg's dictionary collect and co-occurrence probe;
-    two commits per table (bucket probe + write) in phase 2; phase 3's
-    one metrics pass. An added probe or re-count fails here."""
+    A first run is 9 SQL executions: phase 1's two commits and its
+    terms count; build_kg's dictionary collect; two commits per table
+    (bucket probe + write) in phase 2; phase 3's one metrics pass. An
+    added probe or re-count fails here."""
     from biomedical_knowledge_graph_spark.jobs import full_build_job as J
 
     obo = tmp_path / "go.obo"
@@ -190,7 +190,7 @@ def test_full_build_job_phases_and_resume(
             J.run(spark, str(obo), pages_path, out, run_id="r1", min_cooccur=2)
         )
     )
-    assert n_sql == 10
+    assert n_sql == 9
     report = reports[0]
     assert len(parse_calls) == 1
     assert report["phase1"]["terms"] == 4

@@ -166,115 +166,9 @@ def test_alias_dictionary_size_guards(spark, monkeypatch):
         build_kg(spark, pages, dim)
 
 
-def test_apriori_prune_is_exact(spark):
-    """Round 4: the a-priori df prune (entities in < min_count docs cannot
-    form a surviving pair) must not change the output. ``"auto"`` prunes
-    these persisted long-tailed links; compare against the unpruned
-    default under both the plain and input_distinct df paths."""
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        cooccurrence_edges,
-    )
-
-    rows = []
-    # frequent entities A,B co-occur in 5 docs; C occurs in 2 docs (rare
-    # at min_count=3); D once; duplicates included to exercise the
-    # non-distinct df path
-    for d in range(5):
-        rows += [(f"d{d}", "A"), (f"d{d}", "B"), (f"d{d}", "A")]
-    rows += [("d0", "C"), ("d1", "C"), ("d2", "D")]
-    links = spark.createDataFrame(rows, "doc_id string, canonical_id string").persist()
-    distinct = links.distinct().persist()
-    want = sorted(map(tuple, cooccurrence_edges(links, min_count=3).collect()))
-    assert len(want) == 1  # only (A, B) survives
-    for frame, input_distinct in ((links, False), (distinct, True)):
-        log: dict = {}
-        got = cooccurrence_edges(
-            frame,
-            min_count=3,
-            prune_rare="auto",
-            decision_log=log,
-            input_distinct=input_distinct,
-        )
-        assert sorted(map(tuple, got.collect())) == want, input_distinct
-        assert log["prune_rare"] is True, input_distinct
-    distinct.unpersist()
-    links.unpersist()
-
-
-def test_prune_rare_auto_mode(spark):
-    """Round 5 (VERDICT r4 items 2/7): prune_rare='auto' probes the exact
-    df distribution and decides per-input; output is identical to the
-    unpruned default either way, and the decision (plus the measured
-    rare-row fraction) lands in the caller's decision_log."""
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        cooccurrence_edges,
-    )
-
-    # long-tailed input: 3 of 15 link rows (= 20% > 10% threshold) carry
-    # sub-min_count entities -> auto prunes
-    rows = []
-    for d in range(5):
-        rows += [(f"d{d}", "A"), (f"d{d}", "B")]
-    rows += [("d0", "C"), ("d1", "C"), ("d2", "D"), ("d0", "E"), ("d3", "F")]
-    # persisted: auto mode only probes persisted inputs (r6 contract)
-    tailed = spark.createDataFrame(
-        rows, "doc_id string, canonical_id string"
-    ).persist()
-    want = sorted(
-        map(
-            tuple,
-            cooccurrence_edges(tailed, min_count=3, prune_rare=False).collect(),
-        )
-    )
-    log: dict = {}
-    got = sorted(
-        map(
-            tuple,
-            cooccurrence_edges(
-                tailed, min_count=3, prune_rare="auto", decision_log=log
-            ).collect(),
-        )
-    )
-    assert got == want
-    assert log["prune_rare"] is True and log["prune_rare_mode"] == "auto"
-    assert abs(log["rare_row_frac"] - 5 / 15) < 1e-6  # logged at 6 dp
-
-    # dense input: every entity is frequent -> auto skips the prune
-    dense_rows = [
-        (f"d{d}", e) for d in range(4) for e in ("A", "B", "C")
-    ]
-    dense = spark.createDataFrame(
-        dense_rows, "doc_id string, canonical_id string"
-    ).persist()
-    want_dense = sorted(
-        map(tuple, cooccurrence_edges(dense, min_count=3).collect())
-    )
-    log2: dict = {}
-    got_dense = sorted(
-        map(
-            tuple,
-            cooccurrence_edges(
-                dense, min_count=3, prune_rare="auto", decision_log=log2
-            ).collect(),
-        )
-    )
-    assert got_dense == want_dense and len(got_dense) == 3
-    assert log2["prune_rare"] is False and log2["rare_row_frac"] == 0.0
-
-
 def test_auto_probes_skip_unpersisted_input(spark):
-    """VERDICT r5 item 5: the auto-mode probes are driver ACTIONS over
-    ``links``; on an unpersisted frame they silently re-run everything
-    upstream. The contract is code, not docstring: an unpersisted input
-    skips BOTH probes (prune off, encoding off, decision_log notes) —
-    proven here with a poisoned frame whose evaluation raises, so ANY
-    probe action at call time would blow up the construction itself."""
-    import pytest
-    from pyspark.sql import functions as F
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        cooccurrence_edges,
-    )
-
+    """Building ``cooccurrence_edges`` over a poisoned frame, whose
+    evaluation raises, runs no Spark action."""
     base = spark.createDataFrame(
         [("d0", "A"), ("d0", "B"), ("d1", "A")],
         "doc_id string, canonical_id string",
@@ -285,93 +179,10 @@ def test_auto_probes_skip_unpersisted_input(spark):
             "canonical_id"
         ),
     )
-    log: dict = {}
-    # plan construction must NOT run any action on the poisoned frame
-    out = cooccurrence_edges(
-        poisoned,
-        min_count=3,
-        prune_rare="auto",
-        encode_ids=True,
-        decision_log=log,
-    )
-    assert log["prune_rare_mode"] == "auto-skipped-unpersisted"
-    assert log["encode_ids_skipped_unpersisted"] is True
+    out = cooccurrence_edges(poisoned, min_count=3)
     # the frame itself is genuinely poisoned — forcing it raises
     with pytest.raises(Exception, match="upstream scan ran"):
         out.collect()
-    # output parity: unpersisted auto (probes skipped) == the default
-    want = sorted(map(tuple, cooccurrence_edges(base, min_count=1).collect()))
-    got = sorted(
-        map(tuple, cooccurrence_edges(base, min_count=1, prune_rare="auto").collect())
-    )
-    assert got == want
-    # persisting the frame restores the probes: the probe runs and logs
-    base.persist()
-    log2: dict = {}
-    cooccurrence_edges(
-        base, min_count=3, prune_rare="auto", decision_log=log2
-    ).collect()
-    assert log2["prune_rare_mode"] == "auto"
-    base.unpersist()
-
-
-def test_encode_probe_rides_prune_probe(spark, sql_executions):
-    """With ``prune_rare="auto"`` and ``encode_ids`` both on, the
-    injectivity probe is folded into the prune probe's aggregate: one
-    action at plan time instead of two, the same ``decision_log`` as
-    without encoding, and the string path's output, whether the prune
-    fires (long-tailed input) or not (dense input)."""
-    from biomedical_knowledge_graph_spark.operators.cooccurrence import (
-        cooccurrence_edges,
-    )
-
-    tailed = [(f"d{d}", e) for d in range(5) for e in ("A", "B")]
-    tailed += [("d0", "C"), ("d1", "C"), ("d2", "D"), ("d0", "E"), ("d3", "F")]
-    dense = [(f"d{d}", e) for d in range(4) for e in ("A", "B", "C")]
-    for rows, pruned in ((tailed, True), (dense, False)):
-        links = spark.createDataFrame(
-            rows, "doc_id string, canonical_id string"
-        ).persist()
-        try:
-            logs, outs = [], []
-            for encode in (False, True):
-                log: dict = {}
-                n = sql_executions(
-                    lambda: outs.append(
-                        cooccurrence_edges(
-                            links,
-                            min_count=3,
-                            prune_rare="auto",
-                            encode_ids=encode,
-                            decision_log=log,
-                        )
-                    )
-                )
-                assert n == 1
-                logs.append(log)
-            assert logs[0] == logs[1] and logs[0]["prune_rare"] is pruned
-            want, got = (sorted(map(tuple, o.collect())) for o in outs)
-            assert got == want and len(got) == (1 if pruned else 3)
-        finally:
-            links.unpersist()
-
-
-def test_pipeline_lineage_records_prune_decision(spark, tmp_path):
-    """build_kg(prune_rare='auto') surfaces the co-occurrence plan
-    decision in the snapshot sink's lineage row (VERDICT r4 item 7)."""
-    pages = spark.createDataFrame(
-        fixtures.pages_pdf(n_pages=60, seed=7), schema=fixtures.PAGES_SCHEMA
-    )
-    dim = fixtures.entity_dict_df(spark)
-    sink = SnapshotTable(
-        str(tmp_path / "triples"), key_cols=["subj", "pred", "obj"]
-    )
-    build_kg(spark, pages, dim, triples_sink=sink, run_id="r5auto")
-    row = sink.lineage()[-1]
-    assert row["run_id"] == "r5auto"
-    co = row["cooccurrence"]
-    assert co["prune_rare_mode"] == "auto"
-    assert isinstance(co["prune_rare"], bool)
 
 
 def test_pair_parallelism_reaches_pair_stage(spark):
@@ -397,24 +208,21 @@ def test_pair_parallelism_reaches_pair_stage(spark):
         if present:
             assert f"RoundRobinPartitioning({n}), REPARTITION_BY_NUM" in plan, plan
         edges.count()  # and executes
-    # the deleted values (an int count, a forced prune) fail loudly
-    for kwargs in ({"pair_parallelism": 13}, {"prune_rare": True}):
-        with pytest.raises(ValueError, match="takes"):
-            cooccurrence_edges(links, min_count=1, **kwargs)
+    # the deleted value (an int count) fails loudly
+    with pytest.raises(ValueError, match="takes"):
+        cooccurrence_edges(links, min_count=1, pair_parallelism=13)
 
 
 def test_build_kg_plan_time_actions(spark, sql_executions):
-    """Building the plans runs two Spark actions before anything is forced
-    or committed: the alias-dim collect and one co-occurrence probe (the
-    df-prune probe with the injectivity check folded in; at
-    build_kg_increment's min_count=1 the prune is ineligible and the
-    injectivity probe runs alone)."""
+    """Building the plans runs one Spark action before anything is forced
+    or committed: the alias-dim collect, which also carries the id-hash
+    injectivity check."""
     pages = spark.createDataFrame(
         fixtures.pages_pdf(n_pages=60, seed=7), schema=fixtures.PAGES_SCHEMA
     )
     dim = fixtures.entity_dict_df(spark)
     results = []
-    assert sql_executions(lambda: results.append(build_kg(spark, pages, dim))) == 2
+    assert sql_executions(lambda: results.append(build_kg(spark, pages, dim))) == 1
     results[0].links.unpersist()
 
     class Recorder:
@@ -428,5 +236,26 @@ def test_build_kg_plan_time_actions(spark, sql_executions):
             return {"run_id": run_id}
 
     table = Recorder()
-    assert sql_executions(lambda: build_kg_increment(spark, pages, dim, table, "r0")) == 2
+    assert sql_executions(lambda: build_kg_increment(spark, pages, dim, table, "r0")) == 1
     assert table.delta.columns == ["subj", "obj", "weight"]
+
+
+def test_id_hash_collision_counts_over_strings(spark, monkeypatch):
+    """build_kg counts pairs over xxhash64 keys when the hash is injective
+    on the dim's canonical ids, and over the id strings when it collides
+    (forced here through the ``_hash_ids`` seam); the triples are
+    identical either way."""
+    pages = spark.createDataFrame(
+        fixtures.pages_pdf(n_pages=150, seed=7), schema=fixtures.PAGES_SCHEMA
+    )
+    dim = fixtures.entity_dict_df(spark)
+    out = []
+    for hash_ids in (pipeline._hash_ids, lambda c: F.lit(0).cast("long")):
+        monkeypatch.setattr(pipeline, "_hash_ids", hash_ids)
+        result = build_kg(spark, pages, dim, min_cooccur=2)
+        plan = result.triples._jdf.queryExecution().executedPlan().toString()
+        out.append((sorted(tuple(r) for r in result.triples.collect()), plan))
+        result.links.unpersist()
+    (encoded, encoded_plan), (strings, strings_plan) = out
+    assert "xxhash64" in encoded_plan and "xxhash64" not in strings_plan
+    assert strings == encoded and encoded

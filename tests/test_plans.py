@@ -148,7 +148,10 @@ def test_minhash_lsh_bucket_hash_has_no_json(spark):
         [(1, "abcdefghij"), (2, "abcdefghij")], "doc_id long, text string"
     )
     cands = minhash_lsh_candidates(
-        minhash_signatures_jvm(docs, num_hashes=8), bands=2, rows_per_band=4
+        minhash_signatures_jvm(docs, num_hashes=8),
+        bands=2,
+        rows_per_band=4,
+        size_ratio_at_least=0.8,
     )
     plan = plan_of(cands)
     assert "to_json" not in plan
